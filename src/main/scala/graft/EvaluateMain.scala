@@ -3,7 +3,6 @@ package graft
 import graft.eval.Evaluator
 import graft.kb.Loaders
 import graft.triples.Canonicalizer
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /**
@@ -24,13 +23,7 @@ object EvaluateMain {
     val opts = args.sliding(2, 2).collect {
       case Array(k, v) if k.startsWith("--") => k.drop(2) -> v
     }.toMap
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .appName("graft-evaluate")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions(sys.env.getOrElse("SPARK_MASTER", "local[8]"), 8)
 
     opts.get("convert-gs").foreach { oldGs =>
       val docs = Loaders.loadWebTablesDir(spark, opts("web"))

@@ -1264,7 +1264,7 @@ object SparkEntry {
     // (fixtures/MicroCorpus.scala — fixed tables, fixed KB, one planted
     // LCWA contradiction), so its full-pipeline triple set is a fixed
     // 10-row golden, pinned here as a VALUES table. Regenerate with
-    // `runMain graft.tools.DumpGolden` after any semantic change.
+    // `runMain graft.tools.Tools golden` after any semantic change.
     "q_t2k_triples" ->
       """SELECT * FROM (VALUES
         | ('http://dbpedia.org/resource/Day_After', 'http://dbpedia.org/ontology/PopulatedPlace/author', 'gold amber', false, true),

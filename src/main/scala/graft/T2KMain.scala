@@ -5,7 +5,6 @@ import graft.eval.{Diagnostics, Evaluator}
 import graft.kb.Loaders
 import graft.pipeline.{T2KConfig, T2KPipeline}
 import graft.triples.GraphSink
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /**
@@ -44,17 +43,8 @@ object T2KMain {
     val opts = args.sliding(2, 2).collect {
       case Array(k, v) if k.startsWith("--") => k.drop(2) -> v
     }.toMap
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .appName("graft-t2k")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions(sys.env.getOrElse("SPARK_MASTER", "local[32]"),
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
 
     val hierarchy = opts.get("ontology")
       .map(Loaders.loadClassHierarchy(spark, _)).getOrElse(Nil)

@@ -35,7 +35,6 @@ object OpsScalingBench {
     val spark = ScalingBench.session(cores)
     val l = new ScalingBench.CpuWallListener
     spark.sparkContext.addSparkListener(l)
-    graft.util.Logs.quietBenignAccumulatorNoise()
     try {
       val t0 = System.nanoTime()
       val rows = body(spark)

@@ -16,15 +16,8 @@ import java.nio.file.{Files, Paths}
  */
 object ScalingBench {
 
-  private[bench] def session(cores: Int): SparkSession = SparkSession.builder()
-    .master(s"local[$cores]")
-    .appName(s"graft-scaling-$cores")
-    .config("spark.sql.shuffle.partitions", math.max(cores, 4).toString)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.ansi.enabled", "false")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private[bench] def session(cores: Int): SparkSession =
+    graft.Sessions(s"local[$cores]", math.max(cores, 4))
 
   /** Task-level CPU-vs-wall accounting (TaskMetrics): executorCpuTime is
     * time ON CPU; executorRunTime includes memory stalls, shuffle fetch
@@ -154,8 +147,11 @@ object ScalingBench {
           (0 until 5).map(i => md5(concat(col("id"), lit(i)))): _*))
         .withColumn("b", concat_ws(" ",
           (0 until 5).map(i => md5(concat(col("id") + (i % 2), lit(i)))): _*))
+      // unthresholded GSJ: the probe's CPU-bound kernel
+      val gsj = udf((a: String, b: String) =>
+        graft.text.Similarity.generalisedStringJaccard(a, b, 0.5, 0.0))
       val t0 = System.nanoTime()
-      df.select(graft.util.Udfs.gsjRaw(col("a"), col("b")).as("s"))
+      df.select(gsj(col("a"), col("b")).as("s"))
         .agg(sum(col("s"))).collect()
       (System.nanoTime() - t0) / 1e9
     } finally spark.stop()

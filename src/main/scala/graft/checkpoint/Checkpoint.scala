@@ -29,19 +29,6 @@ trait Checkpointer {
   def durable: Boolean = false
 }
 
-/** No-op: keep the lazy Catalyst DAG. */
-object NoopCheckpointer extends Checkpointer {
-  def apply(name: String, df: => DataFrame): DataFrame = df
-}
-
-/** Persist each stage in memory/disk — stage results are reused across the
-  * multiple actions the pipeline and its consumers run, without parquet
-  * round-trips. Does NOT truncate lineage. */
-object CacheCheckpointer extends Checkpointer {
-  def apply(name: String, df: => DataFrame): DataFrame =
-    df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-}
-
 /** Materialise each stage AND truncate its lineage (localCheckpoint).
   * Essential: stage outputs are reused by several downstream joins, and
   * every reuse would otherwise inline the whole upstream logical plan —

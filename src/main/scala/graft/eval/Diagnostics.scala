@@ -17,15 +17,4 @@ object Diagnostics {
         countDistinct(col("rowNum")).as("nMappedRows"),
         countDistinct(col("classId")).as("nClasses"),
         round(avg(col("score")), 4).as("avgScore"))
-
-  /** Per-(table, class) candidate counts (the A9 distribution). */
-  def classDistribution(candidates: DataFrame): DataFrame =
-    candidates.groupBy(col("tableName"), col("classId"))
-      .agg(count(lit(1)).as("n"))
-
-  /** Correspondence count summary across stages (for the manifest). */
-  def corrSummary(name: String, corrs: DataFrame): String = {
-    val n = corrs.count()
-    s"""{"stage":"$name","correspondences":$n}"""
-  }
 }

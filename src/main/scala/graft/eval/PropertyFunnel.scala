@@ -3,7 +3,7 @@ package graft.eval
 import graft.kb.Loaders
 import graft.model.SpanCodec
 import graft.pipeline.{Classes, Schema}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /**
@@ -29,16 +29,7 @@ object PropertyFunnel {
     val opts = args.sliding(2, 2).collect {
       case Array(k, v) if k.startsWith("--") => k.drop(2) -> v
     }.toMap
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .appName("graft-property-funnel")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions(sys.env.getOrElse("SPARK_MASTER", "local[32]"), 32)
 
     val docs = Loaders.loadWebTablesDir(spark, opts("web")).cache()
     val hierarchy = opts.get("ontology")

@@ -1,6 +1,6 @@
 package graft.eval
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /**
@@ -26,13 +26,7 @@ object ReferenceParity {
     val opts = args.sliding(2, 2).collect {
       case Array(k, v) if k.startsWith("--") => k.drop(2) -> v
     }.toMap
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .appName("graft-reference-parity")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions(sys.env.getOrElse("SPARK_MASTER", "local[8]"), 8)
 
     val ref = spark.read.csv(opts("ref"))
       .select(col("_c0").as("leftId"), col("_c1").as("rightId"),

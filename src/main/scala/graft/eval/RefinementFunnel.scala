@@ -2,7 +2,6 @@ package graft.eval
 
 import graft.kb.Loaders
 import graft.pipeline.{Candidates, Classes, Keys}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /**
@@ -27,16 +26,8 @@ object RefinementFunnel {
     val opts = args.sliding(2, 2).collect {
       case Array(k, v) if k.startsWith("--") => k.drop(2) -> v
     }.toMap
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .appName("graft-refinement-funnel")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions(sys.env.getOrElse("SPARK_MASTER", "local[32]"),
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
 
     val ck = opts("checkpoint")
     def stage(name: String) = spark.read.parquet(s"$ck/$name")

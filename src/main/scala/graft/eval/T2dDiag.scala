@@ -3,7 +3,6 @@ package graft.eval
 import graft.kb.{CandidateIndex, Loaders}
 import graft.model.SpanCodec
 import graft.pipeline.{Candidates, Keys}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /**
@@ -20,16 +19,7 @@ object T2dDiag {
     val opts = args.sliding(2, 2).collect {
       case Array(k, v) if k.startsWith("--") => k.drop(2) -> v
     }.toMap
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .appName("graft-t2d-diag")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions(sys.env.getOrElse("SPARK_MASTER", "local[32]"), 32)
     import spark.implicits._
 
     val docs = Loaders.loadWebTablesDir(spark, opts("web")).cache()

@@ -34,13 +34,14 @@ object ScaleGen {
     * the candidate token join sees ONE key whose index df is
     * nEntities/hotToken and whose web-side occurrences scale with the
     * corpus — the pathological head key the saltHotTokenDf guard exists
-    * for (tools.SaltProbe measures salted vs plain on this shape).
+    * for (the perfbench t2k_corpus workload plants it at hotToken 50).
     * Default 0: no change to any existing corpus. */
   /** `tableNamePad` > 0 pads table names with a deterministic per-table
     * hex infix of that length — real web-table corpora carry long opaque
     * file names (T2D: ~34 chars), and the shuffle-weight effect of
     * carrying the name string through hot keys only shows at realistic
-    * lengths (tools.TableIdProbe). Default 0: names stay "tblN.csv". */
+    * lengths (the perfbench t2k_corpus workload uses pad 28). Default 0:
+    * names stay "tblN.csv". */
   case class Config(nClasses: Int = 20, nEntities: Int = 20000,
                     nTables: Int = 200, rowsPerTable: Int = 50,
                     vocab: Int = 300000, labelTokens: Int = 3,

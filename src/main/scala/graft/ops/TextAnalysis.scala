@@ -158,7 +158,9 @@ object TextAnalysis {
                  dupNs: Seq[Int] = Seq(5, 10)): DataFrame = {
     val tNs = topNs.toArray
     val dNs = dupNs.toArray
-    val kernel = udf((toks: Seq[String]) => repKernel(toks, tNs, dNs))
+    // null text tokenises to a null array: score it as the empty document
+    val kernel = udf((toks: Seq[String]) =>
+      repKernel(if (toks == null) Nil else toks, tNs, dNs))
     val names = topNs.map(n => s"top_${n}gram_char_frac") ++
       dupNs.map(n => s"dup_${n}gram_char_frac")
     docs.select(col(idCol), kernel(tokensCol(col(textCol))).as("_m"))

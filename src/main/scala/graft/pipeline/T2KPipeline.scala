@@ -63,8 +63,10 @@ object T2KPipeline {
           .orderBy(col("score").desc, col(tieCol).asc)))
       .filter(col("rk") === 1).drop("rk")
 
-  /** Lazy LOCAL CHECKPOINT for reused dims — materialise once at the
-    * first action (no serial job barrier) AND truncate the logical plan.
+  /** Eager LOCAL CHECKPOINT for reused dims — materialise once, at
+    * definition (a serial job barrier per dim: under AQE even a lazy
+    * checkpoint runs the dim's shuffle stages there, see
+    * LocalCheckpointer) AND truncate the logical plan.
     * The r4 persist()-based version kept each dim's full plan visible to
     * every consumer, so the classes/pairs/dup0 subtrees (which nest each
     * other) were re-ANALYZED inside every downstream stage's definition:
@@ -96,11 +98,6 @@ object T2KPipeline {
           hierarchy: Map[String, String],
           cfg: T2KConfig = T2KConfig(),
           ckpt: Checkpointer = LocalCheckpointer): T2KResult = {
-    var _t = System.nanoTime()
-    def mark(l: String): Unit = if (sys.env.contains("GRAFT_TIME_DEF")) {
-      System.err.println(f"[deftime] $l ${(System.nanoTime() - _t) / 1e9}%.2f s")
-      _t = System.nanoTime()
-    }
     val pinned = collection.mutable.ArrayBuffer[DataFrame]()
     val cache = cacheInto(pinned) _
 
@@ -117,7 +114,6 @@ object T2KPipeline {
     val kbPropsByClass = cache(kb.propsByClass)
     val propClasses = kbPropsByClass.select("classId", "propId").distinct()
 
-    mark("dims")
     // --- candidate index (S5) -------------------------------------------
     val index = ckpt("candidate_tokens",
       CandidateIndex.build(kbCells, surfaceForms, cfg.tokenDfCap))
@@ -130,7 +126,6 @@ object T2KPipeline {
           Candidates.variantIndex(index, cfg.variantTokenDfCap)))
       else None
 
-    mark("index")
     // window top-N stages coalesce to ~1 partition under AQE at small
     // corpus sizes, serialising every downstream task (manifest evidence:
     // candidates_refined landed in 1 partition). Round-robin with explicit
@@ -149,19 +144,16 @@ object T2KPipeline {
       cells, keyCols, index, cfg.selectionCandidates, cfg.selectionThreshold,
       rankByIdf = cfg.idfRanking, saltHotTokenDf = cfg.saltHotTokenDf)))
 
-    mark("selection_def")
     // --- class decision (A1-A3) -----------------------------------------
     val classes0 = cache(Classes.decide(selection, kb.classes,
       cfg.classConsensus, cfg.classFallbackTopK))
 
-    mark("classes0_def")
     // --- candidate refinement (class-filtered, th 0.7, fuzzy-on-miss) ---
     val refined = ckpt("candidates_refined", spread(
       Candidates.refineFromSelection(selection, classes0, cells, keyCols,
         index, cfg.refinementCandidates, cfg.refinementThreshold,
         cfg.refinementEditDistance, cfg.variantTokenDfCap, variants)))
 
-    mark("refined_def")
     // --- first duplicate-based schema matching + class refinement -------
     val pairs0 = Schema.blockPairs(webCols, classes0, kbPropsByClass, cfg.kurtosisMin)
     val dup0 = cache(Schema.duplicateBased(refined, cells, kbCells,
@@ -188,7 +180,6 @@ object T2KPipeline {
     val candidates = ckpt("candidates_filtered",
       Classes.filterCandidates(refined, classes))
 
-    mark("dup0_classes")
     // --- iteration loop (T2KMatch.java:356-405) -------------------------
     val pairs = cache(
       Schema.blockPairs(webCols, classes, kbPropsByClass, cfg.kurtosisMin))
@@ -219,7 +210,6 @@ object T2KPipeline {
         else ckpt(s"instance_cands_it$it", resolved)
     }
 
-    mark("loop_def")
     // --- 1:1 top-1 (T2KMatch.java:411-413) ------------------------------
     val instanceTop1 = cache(
       top1(instanceCands, Seq("tableName", "rowNum"), "uri"))
@@ -240,7 +230,6 @@ object T2KPipeline {
           schemaTop1.join(keep, Seq("tableName"), "left_semi"))
       }
 
-    mark("top1_def")
     // --- class corrs + triples ------------------------------------------
     val classCorrs = classesBest
       .join(broadcast(kb.classes.select("classId", "className")), "classId")
@@ -253,7 +242,6 @@ object T2KPipeline {
       kb.props, webCols)
     val triples = if (ckpt.durable) ckpt("triples", triplesDf) else triplesDf
 
-    mark("triples_def")
     T2KResult(instF, schemaF, classCorrs, triples, schemaCorrs, pinned.toSeq)
   }
 }

@@ -48,10 +48,4 @@ object Normalize {
     s = trim(regexp_replace(s, "[^a-z0-9]+", " "))
     when(s === "" || s === "null", lit(null)).otherwise(s)
   }
-
-  /** Column-expression tokenise -> array<string> (no empty tokens). */
-  def tokeniseCol(c: Column, removeBrackets: Boolean = true): Column = {
-    val n = normaliseCol(c, removeBrackets)
-    when(n.isNull, array()).otherwise(split(n, " "))
-  }
 }

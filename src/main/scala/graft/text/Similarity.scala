@@ -68,13 +68,6 @@ object Similarity {
     if (union == 0) 0.0 else inter / union
   }
 
-  /** Column form over pre-tokenised array<string> columns. */
-  def tokenJaccardCol(ta: Column, tb: Column): Column = {
-    val inter = size(array_intersect(ta, tb)).cast("double")
-    val uni = size(array_union(ta, tb)).cast("double")
-    when(uni === 0, 0.0).otherwise(inter / uni)
-  }
-
   // ---- Generalised string Jaccard (soft token match via Levenshtein) -----
   /**
    * Jaccard where tokens count as matched if their Levenshtein similarity

@@ -16,10 +16,6 @@ object Udfs {
   val gsj = udf((a: String, b: String) =>
     Similarity.generalisedStringJaccard(a, b, 0.5, 0.5))
 
-  /** Unthresholded variant (jaccardThreshold = 0) for vote scoring. */
-  val gsjRaw = udf((a: String, b: String) =>
-    Similarity.generalisedStringJaccard(a, b, 0.5, 0.0))
-
   /** GSJ(Levenshtein, 0.2, 0.2) — the similarity-flooding value matchers'
     * config (ValueTypeComparatorWB2KB.java:41). */
   val gsj02 = udf((a: String, b: String) =>
@@ -30,7 +26,4 @@ object Udfs {
     * runs on genuinely fuzzy pairs (codegen evaluates `when` lazily). */
   def gsjFast(a: Column, b: Column): Column =
     when(a.isNotNull && a === b, lit(1.0)).otherwise(gsj(a, b))
-
-  def gsjRawFast(a: Column, b: Column): Column =
-    when(a.isNotNull && a === b, lit(1.0)).otherwise(gsjRaw(a, b))
 }

@@ -3,24 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for all suites (one JVM, reused). */
+/** Shared local session for all suites (one JVM, reused), built by the
+  * production factory so the suite runs under the engine's own config. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = builder.getOrCreate()
-    // AFTER session init (which configures log4j): known-benign
-    // lazy-localCheckpoint accumulator-GC chatter otherwise buries real
-    // failures in the suite output (VERDICT r5 Wrong #3)
-    graft.util.Logs.quietBenignAccumulatorNoise()
-    s
-  }
-  private def builder = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.ansi.enabled", "false") // dirty-web-data semantics
+  lazy val spark: SparkSession = Sessions("local[4]", 4)
 }
 
 abstract class SparkSpec extends AnyFunSuite {

@@ -198,7 +198,10 @@ class OpsSpec extends SparkSpec {
       // 10 tokens, 5-gram "p q r s t" occurs twice (chars 9, count 2,
       // mass 18; normalised len 19) -> dup5 = 18/19; dup10 window has
       // one gram, not duplicated -> 0
-      (4L, "p q r s t p q r s t")
+      (4L, "p q r s t p q r s t"),
+      // null and empty text: no tokens -> every metric 0.0
+      (5L, null),
+      (6L, "")
     ).toDF("doc_id", "text")
     val m = TextAnalysis.repetition(docs).collect()
       .map(r => r.getAs[Long]("doc_id") -> r).toMap
@@ -213,6 +216,8 @@ class OpsSpec extends SparkSpec {
     assert(m(3L).getAs[Double]("dup_5gram_char_frac") === 0.0)
     assert(m(4L).getAs[Double]("dup_5gram_char_frac") === 18.0 / 19)
     assert(m(4L).getAs[Double]("dup_10gram_char_frac") === 0.0)
+    for (id <- Seq(5L, 6L); c <- m(id).schema.fieldNames.filter(_ != "doc_id"))
+      assert(m(id).getAs[Double](c) === 0.0, s"doc $id $c")
   }
 
   test("benchmark decontamination: 13-gram overlap flags, 12-gram does not") {
