@@ -1,5 +1,6 @@
 package graft
 
+import graft.checkpoint.Materialize
 import graft.eval.Evaluator
 import graft.fixtures.MicroCorpus
 import graft.kb.KbIngest
@@ -11,6 +12,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
 /**
  * Driver contract (see builder prompt): `queries` exposes one entry per
@@ -292,16 +294,15 @@ object SparkEntry {
         StructType(Seq(StructField("tableName", StringType),
           StructField("colIdx", IntegerType))))
       // The token index feeds THREE plan legs (exact join, fuzzy join,
-      // deletion-variant expansion): one lazy serialized localCheckpoint
-      // computes the scan+tokenize once, exactly like the pipeline's
+      // deletion-variant expansion): one serialized Materialize computes
+      // the scan+tokenize once, exactly like the pipeline's
       // `candidate_tokens` checkpoint (T2KPipeline.scala).
-      val index = pt
+      val index = Materialize(pt
         .select(concat(lit("p"), lpad(col("id").cast("string"), 10, "0")).as("uri"),
           lit(0).as("classId"),
           xxhash64(concat_ws(" ", col("toks"))).as("nameId"),
-          col("n").as("nNameTok"), explode(col("toks")).as("token"))
-        .localCheckpoint(false,
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+          col("n").as("nNameTok"), explode(col("toks")).as("token")),
+        StorageLevel.MEMORY_AND_DISK_SER)
       // Prebuilt variant index, mirroring the pipeline's checkpointed
       // `candidate_variants` stage — passing variants=None rebuilt the
       // expansion (index scan + df-count shuffle) inside every bench
@@ -309,9 +310,8 @@ object SparkEntry {
       // DISTINCT-TOKEN level (deletion shapes shared by > 2000 distinct
       // tokens), which never triggers on a realistic vocabulary — engine
       // and the uncapped DuckDB levenshtein oracle agree at any SF.
-      val variants = Candidates.variantIndex(index)
-        .localCheckpoint(false,
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      val variants = Materialize(Candidates.variantIndex(index),
+        StorageLevel.MEMORY_AND_DISK_SER)
       Candidates.generate(cells, keyCols, index, 5, 0.5, None, 1,
         variants = Some(variants))
         .select(col("rowNum").as("row_id"), col("uri"), col("score"))
@@ -429,10 +429,9 @@ object SparkEntry {
     "q_minhash_lsh" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       if (dumpAux) {
-        val toks = docs.select(explode(array_distinct(
+        val toks = Materialize(docs.select(explode(array_distinct(
             TextAnalysis.tokensCol(col("text")))).as("token"))
-          .distinct().withColumn("h", xxhash64(col("token")))
-          .localCheckpoint(true)
+          .distinct().withColumn("h", xxhash64(col("token"))))
         dump(toks, dir, "minhash_tokens")
         dump(toks.select(col("h"), posexplode(transform(sequence(lit(0), lit(63)),
           i => xxhash64(col("h"), i))).as(Seq("i", "v"))), dir, "minhash_perms")

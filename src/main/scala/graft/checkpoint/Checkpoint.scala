@@ -1,14 +1,15 @@
 package graft.checkpoint
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
 /**
  * Stage checkpointing with per-partition lineage + metrics (SURVEY.md
  * §1.5: the reference's Kryo .bin corpus caches — WebTables.java:280-299,
- * KnowledgeBase.java:320-339 — become columnar checkpoint tables; on a
- * cluster the same layout is Iceberg snapshots, in the sandbox Parquet).
+ * KnowledgeBase.java:320-339 — become Spark materialisation barriers,
+ * all placed by [[Materialize]]; on a cluster the durable layout is
+ * Iceberg snapshots, in the sandbox Parquet).
  *
  * A resumed run re-reads a completed stage instead of recomputing it
  * (resumability across the iteration loop). The manifest (JSONL, one line
@@ -29,28 +30,49 @@ trait Checkpointer {
   def durable: Boolean = false
 }
 
-/** Materialise each stage AND truncate its lineage (localCheckpoint).
-  * Essential: stage outputs are reused by several downstream joins, and
-  * every reuse would otherwise inline the whole upstream logical plan —
-  * plan size grows exponentially with pipeline depth without truncation.
-  * Right default for local/interactive runs; ParquetCheckpointer gives the
-  * same truncation plus durability/resume for cluster runs. */
+/** The one compute-once barrier: materialise `df` once and return a
+  * frame that every consumer reads instead of recomputing its plan.
+  *
+  * Local master: an EAGER localCheckpoint at `level`. Measured in round 7:
+  * under AQE a lazy localCheckpoint is not lazy — Dataset.localCheckpoint
+  * calls queryExecution.toRdd, and AdaptiveSparkPlanExec runs every
+  * shuffle stage of the frame serially right there — yet it never
+  * truncates the RDD graph (AQE materialises stages through
+  * DAGScheduler.submitMapStage, which skips the rdd.doCheckpoint() hook),
+  * so task binaries grew along the pipeline (2 -> 13 MiB on the 10-row
+  * micro corpus) and cached partitions were silently recomputed. Eager
+  * adds one result-stage job per barrier but truncates for real
+  * (micro-pipeline definition 16.8 s -> 14.8 s). Truncation also bounds
+  * the analysis of a reused subtree to once: persist()-based dims kept
+  * their nested plans visible to every consumer, 22 s of the micro
+  * pipeline's 29 s driver-side Catalyst work. The blocks are reclaimed
+  * by the ContextCleaner once the frame is dropped.
+  *
+  * Non-local master: persist(level). Checkpointed blocks cannot be
+  * recomputed, so an executor loss would fail the job; a persisted frame
+  * is recomputed from lineage instead. It stays in the CacheManager until
+  * it is unpersisted (see T2KResult.release); durable truncation on a
+  * cluster is [[ParquetCheckpointer]]'s job.
+  *
+  * `level` is the caller's: the sites that choose DISK_ONLY or a _SER
+  * level say why. */
+object Materialize {
+  def apply(df: DataFrame,
+            level: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame =
+    apply(df, level, df.sparkSession.sparkContext.isLocal)
+
+  /** Explicit-master form, so a spec can exercise the non-local branch. */
+  private[checkpoint] def apply(df: DataFrame, level: StorageLevel,
+                                local: Boolean): DataFrame =
+    if (local) df.localCheckpoint(eager = true, level) else df.persist(level)
+}
+
+/** Materialise each stage through [[Materialize]]. Stage outputs are
+  * reused by several downstream joins, and every reuse would otherwise
+  * inline the whole upstream logical plan. [[ParquetCheckpointer]] adds
+  * durability and resume. */
 object LocalCheckpointer extends Checkpointer {
-  // eager = true (round-7 reversal of the round-1 lazy choice, measured):
-  // under AQE, "lazy" localCheckpoint is not lazy — Dataset.localCheckpoint
-  // calls queryExecution.toRdd, and AdaptiveSparkPlanExec.execute runs the
-  // full adaptive loop, materialising every shuffle stage serially right
-  // there. The old eager=false therefore paid the same serial jobs AND
-  // never truncated the RDD graph (AQE materialises stages via
-  // DAGScheduler.submitMapStage, which skips the rdd.doCheckpoint() hook
-  // that truncation relies on), so task binaries grew cumulatively along
-  // the pipeline (2 -> 13 MiB on the 10-row micro corpus) and cached
-  // partitions were silently recomputed ("Block rdd_N already exists").
-  // Eager adds one result-stage job per barrier but truncates for real:
-  // micro-pipeline def 16.8 s -> 14.8 s, and every downstream stage ships
-  // kilobyte task binaries.
-  def apply(name: String, df: => DataFrame): DataFrame =
-    df.localCheckpoint(eager = true)
+  def apply(name: String, df: => DataFrame): DataFrame = Materialize(df)
 }
 
 /** LocalCheckpointer + per-stage wall-time on stderr (bench profiling).
@@ -63,7 +85,7 @@ object TimedLocalCheckpointer extends Checkpointer {
     val sc = d.sparkSession.sparkContext
     val t0 = System.nanoTime()
     sc.setJobGroup(name, s"stage $name")
-    val out = try d.localCheckpoint() finally sc.clearJobGroup()
+    val out = try Materialize(d) finally sc.clearJobGroup()
     System.err.println(f"[stage] $name%-24s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
     out
   }

@@ -48,13 +48,13 @@ object RefinementFunnel {
     // threshold 0.7, ~1 fuzzy terms on EVERY row (not just misses) — the
     // expensive second token join refineFromSelection avoids.
     val t0 = System.nanoTime()
-    val trueRefined = Candidates.generate(cells, keyCols, index,
-        numCandidates = 100, simThreshold = 0.7,
-        classesPerTable = Some(classes0), maxEditDistance = 1,
-        variants = Some(variants))
-      .select("tableName", "rowNum", "uri")
-      .localCheckpoint(false,
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    val trueRefined = graft.checkpoint.Materialize(
+      Candidates.generate(cells, keyCols, index,
+          numCandidates = 100, simThreshold = 0.7,
+          classesPerTable = Some(classes0), maxEditDistance = 1,
+          variants = Some(variants))
+        .select("tableName", "rowNum", "uri"),
+      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
     val nTrue = trueRefined.count()
     println(f"FUNNEL true-requery: $nTrue rows in ${(System.nanoTime() - t0) / 1e9}%.1f s")
     val ours = refined.select("tableName", "rowNum", "uri")

@@ -1,8 +1,10 @@
 package graft.ops
 
+import graft.checkpoint.Materialize
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /**
  * Deduplication operators for training-data pipelines, each designed
@@ -42,8 +44,8 @@ object Dedup {
       .agg(min(col("docId")).as(idCol), count(lit(1)).as("n_copies"))
       .select(col(idCol), col("content_hash"), col("n_copies"))
 
-  /** Checkpoint the hashed-set side with SCALE-ADAPTIVE partitioning and
-    * DISK-ONLY storage.
+  /** [[Materialize]] the hashed-set side with SCALE-ADAPTIVE partitioning
+    * and DISK-ONLY storage.
     *
     * Partitioning: repartition by docId WITHOUT a fixed partition count,
     * so AQE sizes the post-shuffle partitions from the data (a handful
@@ -69,8 +71,7 @@ object Dedup {
     * pool. At bench scale the sets are a few MB and the round trip is
     * page-cache-warm — measured within noise of the memory levels. */
   private def checkpointSets(sets: DataFrame): DataFrame =
-    sets.repartition(col("docId")).localCheckpoint(false,
-      org.apache.spark.storage.StorageLevel.DISK_ONLY)
+    Materialize(sets.repartition(col("docId")), StorageLevel.DISK_ONLY)
 
   /** Distinct-token explode with per-doc set size (shared helper).
     * The empty-set filter is the CHEAP equivalent predicate `text RLIKE
@@ -113,17 +114,12 @@ object Dedup {
   def jaccardPairs(docs: DataFrame, idCol: String, textCol: String,
                    threshold: Double, dfCap: Long = 1000000,
                    gramSize: Int = 0): DataFrame = {
-    // LAZY localCheckpoint (same convention/rationale as minhashLsh):
-    // the set-building expression feeds FOUR plan legs (a-side, b-side,
-    // two df-count legs), and Catalyst additionally substitutes it into
-    // the pushed-down size()>0 scan filter — without a materialisation
-    // barrier the O(set²) array_distinct runs ~16× per doc (measured
-    // 13 s → 4.2 s on the 500-doc 5-gram bench slice). eager = false: merely
-    // BUILDING the frame (explain/plan inspection) was triggering full
-    // jobs and pinning block memory (r5 ADVICE #5); the blocks persist at
-    // the first action instead, with the same compute-once effect
-    // (measured: bench walls unchanged within noise). Partitioning and
-    // storage level: see [[checkpointSets]].
+    // Materialisation barrier ([[checkpointSets]]): the set-building
+    // expression feeds FOUR plan legs (a-side, b-side, two df-count
+    // legs), and Catalyst additionally substitutes it into the pushed-down
+    // size()>0 scan filter — without a barrier the O(set²) array_distinct
+    // runs ~16× per doc (measured 13 s → 4.2 s on the 500-doc 5-gram
+    // bench slice).
     //
     // 8-BYTE UNITS: the df count and the a×b inverted-index self-join key
     // on xxhash64(unit) — exactly [[hashedSets]] — so token/shingle TEXT
@@ -217,7 +213,7 @@ object Dedup {
       s"prefix filtering needs 0 < threshold <= 1, got $threshold")
     def lb(n: Column): Column = ceil(n * lit(threshold) - lit(1e-9))
     // hashed sets reused by the df count, the prefix legs and the verify
-    // join — same (lazy) materialisation rationale as jaccardPairs
+    // join — materialised once, like jaccardPairs
     val hashed = checkpointSets(hashedSets(docs, idCol, textCol, gramSize))
     val occ = hashed.select(col("docId"), col("nTok"), explode(col("hs")).as("h"))
     val dfTab = occ.groupBy("h").agg(count(lit(1)).as("df"))
@@ -391,12 +387,8 @@ object Dedup {
   def minhashLsh(docs: DataFrame, idCol: String, textCol: String,
                  threshold: Double, numHashes: Int = 64, bands: Int = 16,
                  bucketCap: Int = 10000, gramSize: Int = 0): DataFrame = {
-    // LAZY localCheckpoint, NOT persist: hashed is consumed by the
-    // signature pass and twice by the verify join, but a CacheManager
-    // persist outlives the call (sweep-style benches invoke this per
-    // config and would leak cached blocks). Checkpoint blocks are
-    // reclaimed by the ContextCleaner once the returned frame is dropped;
-    // eager = false defers the job to the first action (r5 ADVICE #5).
+    // hashed is consumed by the signature pass and twice by the verify
+    // join: materialised once ([[checkpointSets]])
     val hashed = checkpointSets(hashedSets(docs, idCol, textCol, gramSize))
     // the self-join runs on NARROW (docId, band, bucket) rows — hs stays
     // out of the bucket shuffle

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.checkpoint.Materialize
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -54,7 +55,7 @@ object SimSearch {
     * array literal, so the per-row cost is a plain dot product (the
     * round-1 version evaluated tables × bits × dim xxhash64 calls per
     * row — 6144 hashes at dim 64). */
-  private def planeComponent(table: Int, bit: Int, i: Int): Double = {
+  private[ops] def planeComponent(table: Int, bit: Int, i: Int): Double = {
     var z = (table.toLong * 1000003L + bit.toLong) * 0x9E3779B97F4A7C15L + i.toLong
     z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
     z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
@@ -74,25 +75,9 @@ object SimSearch {
       yield (t, b, i, planeComponent(t, b, i))).toDF("tab", "bit", "i", "comp")
   }
 
-  /** Sign-bit LSH bucket id for one projection table: bits = sign of dot
-    * with `nBits` precomputed pseudo-random hyperplane literals.
-    * EXPRESSION form — kept as the semantic definition for the OpsSpec
-    * parity gate on [[bucketsKernel]]; the hot paths use the kernel
-    * (the tables × nBits aggregate/zip_with HOF trees are
-    * CodegenFallback and dominated both Catalyst planning and eval). */
-  private[ops] def signBucketExpr(vec: Column, table: Int, nBits: Int, dim: Int): Column = {
-    val bits: Seq[Column] = (0 until nBits).map { b =>
-      val plane = Array.tabulate(dim)(i => planeComponent(table, b, i))
-      val proj = aggregate(zip_with(vec, typedLit(plane), (x, h) => x * h),
-        lit(0.0d), (acc, v) => acc + v)
-      when(proj >= 0, lit(1L << b)).otherwise(lit(0L))
-    }
-    bits.reduce((a, b) => a.bitwiseOR(b))
-  }
-
   /** All `tables` sign-bucket ids of one vector in a single pass: per
     * (table, bit), proj = i-ascending dot with the plane — the SAME fold
-    * order as [[signBucketExpr]]'s aggregate(zip_with(...)), so every
+    * order as OpsSpec's expression form (aggregate(zip_with(...))), so every
     * double (and therefore every bucket id) is bit-identical
     * (OpsSpec-pinned). A vector whose length differs from `dim` gets
     * bucket 0 in every table, exactly like the expression's
@@ -129,22 +114,11 @@ object SimSearch {
   /** Column of all `tables` bucket ids (index = table) for a vector
     * column. The cast to array<double> mirrors the expression path's
     * per-element float→double promotion (exact, bit-identical). */
-  private def allBucketsCol(vec: Column, tables: Int, nBits: Int, dim: Int): Column = {
+  private[ops] def allBucketsCol(vec: Column, tables: Int, nBits: Int, dim: Int): Column = {
     val planes = planeRows(tables, nBits, dim)
     val f = udf((v: Seq[Double]) => bucketsKernel(v, planes, tables, nBits, dim))
     f(vec.cast("array<double>"))
   }
-
-  // test accessors for the kernel-vs-expression parity specs
-  private[ops] def bucketsColForTest(vec: Column, tables: Int, nBits: Int,
-                                     dim: Int): Column =
-    allBucketsCol(vec, tables, nBits, dim)
-  private[ops] def nearestCellColForTest(vec: Column,
-                                         cents: Array[Array[Double]]): Column =
-    nearestCell(vec, cents)
-  private[ops] def probeCellsColForTest(vec: Column, cents: Array[Array[Double]],
-                                        nProbe: Int): Column =
-    probeCells(vec, cents, nProbe)
 
   /** Drop buckets above `cap` members (same rationale as Dedup.capBuckets:
     * a degenerate bucket turns the bucket join quadratic). */
@@ -164,10 +138,8 @@ object SimSearch {
   def lshTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
               vecCol: String, k: Int, tables: Int = 8, nBits: Int = 12,
               dim: Int = 64, bucketCap: Int = 100000): DataFrame = {
-    val q = queries.select(col(idCol).as("qid"), col(vecCol).as("qv"))
-      .localCheckpoint(false)
-    val c = corpus.select(col(idCol).as("cid"), col(vecCol).as("cv"))
-      .localCheckpoint(false)
+    val q = Materialize(queries.select(col(idCol).as("qid"), col(vecCol).as("qv")))
+    val c = Materialize(corpus.select(col(idCol).as("cid"), col(vecCol).as("cv")))
     def bucketed(df: DataFrame, side: String): DataFrame =
       df.select(col(s"${side}id"),
           posexplode(allBucketsCol(col(s"${side}v"), tables, nBits, dim))
@@ -231,7 +203,7 @@ object SimSearch {
   }
 
   /** Index of the max-dot centroid: argmin of (-dot, cell) — the same
-    * lexicographic order as the EXPRESSION form below, now a single
+    * lexicographic order as the OpsSpec expression form, now a single
     * kernel (the nCells × dim aggregate/zip_with struct array was a
     * CodegenFallback tree re-planned per call). The per-cell dot is the
     * same i-ascending fold, so every double — and every cell choice —
@@ -278,34 +250,17 @@ object SimSearch {
     boxed.take(math.min(nProbe, boxed.length)).map(_.intValue())
   }
 
-  private def nearestCell(vec: Column, cents: Array[Array[Double]]): Column = {
+  private[ops] def nearestCell(vec: Column, cents: Array[Array[Double]]): Column = {
     val f = udf((v: Seq[Double]) => nearestCellKernel(v, cents))
     f(vec)
   }
 
   /** The `nProbe` nearest cells for a query vector, nearest first. */
-  private def probeCells(vec: Column, cents: Array[Array[Double]],
-                         nProbe: Int): Column = {
+  private[ops] def probeCells(vec: Column, cents: Array[Array[Double]],
+                              nProbe: Int): Column = {
     val f = udf((v: Seq[Double]) => probeCellsKernel(v, cents, nProbe))
     f(vec)
   }
-
-  /** EXPRESSION forms — the semantic definition the kernels above are
-    * OpsSpec-parity-gated against (array_min / array_sort over
-    * (negDot, cell) structs with aggregate(zip_with) dots). */
-  private[ops] def nearestCellExpr(vec: Column, cents: Array[Array[Double]]): Column =
-    array_min(cellScores(vec, cents)).getField("cell")
-
-  private[ops] def cellScores(vec: Column, cents: Array[Array[Double]]): Column =
-    array(cents.zipWithIndex.map { case (cArr, i) =>
-      struct((lit(0.0d) - dot(vec, typedLit(cArr.toSeq))).as("negDot"),
-        lit(i).as("cell"))
-    }: _*)
-
-  private[ops] def probeCellsExpr(vec: Column, cents: Array[Array[Double]],
-                                  nProbe: Int): Column =
-    transform(slice(array_sort(cellScores(vec, cents)), 1, nProbe),
-      s => s.getField("cell"))
 
   /** Corpus-side cell assignment (one cell per vector) — exposed so sinks
     * and oracles can materialise the inverted file. */
@@ -391,10 +346,8 @@ object SimSearch {
   def cosineNearDupPairs(vectors: DataFrame, idCol: String, vecCol: String,
                          threshold: Double, tables: Int = 8, nBits: Int = 12,
                          dim: Int = 64, bucketCap: Int = 100000): DataFrame = {
-    // Lazy localCheckpoint: base feeds the bucket pass and both verify
-    // joins — scan/build once (same convention as Dedup.minhashLsh).
-    val base = vectors.select(col(idCol).as("vid"), col(vecCol).as("vv"))
-      .localCheckpoint(false)
+    // base feeds the bucket pass and both verify joins: scan/build once
+    val base = Materialize(vectors.select(col(idCol).as("vid"), col(vecCol).as("vv")))
     // The bucket self-join and the pair distinct run on NARROW
     // (vid, tab, bucket) rows — the previous shape carried the vector
     // payload through the capBuckets join, the self-join AND a distinct

@@ -63,19 +63,26 @@ object TextAnalysis {
   val BpeishPattern: String =
     "'(?:s|t|re|ve|m|ll|d)| ?[a-zA-Z]+| ?[0-9]+| ?[^a-zA-Z0-9\\s]+"
 
+  /** A temp column name absent from `df` (case-insensitive, like Spark's
+    * default resolver), so binding it never overwrites a caller column. */
+  private def tempName(df: DataFrame, base: String): String =
+    Iterator.iterate(base)("_" + _)
+      .find(n => !df.columns.exists(_.equalsIgnoreCase(n))).get
+
   def quality(docs: DataFrame, textCol: String = "text"): DataFrame = {
     val text = col(textCol)
     // bind the token array ONCE: inline tokensCol references in several
     // output columns each re-ran the tokenisation regex per row
     // (withColumn projects don't share non-attribute subtrees)
-    val toks = col("_toks")
+    val toksName = tempName(docs, "_toks")
+    val toks = col(toksName)
     val nTok = size(toks).cast("double")
     val nChar = length(text).cast("double")
     val nPunct = (length(text) - length(regexp_replace(text, "[^a-zA-Z0-9 ]", ""))).cast("double")
     val stop = Stopwords.en
     val nStop = size(filter(toks, t => t.isin(stop: _*))).cast("double")
     docs
-      .withColumn("_toks", tokensCol(text))
+      .withColumn(toksName, tokensCol(text))
       .withColumn("n_tokens", size(toks).cast("long"))
       .withColumn("n_tokens_bpe",
         size(regexp_extract_all(text, lit(BpeishPattern), lit(0))).cast("long"))
@@ -88,7 +95,7 @@ object TextAnalysis {
           least(nTok / 100.0, lit(1.0)) * 0.5 +
             (lit(1.0) - least(col("punct_ratio") * 5.0, lit(1.0))) * 0.25 +
             least(col("stopword_ratio") * 4.0, lit(1.0)) * 0.25))
-      .drop("_toks")
+      .drop(toksName)
   }
 
   /** Stopword-vote language ID: per language, count stopword hits in the
@@ -101,19 +108,21 @@ object TextAnalysis {
     // bind tokens and the winning struct ONCE: `best` inlined twice (hits
     // + lang) over inline tokens evaluated the 4-language vote cascade —
     // and the tokenisation under it — ~8x per row
-    val toks = col("_toks")
+    val toksName = tempName(docs, "_toks")
+    val bestName = tempName(docs, "_best")
+    val toks = col(toksName)
+    val best = col(bestName)
     val votes = Stopwords.byLang.toSeq.sortBy(_._1).map { case (lang, words) =>
       struct(size(filter(toks, t => t.isin(words: _*))).as("hits"),
         lit(lang).as("lang"))
     }
     // argmax by (hits desc, lang desc): greatest struct; struct ordering
     // is lexicographic on (hits, lang).
-    docs.withColumn("_toks", tokensCol(col(textCol)))
-      .withColumn("_best", greatest(votes: _*))
+    docs.withColumn(toksName, tokensCol(col(textCol)))
+      .withColumn(bestName, greatest(votes: _*))
       .withColumn("pred_lang",
-        when(col("_best").getField("hits") > 0, col("_best").getField("lang"))
-          .otherwise("und"))
-      .drop("_toks", "_best")
+        when(best.getField("hits") > 0, best.getField("lang")).otherwise("und"))
+      .drop(toksName, bestName)
   }
 
   /** Rolling-hash fingerprint over the token sequence (chained xxhash64:
@@ -239,57 +248,6 @@ object TextAnalysis {
     }
     topNs.map(n => topv.get(n).doubleValue()) ++
       dupNs.map(n => dupv.get(n).doubleValue())
-  }
-
-  /** The original 3-exchange expression implementation — retained as the
-    * semantic definition for the OpsSpec parity gate on [[repKernel]]. */
-  private[ops] def repetitionExpr(docs: DataFrame, idCol: String = "doc_id",
-                 textCol: String = "text",
-                 topNs: Seq[Int] = Seq(2, 3, 4),
-                 dupNs: Seq[Int] = Seq(5, 10)): DataFrame = {
-    val allNs = (topNs ++ dupNs).distinct.sorted
-    val base = docs.select(col(idCol).as("docId"),
-        tokensCol(col(textCol)).as("toks"))
-      .withColumn("totalLen",
-        length(concat_ws(" ", col("toks"))).cast("double"))
-    // explode cheap (n, startIdx) index structs, compute the gram AFTER
-    // the explode: the per-row array holds two ints per window instead
-    // of built strings, and the hash/length stream through codegen
-    val idxType = "array<struct<n:int,i:int>>"
-    val idxArrays = allNs.map { n =>
-      when(size(col("toks")) >= n,
-        transform(sequence(lit(0), size(col("toks")) - n),
-          i => struct(lit(n).as("n"), i.cast("int").as("i"))))
-        .otherwise(lit(null).cast(idxType))
-    }
-    val gram = concat_ws(" ",
-      slice(col("toks"), col("p.i") + lit(1), col("p.n")))
-    val counts = base
-      .select(col("docId"), col("totalLen"), col("toks"),
-        explode(concat(idxArrays.map(a =>
-          coalesce(a, array().cast(idxType))): _*)).as("p"))
-      .select(col("docId"), col("totalLen"), col("p.n").as("n"),
-        xxhash64(gram).as("gh"), length(gram).as("glen"))
-      .groupBy(col("docId"), col("n"), col("gh"))
-      .agg(count(lit(1)).as("cnt"), first(col("glen")).as("glen"),
-        first(col("totalLen")).as("totalLen"))
-    val perN = counts.groupBy(col("docId"), col("n"))
-      .agg(
-        least(max(col("cnt") * col("glen")) / first(col("totalLen")), lit(1.0))
-          .as("topv"),
-        least(coalesce(sum(when(col("cnt") >= 2, col("cnt") * col("glen"))),
-          lit(0L)) / first(col("totalLen")), lit(1.0)).as("dupv"))
-    val aggs = topNs.map(n =>
-        max(when(col("n") === n, col("topv"))).as(s"top_${n}gram_char_frac")) ++
-      dupNs.map(n =>
-        max(when(col("n") === n, col("dupv"))).as(s"dup_${n}gram_char_frac"))
-    val metrics = perN.groupBy(col("docId")).agg(aggs.head, aggs.tail: _*)
-    val out = base.select(col("docId")).join(metrics, Seq("docId"), "left")
-    val fracCols = topNs.map(n => s"top_${n}gram_char_frac") ++
-      dupNs.map(n => s"dup_${n}gram_char_frac")
-    fracCols.foldLeft(out) { (df, c) =>
-      df.withColumn(c, coalesce(col(c), lit(0.0)))
-    }.withColumnRenamed("docId", idCol)
   }
 }
 

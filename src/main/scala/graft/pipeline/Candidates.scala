@@ -1,9 +1,11 @@
 package graft.pipeline
 
+import graft.checkpoint.Materialize
 import graft.text.Normalize
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /**
  * Candidate generation / selection / refinement (SURVEY.md §2.2 B1-B2,
@@ -329,15 +331,14 @@ object Candidates {
         // above the threshold keep their exact candidate set). This keeps
         // the expensive variant join proportional to the MISS count, not
         // the corpus.
-        // Lazy lineage cut: the exact leg feeds both the miss-row filter
-        // and the result union — cached at its first action, reclaimed by
-        // the ContextCleaner (no CacheManager entry to leak across calls).
+        // The exact leg feeds both the miss-row filter and the result
+        // union: materialised once (graft.checkpoint.Materialize).
         // SERIALIZED storage: the default deserialized blocks are ~10x the
         // on-wire size and OOM'd a 32-thread 8g JVM on the T2D corpus
         // while the per-name aggregation was still running alongside.
-        val exact = exactPerName(kt, candidateTokens, cptEnc,
-          withIdf = false, saltHotTokenDf, simThreshold).localCheckpoint(false,
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+        val exact = Materialize(exactPerName(kt, candidateTokens, cptEnc,
+            withIdf = false, saltHotTokenDf, simThreshold),
+          StorageLevel.MEMORY_AND_DISK_SER)
         // exactPerName already applies the per-name threshold, so hit
         // rows are simply the rows with ANY surviving exact candidate
         val hitRows = exact.select("tableId", "rowNum").distinct()

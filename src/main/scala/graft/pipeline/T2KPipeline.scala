@@ -1,12 +1,13 @@
 package graft.pipeline
 
-import graft.checkpoint.{Checkpointer, LocalCheckpointer}
+import graft.checkpoint.{Checkpointer, LocalCheckpointer, Materialize}
 import graft.kb.{CandidateIndex, KbIngest}
 import graft.model.SpanCodec
 import graft.triples.Triples
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /**
  * The full matching pipeline (reference T2KMatch.match(),
@@ -43,12 +44,13 @@ case class T2KResult(instanceCorrs: DataFrame, schemaCorrs: DataFrame,
                      classCorrs: DataFrame, triples: DataFrame,
                      schemaCombined: DataFrame,
                      cached: Seq[DataFrame] = Nil) {
-  /** Unpersist the dims run() pinned. Only the non-local persist()
-    * fallback registers frames here (CacheManager entries outlive the
-    * call — a sweep-style caller invoking run() per corpus would
-    * accumulate them for the life of the app otherwise); local-master
-    * checkpoint blocks are ContextCleaner-reclaimed and register
-    * nothing. Call once the result frames are written/collected. */
+  /** Unpersist the dims run() pinned. Only a non-local master registers
+    * frames here ([[graft.checkpoint.Materialize]] persists there, and
+    * CacheManager entries outlive the call — a sweep-style caller
+    * invoking run() per corpus would accumulate them for the life of the
+    * app otherwise); local-master checkpoint blocks are
+    * ContextCleaner-reclaimed and register nothing. Call once the result
+    * frames are written/collected. */
   def release(): Unit = cached.foreach { df =>
     try df.unpersist(blocking = false) catch { case _: Throwable => () }
   }
@@ -63,36 +65,14 @@ object T2KPipeline {
           .orderBy(col("score").desc, col(tieCol).asc)))
       .filter(col("rk") === 1).drop("rk")
 
-  /** Eager LOCAL CHECKPOINT for reused dims — materialise once, at
-    * definition (a serial job barrier per dim: under AQE even a lazy
-    * checkpoint runs the dim's shuffle stages there, see
-    * LocalCheckpointer) AND truncate the logical plan.
-    * The r4 persist()-based version kept each dim's full plan visible to
-    * every consumer, so the classes/pairs/dup0 subtrees (which nest each
-    * other) were re-ANALYZED inside every downstream stage's definition:
-    * measured 22 s of the micro pipeline's 29 s driver-side Catalyst
-    * work, and the same multiplicative re-analysis on every corpus.
-    * Truncation bounds each subtree's planning to once. Blocks are
-    * ContextCleaner-reclaimed.
-    *
-    * LOCAL MASTERS ONLY: checkpointed blocks are NOT recomputable, so on
-    * a real cluster an executor loss (or dynamic-allocation decommission)
-    * would fail the job instead of recomputing the dim. Non-local masters
-    * therefore fall back to persist(): each consumer stage re-analyzes
-    * the dim's (small) plan, but the job survives block loss; durable
-    * truncation on a cluster is the ParquetCheckpointer's job. */
+  /** [[Materialize]] a reused dim; a frame left persisted (non-local
+    * master) is pinned for [[T2KResult.release]]. */
   private def cacheInto(pinned: collection.mutable.Buffer[DataFrame])
-                       (df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.isLocal)
-      // eager: same rationale as LocalCheckpointer (r7) — AQE materialises
-      // the stages at definition either way; eager additionally truncates
-      // the RDD graph so downstream task binaries stay small
-      df.localCheckpoint(true)
-    else {
-      val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      pinned += p
-      p
-    }
+                       (df: DataFrame): DataFrame = {
+    val m = Materialize(df)
+    if (m.storageLevel != StorageLevel.NONE) pinned += m
+    m
+  }
 
   def run(docs: DataFrame, kb: KbIngest.Ingested, surfaceForms: DataFrame,
           hierarchy: Map[String, String],

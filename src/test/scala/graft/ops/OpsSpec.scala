@@ -328,7 +328,7 @@ class OpsSpec extends SparkSpec {
       .map(r => r.getAs[Long]("doc_id") ->
         cols.map(c => r.getAs[Double](c))).toMap
     val kernel = m(TextAnalysis.repetition(corpus))
-    val expr = m(TextAnalysis.repetitionExpr(corpus))
+    val expr = m(ReferenceExprs.repetitionExpr(corpus))
     assert(kernel.keySet === expr.keySet)
     kernel.foreach { case (id, vs) =>
       assert(vs === expr(id), s"doc $id kernel=$vs expr=${expr(id)}") }
@@ -342,9 +342,9 @@ class OpsSpec extends SparkSpec {
       ).toDF("vec_id", "embedding")
     val tables = 4; val nBits = 12; val dim = 64
     val exprCols = array((0 until tables).map(t =>
-      SimSearch.signBucketExpr(col("embedding"), t, nBits, dim)): _*)
+      ReferenceExprs.signBucketExpr(col("embedding"), t, nBits, dim)): _*)
     val both = vecs.select(col("vec_id"),
-      SimSearch.bucketsColForTest(col("embedding"), tables, nBits, dim).as("k"),
+      SimSearch.allBucketsCol(col("embedding"), tables, nBits, dim).as("k"),
       exprCols.as("e")).collect()
     both.foreach { r =>
       assert(r.getSeq[Long](1) === r.getSeq[Long](2), s"vec ${r.getLong(0)}")
@@ -358,10 +358,10 @@ class OpsSpec extends SparkSpec {
       .withColumn("v", col("v").cast("array<double>"))
     val cents = Array.fill(7)(Array.fill(16)(rnd.nextDouble() * 2 - 1))
     val both = vecs.select(col("vec_id"),
-      SimSearch.nearestCellColForTest(col("v"), cents).as("nk"),
-      SimSearch.nearestCellExpr(col("v"), cents).as("ne"),
-      SimSearch.probeCellsColForTest(col("v"), cents, 3).as("pk"),
-      SimSearch.probeCellsExpr(col("v"), cents, 3).as("pe")).collect()
+      SimSearch.nearestCell(col("v"), cents).as("nk"),
+      ReferenceExprs.nearestCellExpr(col("v"), cents).as("ne"),
+      SimSearch.probeCells(col("v"), cents, 3).as("pk"),
+      ReferenceExprs.probeCellsExpr(col("v"), cents, 3).as("pe")).collect()
     both.foreach { r =>
       assert(r.getInt(1) === r.getInt(2), s"nearest vec ${r.getLong(0)}")
       assert(r.getSeq[Int](3) === r.getSeq[Int](4), s"probe vec ${r.getLong(0)}")
@@ -391,6 +391,23 @@ class OpsSpec extends SparkSpec {
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[String]("pred_lang")).toMap
     assert(out(1L) === "fr") // en 1 hit, fr 1 hit -> fr (desc)
     assert(out(2L) === "fr") // de 2 hits ("und","der"), fr 2 hits -> fr
+  }
+
+  test("quality and langId keep caller columns named like their temps") {
+    // both ops bind temp columns internally; a caller column that shares
+    // a temp's name must come back unchanged, not overwritten and dropped
+    val in = Seq((1L, "the quick brown fox", "keep-toks", 7))
+      .toDF("doc_id", "text", "_toks", "_best")
+    def callerCols(df: org.apache.spark.sql.DataFrame) =
+      df.select("doc_id", "_toks", "_best").collect().toSeq
+        .map(r => (r.getLong(0), r.getString(1), r.getInt(2)))
+    val expected = Seq((1L, "keep-toks", 7))
+    val q = TextAnalysis.quality(in)
+    assert(callerCols(q) === expected)
+    assert(q.select("n_tokens").head().getLong(0) === 4L)
+    val l = TextAnalysis.langId(in)
+    assert(callerCols(l) === expected)
+    assert(l.select("pred_lang").head().getString(0) === "en")
   }
 
   test("real image decode: PNG round trip pins the exact block-sum feature") {
