@@ -83,32 +83,31 @@ object SFMatchers {
       .join(colMeta, Seq("tableName", "colIdx"))
       .join(kbVals, Seq("uri"))
 
-    val sim =
+    // operands projected once per row (Udfs.withTypedOperands)
+    val typeMismatch = col("dtype") =!= col("kbDtype")
+    val (strA, strB) = (col("textNorm"), col("kbValueNorm"))
+    val (operands, sim) =
       if (typed) {
-        val strSim = Udfs.gsj02(Normalize.normaliseCol(col("text")),
-          Normalize.normaliseCol(col("kbValue")))
-        val aNum = graft.util.SafeCast.toDouble(col("text"))
-        val bNum = graft.util.SafeCast.toDouble(col("kbValue"))
-        val aDate = graft.util.SafeCast.toDateSafe(col("text"))
-        val bDate = graft.util.SafeCast.toDateSafe(col("kbValue"))
         val floor = (c: org.apache.spark.sql.Column) =>
           when(c >= 0.2, c).otherwise(0.0) // comparator threshold 0.2
-        when(col("dtype") =!= col("kbDtype"), lit(null).cast("double"))
-          .when(col("dtype") === Dtype.Numeric,
-            floor(coalesce(Similarity.deviationSimCol(aNum, bNum), lit(0.0))))
-          .when(col("dtype") === Dtype.Date,
-            floor(coalesce(Similarity.weightedDateSimCol(aDate, bDate,
-              col("yearRange")), lit(0.0))))
-          .otherwise(coalesce(strSim, lit(0.0)))
+        (Udfs.withTypedOperands(joined, col("dtype"), typeMismatch, "text", "kbValue"),
+          when(typeMismatch, lit(null).cast("double"))
+            .when(col("dtype") === Dtype.Numeric,
+              floor(coalesce(Similarity.deviationSimCol(col("textNum"),
+                col("kbValueNum")), lit(0.0))))
+            .when(col("dtype") === Dtype.Date,
+              floor(coalesce(Similarity.weightedDateSimCol(col("textDate"),
+                col("kbValueDate"), col("yearRange")), lit(0.0))))
+            .otherwise(coalesce(Udfs.gsj02(strA, strB), lit(0.0))))
       } else
-        coalesce(Similarity.levenshteinSimCol(
-          Normalize.normaliseCol(col("text")),
-          Normalize.normaliseCol(col("kbValue"))), lit(0.0))
+        (joined.withColumn("textNorm", Normalize.normaliseCol(col("text")))
+          .withColumn("kbValueNorm", Normalize.normaliseCol(col("kbValue"))),
+          coalesce(Similarity.levenshteinSimCol(strA, strB), lit(0.0)))
 
     // max over a KB cell's (multi-)values + surface forms, then mean over
     // the pair's instance corrs; type-mismatched pairs (null sim) are
     // excluded from numerator and count
-    val perCorr = joined.withColumn("rawSim", sim)
+    val perCorr = operands.withColumn("rawSim", sim)
       .groupBy(col("tableName"), col("classId"), col("rowNum"),
         col("colIdx"), col("propId"))
       .agg(max(col("rawSim")).as("sim"))

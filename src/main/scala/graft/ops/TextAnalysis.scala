@@ -172,9 +172,10 @@ object TextAnalysis {
       repKernel(if (toks == null) Nil else toks, tNs, dNs))
     val names = topNs.map(n => s"top_${n}gram_char_frac") ++
       dupNs.map(n => s"dup_${n}gram_char_frac")
-    docs.select(col(idCol), kernel(tokensCol(col(textCol))).as("_m"))
+    val m = tempName(docs, "_m")
+    docs.select(col(idCol), kernel(tokensCol(col(textCol))).as(m))
       .select(col(idCol) +:
-        names.zipWithIndex.map { case (nm, i) => col("_m")(i).as(nm) }: _*)
+        names.zipWithIndex.map { case (nm, i) => col(m)(i).as(nm) }: _*)
   }
 
   /** Per-document repetition kernel: one pass over the token array per n

@@ -2,7 +2,7 @@ package graft.pipeline
 
 import graft.kb.KbIngest
 import graft.model.Dtype
-import graft.text.{Normalize, Similarity}
+import graft.text.Similarity
 import graft.util.Udfs
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -65,16 +65,14 @@ object Identity {
     val kbVals = kbCells.select(xxhash64(col("uri")).as("uriId"),
       col("propId"), col("value").as("kbValue"))
 
-    val strSim = Udfs.gsjFast(Normalize.normaliseCol(col("text")),
-      Normalize.normaliseCol(col("kbValue")))
-    val aNum = graft.util.SafeCast.toDouble(col("text"))
-    val bNum = graft.util.SafeCast.toDouble(col("kbValue"))
-    val aDate = graft.util.SafeCast.toDateSafe(col("text"))
-    val bDate = graft.util.SafeCast.toDateSafe(col("kbValue"))
+    // typed operands projected once per row (Udfs.withTypedOperands);
     // null = non-comparable (reference compare() == -1, skipped entirely)
+    val nonComparable = col("text").isNull || col("kbValue").isNull
+    val (aNum, bNum) = (col("textNum"), col("kbValueNum"))
+    val (aDate, bDate) = (col("textDate"), col("kbValueDate"))
     val nullD = lit(null).cast("double")
     val typedSim =
-      when(col("text").isNull || col("kbValue").isNull, nullD)
+      when(nonComparable, nullD)
         .when(col("dtype") === Dtype.Numeric,
           when(aNum.isNotNull && bNum.isNotNull,
             Similarity.deviationSimCol(aNum, bNum)).otherwise(nullD))
@@ -82,7 +80,7 @@ object Identity {
           when(aDate.isNotNull && bDate.isNotNull,
             Similarity.weightedDateSimCol(aDate, bDate, col("yearRange")))
             .otherwise(nullD))
-        .otherwise(strSim)
+        .otherwise(Udfs.gsjFast(col("textNorm"), col("kbValueNorm")))
 
     val perCorr = candidates
       .select(xxhash64(col("tableName")).as("tableId"), col("rowNum"),
@@ -92,6 +90,8 @@ object Identity {
       .join(webVals, Seq("tableId", "rowNum", "colIdx"), "left")
       .join(kbVals, Seq("uriId", "propId"), "left")
       .join(colMeta, Seq("tableId", "colIdx"), "left")
+      .transform(Udfs.withTypedOperands(_, col("dtype"), nonComparable,
+        "text", "kbValue"))
       .withColumn("rawSim", typedSim)
       // Multi-valued KB cells: best value counts (max ignores nulls; sim0
       // stays null only when NO comparable value exists for the pair).

@@ -51,20 +51,17 @@ object Schema {
       .distinct()
   }
 
-  /** Typed value similarity dispatch (R4-R6 semantics): string -> GSJ
+  /** Typed value similarity dispatch (R4-R6 semantics) over the operands
+    * of [[Udfs.withTypedOperands]]: string -> GSJ
     * with the reference's 0.5 jaccard floor (DuplicateBasedSchemaMatching
     * .java:81 wires GeneralisedStringJaccard(Levenshtein, 0.5, 0.5), which
     * zeroes scores below 0.5 BEFORE the 0.4 vote threshold), numeric ->
     * deviation sim, date -> weighted date sim (1,3,5) — the non-string
     * comparators have no inner floor. */
   private def valueSim(dtypeCol: String): org.apache.spark.sql.Column = {
-    val webText = col("text")
-    val kbVal = col("kbValue")
-    val strSim = Udfs.gsjFast(Normalize.normaliseCol(webText), Normalize.normaliseCol(kbVal))
-    val numSim = Similarity.deviationSimCol(
-      graft.util.SafeCast.toDouble(webText), graft.util.SafeCast.toDouble(kbVal))
-    val dateSim = Similarity.weightedDateSimCol(
-      graft.util.SafeCast.toDateSafe(webText), graft.util.SafeCast.toDateSafe(kbVal),
+    val strSim = Udfs.gsjFast(col("textNorm"), col("kbValueNorm"))
+    val numSim = Similarity.deviationSimCol(col("textNum"), col("kbValueNum"))
+    val dateSim = Similarity.weightedDateSimCol(col("textDate"), col("kbValueDate"),
       col("yearRange"))
     when(col(dtypeCol) === Dtype.Numeric, coalesce(numSim, lit(0.0)))
       .when(col(dtypeCol) === Dtype.Date, coalesce(dateSim, lit(0.0)))
@@ -127,6 +124,7 @@ object Schema {
       .join(webVals, Seq("tableId", "rowNum"))
       .join(pairsEnc, Seq("tableId", "colIdx"))
       .join(kbVals, Seq("uriId", "propId"))
+      .transform(Udfs.withTypedOperands(_, col("dtype"), lit(false), "text", "kbValue"))
       .withColumn("sim", valueSim("dtype"))
     // Multi-valued KB cells: one vote per (duplicate, column pair) = max sim.
     val votes = joined

@@ -1,5 +1,8 @@
 package graft.text
 
+import java.util.Locale
+import java.util.regex.Pattern
+
 /**
  * Web-table string normalisation, re-expressed from the behaviour of the
  * reference's normaliser usage (see /root/reference:
@@ -8,26 +11,35 @@ package graft.text
  * t2k/index/dbpedia/DBPediaInstanceIndex.java:185-187,
  * t2k/match/data/SurfaceForms.java:184-187).
  *
- * Semantics: lowercase; decode common HTML escapes; strip bracketed
- * qualifiers "(...)" when requested; map every non-alphanumeric char to a
- * space; collapse whitespace; trim; "null"/"" -> null.
+ * Semantics: lowercase (root locale); decode common HTML escapes; strip
+ * bracketed qualifiers "(...)" when requested; map every non-alphanumeric
+ * char to a space; collapse whitespace; trim; "null"/"" -> null.
  *
- * Implemented as pure Scala (driver/kernel use) AND as Catalyst Column
- * expression chains (distributed use, whole-stage-codegen friendly —
- * lower/regexp_replace/trim/split are all codegen'd builtins, so the hot
- * path never leaves Tungsten).
+ * One implementation, [[normalise]]; the distributed form
+ * [[normaliseCol]] is that function as a single opaque per-row kernel.
+ * Evaluate-once rule: a Column operand is a tree that Catalyst copies
+ * into every expression that reads it, so a regexp chain that contains
+ * its own result several times, read several times by a similarity
+ * expression, compiled into generated methods far above HotSpot's
+ * 8,000-byte JIT limit (`DontCompileHugeMethods`) — those ran in the
+ * bytecode interpreter on every row. A kernel call is one small node;
+ * callers that read an operand more than once still project it once
+ * (see [[graft.util.Udfs.withTypedOperands]]).
  */
 object Normalize {
   private val HtmlEscapes = Seq("&nbsp;" -> " ", "&nbsp" -> " ", "&amp;" -> " ",
     "&quot;" -> " ", "&apos;" -> " ", "&#39;" -> " ")
+  // precompiled: String.replaceAll compiles its regex on every call
+  private val Brackets = Pattern.compile("\\(.*?\\)")
+  private val NonAlnum = Pattern.compile("[^a-z0-9]+")
 
   /** Pure-Scala normalise. `removeBrackets` strips "(...)" qualifiers. */
   def normalise(raw: String, removeBrackets: Boolean = true): String = {
     if (raw == null) return null
-    var s = raw.toLowerCase
+    var s = raw.toLowerCase(Locale.ROOT)
     HtmlEscapes.foreach { case (k, v) => s = s.replace(k, v) }
-    if (removeBrackets) s = s.replaceAll("\\(.*?\\)", " ")
-    s = s.replaceAll("[^a-z0-9]+", " ").trim
+    if (removeBrackets) s = Brackets.matcher(s).replaceAll(" ")
+    s = NonAlnum.matcher(s).replaceAll(" ").trim
     if (s.isEmpty || s == "null") null else s
   }
 
@@ -38,14 +50,11 @@ object Normalize {
   }
 
   import org.apache.spark.sql.Column
-  import org.apache.spark.sql.functions._
+  import org.apache.spark.sql.functions.udf
 
-  /** Column-expression normalise (codegen'd; mirrors [[normalise]]). */
-  def normaliseCol(c: Column, removeBrackets: Boolean = true): Column = {
-    var s = lower(c)
-    HtmlEscapes.foreach { case (k, v) => s = regexp_replace(s, java.util.regex.Pattern.quote(k), v) }
-    if (removeBrackets) s = regexp_replace(s, "\\(.*?\\)", " ")
-    s = trim(regexp_replace(s, "[^a-z0-9]+", " "))
-    when(s === "" || s === "null", lit(null)).otherwise(s)
-  }
+  private val normaliseUdf = udf((s: String) => normalise(s))
+
+  /** Column form of [[normalise]] (brackets stripped): one kernel call
+    * per row. */
+  def normaliseCol(c: Column): Column = normaliseUdf(c)
 }

@@ -2,7 +2,7 @@ package graft.triples
 
 import graft.kb.KbIngest
 import graft.model.Dtype
-import graft.text.{Normalize, Similarity}
+import graft.text.Similarity
 import graft.util.Udfs
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
@@ -36,20 +36,19 @@ object Triples {
       .select("tableName", "colIdx", "dtype", "yearRange")
     val kbVals = kbCells.select(col("uri"), col("propId"), col("value").as("kbValue"))
 
-    val strSim = Udfs.gsjFast(Normalize.normaliseCol(col("text")),
-      Normalize.normaliseCol(col("kbValue")))
-    val numSim = Similarity.percentageSimCol(
-      graft.util.SafeCast.toDouble(col("text")),
-      graft.util.SafeCast.toDouble(col("kbValue")), 0.05)
+    // typed operands projected once per row (Udfs.withTypedOperands)
+    val noKbValue = col("kbValue").isNull
+    val strSim = Udfs.gsjFast(col("textNorm"), col("kbValueNorm"))
+    val numSim = Similarity.percentageSimCol(col("textNum"), col("kbValueNum"), 0.05)
     // Dates: WeightedDateSimilarity(1,3,5) thresholded at 0.9
     // (T2KMatch.java:676-677) — near-miss dates (same year/month, different
     // day) still count as LCWA-correct, exact equality does not.
-    val wds = Similarity.weightedDateSimCol(
-      graft.util.SafeCast.toDateSafe(col("text")),
-      graft.util.SafeCast.toDateSafe(col("kbValue")), col("yearRange"))
-    val dateSim = when(wds >= 0.9, wds).otherwise(0.0)
+    // The floor reads the sim twice: it is bound once as column `wds`.
+    val wds = Similarity.weightedDateSimCol(col("textDate"), col("kbValueDate"),
+      col("yearRange"))
+    val dateSim = when(col("wds") >= 0.9, col("wds")).otherwise(0.0)
     val lcwaSim =
-      when(col("kbValue").isNull, lit(null).cast("double"))
+      when(noKbValue, lit(null).cast("double"))
         .when(col("dtype") === Dtype.Numeric, coalesce(numSim, lit(0.0)))
         .when(col("dtype") === Dtype.Date, coalesce(dateSim, lit(0.0)))
         .otherwise(coalesce(strSim, lit(0.0)))
@@ -72,6 +71,8 @@ object Triples {
       .join(webVals, Seq("tableName", "rowNum", "colIdx"))
       .join(colTypes, Seq("tableName", "colIdx"), "left") // O(#tables) dim: AQE decides
       .join(kbVals, Seq("uri", "propId"), "left")
+      .transform(Udfs.withTypedOperands(_, col("dtype"), noKbValue, "text", "kbValue"))
+      .withColumn("wds", wds)
       .withColumn("lcwaSim", lcwaSim)
     // Closest KB value decides LCWA correctness (multi-valued cells).
     val best = joined.withColumn("rk", row_number().over(

@@ -410,6 +410,15 @@ class OpsSpec extends SparkSpec {
     assert(l.select("pred_lang").head().getString(0) === "en")
   }
 
+  test("repetition keeps a caller id column named like its temp") {
+    // the metric array binds to a temp column; an id column sharing the
+    // temp's name must neither clash with it nor be replaced by it
+    val in = Seq((7L, "a b a b a b")).toDF("_m", "text")
+    val out = TextAnalysis.repetition(in, idCol = "_m").collect()
+    assert(out.map(_.getLong(0)).toSeq === Seq(7L))
+    assert(out.head.getAs[Double]("top_2gram_char_frac") === 9.0 / 11)
+  }
+
   test("real image decode: PNG round trip pins the exact block-sum feature") {
     // known 2x2 image; the 16x16 nearest-neighbour resample tiles each
     // pixel over an 8x8 block, so each 4x4 feature cell sums 16 copies of

@@ -1,0 +1,54 @@
+package graft.pipeline
+
+import graft.SparkSpec
+import graft.fixtures.ScaleGen
+import graft.kb.KbIngest
+import graft.model.SpanCodec
+import graft.triples.Triples
+import org.apache.spark.sql.DataFrame
+
+/** Generated-code guard: every whole-stage-codegen subtree of the
+  * similarity-heavy stages compiles to methods HotSpot will JIT.
+  * `DontCompileHugeMethods` leaves any method over 8,000 bytes of
+  * bytecode in the interpreter for every row it processes; similarity
+  * operands copied into each other as Column trees produced 25–65 KB
+  * methods in these four stages. */
+class CodegenSizeSpec extends SparkSpec {
+  private val HugeMethodLimit = 8000
+
+  private val cfg = ScaleGen.Config(nClasses = 4, nEntities = 300, nTables = 6,
+    rowsPerTable = 8, hotToken = 10, tableNamePad = 28)
+
+  private lazy val stages: Map[String, DataFrame] = {
+    val docs = ScaleGen.webCorpus(spark, cfg)._1
+    val kb = KbIngest.fromLongForm(spark,
+      ScaleGen.kbLongForm(spark, cfg), ScaleGen.hierarchy(cfg))
+    val sf = ScaleGen.surfaceForms(spark, cfg)
+    val result = T2KPipeline.run(docs, kb, sf, ScaleGen.hierarchy(cfg).toMap)
+    val cells = SpanCodec.cells(docs)
+    val webCols = SpanCodec.columns(docs)
+    val keyCols = Keys.detect(webCols)
+    val pairs = Schema.blockPairs(webCols, result.classCorrs, kb.propsByClass)
+    Map(
+      "Candidates.keyTokens" -> Candidates.keyTokens(cells, keyCols),
+      "Schema.duplicateBased" -> Schema.duplicateBased(result.instanceCorrs,
+        cells, kb.cells, pairs, surfaceForms = Some(sf)),
+      "Identity.resolve" -> Identity.resolve(result.instanceCorrs,
+        result.schemaCorrs, keyCols, cells, kb.cells, webCols),
+      "Triples.generate" -> Triples.generate(result.instanceCorrs,
+        result.schemaCorrs, cells, kb.cells, kb.props, webCols))
+  }
+
+  for (name <- Seq("Candidates.keyTokens", "Schema.duplicateBased",
+      "Identity.resolve", "Triples.generate"))
+    test(s"$name: every generated method stays under the JIT limit") {
+      val df = stages(name)
+      assert(df.collect().nonEmpty, s"$name produced no rows") // final AQE plan
+      val subtrees = df.queryExecution.debug.codegenToSeq()
+      assert(subtrees.nonEmpty, s"$name has no whole-stage-codegen subtree")
+      val (plan, _, stats) = subtrees.maxBy(_._3.maxMethodCodeSize)
+      assert(stats.maxMethodCodeSize <= HugeMethodLimit,
+        s"$name: largest generated method ${stats.maxMethodCodeSize} B > " +
+          s"$HugeMethodLimit B, in subtree\n${plan.linesIterator.take(12).mkString("\n")}")
+    }
+}
