@@ -1,6 +1,6 @@
 package graft
 
-import graft.checkpoint.ParquetCheckpointer
+import graft.checkpoint.{Materialize, ParquetCheckpointer}
 import graft.eval.{Diagnostics, Evaluator}
 import graft.kb.Loaders
 import graft.pipeline.{T2KConfig, T2KPipeline}
@@ -29,14 +29,14 @@ object T2KMain {
     * DBpediaIndexer.main (DBpediaIndexer.java:133-159). */
   def buildIndex(kb: graft.kb.KbIngest.Ingested,
                  sf: org.apache.spark.sql.DataFrame, cfg: T2KConfig,
-                 ckpt: graft.checkpoint.Checkpointer): Unit = {
+                 ckpt: graft.checkpoint.Checkpointer): Unit = Materialize.scoped { scope =>
     val kbCells = ckpt("kb_cells", kb.cells)
     val index = ckpt("candidate_tokens",
       graft.kb.CandidateIndex.build(kbCells, sf, cfg.tokenDfCap))
     if (cfg.refinementEditDistance > 0)
       ckpt("candidate_variants",
         graft.pipeline.Candidates.variantIndex(index, cfg.variantTokenDfCap))
-    ()
+    scope.release()
   }
 
   def main(args: Array[String]): Unit = {
@@ -289,10 +289,9 @@ object T2KMain {
         split(col("_c0"), "~Col").getItem(1).cast("int").as("colIdx"),
         col("_c1").as("propUri"),
         col("_c2").cast("double").as("refScore"))
-      val combined = result.schemaCombined.join(props, "propId")
+      val combined = Materialize(result.schemaCombined.join(props, "propId")
         .select(col("tableName"), col("colIdx"), col("propId"),
-          col("propUri"), col("score"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          col("propUri"), col("score")))
       val top1 = result.schemaCorrs.join(props, "propId")
         .select(col("tableName"), col("colIdx"), col("propUri"),
           col("score").as("top1Score"))
@@ -317,10 +316,9 @@ object T2KMain {
 
       // (b) emission filters over the combined matrix
       val classes = result.classCorrs.select("tableName", "classId")
-      val seeds = SFMatchers.pipelineMatrixSeeds(
-          result.schemaCombined, graft.model.SpanCodec.columns(docs),
-          kb.propsByClass, classes)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val seeds = Materialize(SFMatchers.pipelineMatrixSeeds(
+        result.schemaCombined, graft.model.SpanCodec.columns(docs),
+        kb.propsByClass, classes))
       val refPairs = ref.select("tableName", "colIdx", "propUri")
       def emitted(formula: String, minSim: Double, filter: String,
                   maxIter: Int): org.apache.spark.sql.DataFrame =
@@ -367,10 +365,9 @@ object T2KMain {
           webCols, classesAnc, kb.propsByClass)
         val label = graft.pipeline.Schema.labelBased(pairs, webCols, kb.props)
         val emptyDup = label.limit(0)
-        val labelMatrix = graft.pipeline.Schema.combine(
+        val labelMatrix = Materialize(graft.pipeline.Schema.combine(
             emptyDup, label, keyCorrs, 0.8, 0.2, 0.03)
-          .join(props, "propId")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .join(props, "propId"))
         val labelSeeds = SFMatchers.pipelineMatrixSeeds(
           labelMatrix.select("tableName", "colIdx", "propId", "score"),
           webCols, kb.propsByClass, classesAnc)
@@ -381,25 +378,13 @@ object T2KMain {
           println(f"EMIT|$name|P=${prf.precision}%.4f|R=${prf.recall}%.4f|" +
             f"F1=${prf.f1}%.4f|tp=${prf.tp}|ours=${prf.predicted}|ref=${prf.gold}")
         }
-        sys.env.get("GRAFT_PARITY_DEBUG_TABLE").foreach { dt =>
-          println(s"DEBUG pairs for $dt:")
-          pairs.filter(col("tableName") === dt).join(props, "propId")
-            .select("colIdx", "propUri", "classId", "dtype").distinct()
-            .orderBy("colIdx").show(60, truncate = false)
-          println(s"DEBUG labelMatrix for $dt:")
-          labelMatrix.filter(col("tableName") === dt)
-            .select("colIdx", "propUri", "score").orderBy("colIdx")
-            .show(60, truncate = false)
-          println(s"DEBUG classesAnc for $dt:")
-          classesAnc.filter(col("tableName") === dt).show(20, truncate = false)
-        }
-        val labelState = SimilarityFlooding.run(labelSeeds, "A", 0.02, "stable", 0)
-          .select(split(col("groupKey"), "\\|").getItem(0).as("tableName"),
-            col("left").as("colIdx"), col("right").as("propId"))
-          .distinct() // the same (col, prop) can win in several class groups
-          .join(labelMatrix.select("tableName", "colIdx", "propId", "propUri", "score"),
-            Seq("tableName", "colIdx", "propId"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val labelState = Materialize(
+          SimilarityFlooding.run(labelSeeds, "A", 0.02, "stable", 0)
+            .select(split(col("groupKey"), "\\|").getItem(0).as("tableName"),
+              col("left").as("colIdx"), col("right").as("propId"))
+            .distinct() // the same (col, prop) can win in several class groups
+            .join(labelMatrix.select("tableName", "colIdx", "propId", "propUri", "score"),
+              Seq("tableName", "colIdx", "propId")))
         eval("labelstate-stable", labelState)
         labelState
           .select(concat(col("tableName"), lit("~Col"), col("colIdx")).as("id1"),

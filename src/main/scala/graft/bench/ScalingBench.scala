@@ -46,49 +46,11 @@ object ScalingBench {
     def cpuFraction: Double = if (runSec > 0) cpuSec / runSec else 0.0
   }
 
-  /** Per-PIPELINE-stage CPU/run attribution: TimedLocalCheckpointer runs
-    * each stage's eager materialisation in a job group named after the
-    * stage; this listener folds task metrics per group. Work not under a
-    * named group (final write, dim collects) lands in "(ungrouped)". */
-  private class StageCpuListener extends org.apache.spark.scheduler.SparkListener {
-    private val stageToGroup = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-    val perGroup = new java.util.concurrent.ConcurrentHashMap[String, (Long, Long, Long, Long)]()
-    override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-      val g = Option(js.properties)
-        .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-        .getOrElse("(ungrouped)")
-      js.stageInfos.foreach(si => stageToGroup.put(si.stageId, g))
-    }
-    override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      val m = te.taskMetrics
-      if (m != null) {
-        val g = stageToGroup.getOrDefault(te.stageId, "(ungrouped)")
-        perGroup.merge(g, (m.executorCpuTime, m.executorRunTime,
-          m.shuffleWriteMetrics.bytesWritten, m.shuffleReadMetrics.totalBytesRead),
-          (a, b) => (a._1 + b._1, a._2 + b._2, a._3 + b._3, a._4 + b._4))
-      }
-    }
-    def report(cores: Int): Unit = {
-      import scala.jdk.CollectionConverters._
-      perGroup.asScala.toSeq.sortBy(-_._2._2).foreach { case (g, (cpuNs, runMs, sw, sr)) =>
-        val cpu = cpuNs / 1e9; val run = runMs / 1e3
-        System.err.println(f"[stagecpu] cores=$cores $g%-24s cpu=$cpu%8.1f s " +
-          f"run=$run%8.1f s frac=${if (run > 0) cpu / run else 0.0}%.3f " +
-          f"shufW=${sw / 1048576.0}%9.1f MB shufR=${sr / 1048576.0}%9.1f MB")
-      }
-    }
-  }
-
   /** One full pipeline run with task CPU/run accounting. */
   def runOnce(cores: Int, cfg: ScaleGen.Config, dataDir: String): RunStats = {
     val spark = session(cores)
     val listener = new CpuWallListener
     spark.sparkContext.addSparkListener(listener)
-    val stageListener =
-      if (sys.env.contains("SPARK_GRAFT_PROFILE")) {
-        val l = new StageCpuListener
-        spark.sparkContext.addSparkListener(l); Some(l)
-      } else None
     try {
       val docs = spark.read.parquet(s"$dataDir/docs.parquet")
       val kbLong = spark.read.parquet(s"$dataDir/kb_long.parquet")
@@ -96,15 +58,9 @@ object ScalingBench {
       val nDocs = docs.count()
       val t0 = System.nanoTime()
       val kb = KbIngest.fromLongForm(spark, kbLong, ScaleGen.hierarchy(cfg))
-      System.err.println(f"[stage] kb_ingest_def           ${(System.nanoTime() - t0) / 1e9}%8.2f s")
-      val ckpt = if (sys.env.contains("SPARK_GRAFT_PROFILE"))
-        graft.checkpoint.TimedLocalCheckpointer else graft.checkpoint.LocalCheckpointer
-      val result = T2KPipeline.run(docs, kb, sf, ScaleGen.hierarchy(cfg).toMap,
-        ckpt = ckpt)
-      val tw = System.nanoTime()
+      val result = T2KPipeline.run(docs, kb, sf, ScaleGen.hierarchy(cfg).toMap)
       result.triples.write.mode("overwrite")
         .parquet(s"$dataDir/out_triples_c$cores.parquet")
-      System.err.println(f"[stage] triples_write          ${(System.nanoTime() - tw) / 1e9}%8.2f s")
       val secs = (System.nanoTime() - t0) / 1e9
       // Drain the async listener bus before reading the counters
       // (listenerBus.waitUntilEmpty is private[spark]): poll until EACH
@@ -128,7 +84,6 @@ object ScalingBench {
         f"taskRun=${listener.runSec}%.1f s cpuFraction=${listener.cpuFraction}%.3f " +
         f"shufW=${listener.shufWriteB.get / 1048576.0}%.1f MB " +
         f"shufR=${listener.shufReadB.get / 1048576.0}%.1f MB")
-      stageListener.foreach(_.report(cores))
       RunStats(nDocs, secs, listener.cpuSec, listener.runSec,
         listener.shufWriteB.get / 1048576.0, listener.shufReadB.get / 1048576.0)
     } finally spark.stop()

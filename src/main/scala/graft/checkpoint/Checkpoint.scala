@@ -51,12 +51,35 @@ trait Checkpointer {
   * Non-local master: persist(level). Checkpointed blocks cannot be
   * recomputed, so an executor loss would fail the job; a persisted frame
   * is recomputed from lineage instead. It stays in the CacheManager until
-  * it is unpersisted (see T2KResult.release); durable truncation on a
-  * cluster is [[ParquetCheckpointer]]'s job.
+  * the [[Materialize.Scope]] it was persisted in is released; a frame
+  * persisted outside any scope belongs to its caller. Durable truncation
+  * on a cluster is [[ParquetCheckpointer]]'s job.
   *
   * `level` is the caller's: the sites that choose DISK_ONLY or a _SER
-  * level say why. */
+  * level say why. Nothing else in the engine calls persist, cache or
+  * localCheckpoint, so this object alone decides how long a frame lives. */
 object Materialize {
+  /** The frames [[Materialize]] persisted while a [[scoped]] block ran. */
+  final class Scope private[Materialize] {
+    private val frames = collection.mutable.ArrayBuffer.empty[DataFrame]
+    private[Materialize] def record(df: DataFrame): Unit = synchronized { frames += df }
+    /** Unpersist every recorded frame; call once the frames built from
+      * them are written or collected. Idempotent. */
+    def release(): Unit = synchronized {
+      frames.foreach(_.unpersist(blocking = false))
+      frames.clear()
+    }
+  }
+
+  private val current = new scala.util.DynamicVariable[Option[Scope]](None)
+
+  /** Run `body` with a fresh [[Scope]] that records every frame persisted
+    * inside it (inner scopes keep their own). */
+  def scoped[T](body: Scope => T): T = {
+    val scope = new Scope
+    current.withValue(Some(scope))(body(scope))
+  }
+
   def apply(df: DataFrame,
             level: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame =
     apply(df, level, df.sparkSession.sparkContext.isLocal)
@@ -64,7 +87,8 @@ object Materialize {
   /** Explicit-master form, so a spec can exercise the non-local branch. */
   private[checkpoint] def apply(df: DataFrame, level: StorageLevel,
                                 local: Boolean): DataFrame =
-    if (local) df.localCheckpoint(eager = true, level) else df.persist(level)
+    if (local) df.localCheckpoint(eager = true, level)
+    else { current.value.foreach(_.record(df)); df.persist(level) }
 }
 
 /** Materialise each stage through [[Materialize]]. Stage outputs are
@@ -73,22 +97,6 @@ object Materialize {
   * durability and resume. */
 object LocalCheckpointer extends Checkpointer {
   def apply(name: String, df: => DataFrame): DataFrame = Materialize(df)
-}
-
-/** LocalCheckpointer + per-stage wall-time on stderr (bench profiling).
-  * Each stage's eager materialisation runs under a job group named after
-  * the stage, so a listener can attribute task CPU/run time per pipeline
-  * stage (ScalingBench's DRAM-wall accounting). */
-object TimedLocalCheckpointer extends Checkpointer {
-  def apply(name: String, df: => DataFrame): DataFrame = {
-    val d = df
-    val sc = d.sparkSession.sparkContext
-    val t0 = System.nanoTime()
-    sc.setJobGroup(name, s"stage $name")
-    val out = try Materialize(d) finally sc.clearJobGroup()
-    System.err.println(f"[stage] $name%-24s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
-    out
-  }
 }
 
 class ParquetCheckpointer(spark: SparkSession, dir: String) extends Checkpointer {

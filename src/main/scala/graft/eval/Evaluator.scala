@@ -20,11 +20,17 @@ object Evaluator {
     }
   }
 
+  /** One action: a full outer join of the two distinct key sets, counted
+    * per side. Keys join by equality, so a row with a null key is counted
+    * on its side and is never a true positive. */
   def evaluate(predicted: DataFrame, gold: DataFrame, keys: Seq[String]): PRF = {
-    val p = predicted.select(keys.map(col): _*).distinct().cache()
-    val g = gold.select(keys.map(col): _*).distinct().cache()
-    val tp = p.join(g, keys, "left_semi").count()
-    PRF(tp, p.count(), g.count())
+    def side(df: DataFrame, flag: String) =
+      df.select(keys.map(col): _*).distinct().withColumn(flag, lit(true))
+    val r = side(predicted, "_inPredicted").join(side(gold, "_inGold"), keys, "full_outer")
+      .agg(count(when(col("_inPredicted") && col("_inGold"), 1)),
+        count(col("_inPredicted")), count(col("_inGold")))
+      .head()
+    PRF(r.getLong(0), r.getLong(1), r.getLong(2))
   }
 
   /** Per-group evaluation matrix — the per-table breakdown behind the

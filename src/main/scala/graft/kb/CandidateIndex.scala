@@ -1,5 +1,6 @@
 package graft.kb
 
+import graft.checkpoint.Materialize
 import graft.text.Normalize
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -44,12 +45,11 @@ object CandidateIndex {
     * keys keep the lookup join's shuffle rows narrow. */
   def build(kbCells: DataFrame, surfaceForms: DataFrame,
             dfCap: Long = 100000): DataFrame = {
-    // persisted: the count() action below and the explode both consume it
-    val names = entityNames(kbCells, surfaceForms)
+    // materialised: the count() action below and the explode both consume it
+    val names = Materialize(entityNames(kbCells, surfaceForms)
       .withColumn("tokens", array_distinct(split(col("nameNorm"), " ")))
       .withColumn("nNameTok", size(col("tokens")))
-      .withColumn("nameId", xxhash64(col("nameNorm")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .withColumn("nameId", xxhash64(col("nameNorm"))))
     val exploded = names.select(col("uri"), col("classId"), col("nameId"),
       col("nNameTok"), explode(col("tokens")).as("token"))
     val nNames = names.count().max(1L)

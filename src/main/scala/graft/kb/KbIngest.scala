@@ -1,5 +1,6 @@
 package graft.kb
 
+import graft.checkpoint.Materialize
 import graft.model.Dtype
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -81,7 +82,12 @@ object KbIngest {
     fromLongForm(spark, long, hierarchy)
   }
 
-  /** Core ingest over the long form — fully distributed. */
+  /** Core ingest over the long form — fully distributed. Its reused
+    * frames go through [[Materialize]]: localCheckpoint blocks on a local
+    * master, which the ContextCleaner reclaims with the frames. On a
+    * non-local master they are persisted, and they stay owned by the
+    * caller that holds the [[Ingested]], because one KB serves many
+    * corpora: ingest inside [[Materialize.scoped]] to release them. */
   def fromLongForm(spark: SparkSession, longIn: DataFrame,
                    hierarchy: Seq[(String, String)]): Ingested = {
     import spark.implicits._
@@ -95,19 +101,17 @@ object KbIngest {
     // The per-class schema comes from the header block (schema marker rows,
     // uri null) UNION the data rows' metadata: a property exists even when
     // every dump value is NULL (reference KnowledgeBase.java:195-223).
-    val schemaDim = long0
-      .select("className", "propUri", "propHeader", "xsdType").distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val schemaDim = Materialize(long0
+      .select("className", "propUri", "propHeader", "xsdType").distinct())
 
-    // Multi-value "{a|b}" split. Persisted: the prop-dim aggregation, the
-    // dedup window and the class-size count all consume it — without the
-    // persist each driver collect below re-runs the full upstream scan.
-    val long = long0
+    // Multi-value "{a|b}" split. Materialised: the prop-dim aggregation,
+    // the dedup window and the class-size count all consume it — without
+    // the barrier each driver collect below re-runs the full upstream scan.
+    val long = Materialize(long0
       .filter(col("uri").isNotNull)
       .withColumn("value", explode(split(regexp_replace(col("rawValue"), "[{}]", ""), "\\|")))
       .filter(col("value") =!= "" && col("value") =!= "NULL")
-      .drop("rawValue")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .drop("rawValue"))
 
     // Global property ids: deterministic (sorted URI), rdfs:label -> 0.
     // dtype: the DECLARED type from the dump's 3rd header row wins (the
@@ -178,7 +182,6 @@ object KbIngest {
         Window.partitionBy(col("uri"))
           .orderBy(col("classDepth").desc, col("className").desc)))
       .filter(col("className") === col("keepClass")).drop("keepClass", "classDepth")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     // Class ids: deterministic by name; superclasses with no data file are
     // still registered (KnowledgeBase.java:272-289). Participation comes
@@ -189,11 +192,11 @@ object KbIngest {
     val parent = hierarchy.toMap
     val classIdUdf = udf((c: String) => classIdMap(c))
 
+    // Lazy: the pipeline's one consumer is its kb_cells stage barrier.
     val cells = ranked
       .join(broadcast(props.select("propUri", "propId", "dtype")), "propUri")
       .withColumn("classId", classIdUdf(col("className")))
       .select("classId", "className", "uri", "propId", "value", "dtype")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     // Class sizes for the popularity prior use the PRE-DEDUP table sizes
     // (reference sizePerTable.put(tblIdx, tDBp.getSize()),

@@ -1,5 +1,6 @@
 package graft.onetoone
 
+import graft.checkpoint.Materialize
 import graft.eval.Evaluator
 import graft.kb.KbIngest
 import graft.model.Dtype
@@ -165,15 +166,15 @@ object SFMatchers {
     import spark.implicits._
     val keys = Seq("groupKey", "left", "right")
     val rows = seedSources.flatMap { case (seedName, seeds) =>
-      val cached = seeds.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val out = for { f <- formulas; m <- minSims; filt <- filters } yield {
-        val prf = Evaluator.evaluate(run(cached, f, m, filt).select(keys.map(col): _*),
-          gold.select(keys.map(col): _*), keys)
-        (seedName, f, m, filt, prf.tp, prf.predicted, prf.gold,
-          prf.precision, prf.recall, prf.f1)
+      Materialize.scoped { scope =>
+        val seedsOnce = Materialize(seeds)
+        try for { f <- formulas; m <- minSims; filt <- filters } yield {
+          val prf = Evaluator.evaluate(run(seedsOnce, f, m, filt).select(keys.map(col): _*),
+            gold.select(keys.map(col): _*), keys)
+          (seedName, f, m, filt, prf.tp, prf.predicted, prf.gold,
+            prf.precision, prf.recall, prf.f1)
+        } finally scope.release()
       }
-      cached.unpersist()
-      out
     }
     rows.toDF("seed", "formula", "min_sim", "filter", "tp", "n_predicted",
       "n_gold", "prec", "rec", "f1")

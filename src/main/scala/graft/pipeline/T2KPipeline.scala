@@ -7,7 +7,6 @@ import graft.triples.Triples
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /**
  * The full matching pipeline (reference T2KMatch.match(),
@@ -42,18 +41,13 @@ case class T2KConfig(
   * emission-parity mode and per-pair accounting. */
 case class T2KResult(instanceCorrs: DataFrame, schemaCorrs: DataFrame,
                      classCorrs: DataFrame, triples: DataFrame,
-                     schemaCombined: DataFrame,
-                     cached: Seq[DataFrame] = Nil) {
-  /** Unpersist the dims run() pinned. Only a non-local master registers
-    * frames here ([[graft.checkpoint.Materialize]] persists there, and
-    * CacheManager entries outlive the call — a sweep-style caller
-    * invoking run() per corpus would accumulate them for the life of the
-    * app otherwise); local-master checkpoint blocks are
-    * ContextCleaner-reclaimed and register nothing. Call once the result
-    * frames are written/collected. */
-  def release(): Unit = cached.foreach { df =>
-    try df.unpersist(blocking = false) catch { case _: Throwable => () }
-  }
+                     schemaCombined: DataFrame)(scope: Materialize.Scope) {
+  /** Unpersist every frame run() persisted: its stages, dims and index
+    * ([[Materialize]] persists only on a non-local master, and
+    * CacheManager entries outlive the call — a sweep-style caller invoking
+    * run() per corpus would accumulate them for the life of the app
+    * otherwise). Call once the result frames are written/collected. */
+  def release(): Unit = scope.release()
 }
 
 object T2KPipeline {
@@ -65,25 +59,17 @@ object T2KPipeline {
           .orderBy(col("score").desc, col(tieCol).asc)))
       .filter(col("rk") === 1).drop("rk")
 
-  /** [[Materialize]] a reused dim; a frame left persisted (non-local
-    * master) is pinned for [[T2KResult.release]]. */
-  private def cacheInto(pinned: collection.mutable.Buffer[DataFrame])
-                       (df: DataFrame): DataFrame = {
-    val m = Materialize(df)
-    if (m.storageLevel != StorageLevel.NONE) pinned += m
-    m
-  }
-
+  /** Every frame [[Materialize]] persists during the run (LocalCheckpointer
+    * stages, the reused dims, CandidateIndex's names, the exact candidate
+    * leg) belongs to the run's scope, which [[T2KResult.release]] frees.
+    * The frames of `kb` stay its caller's: one KB serves many corpora. */
   def run(docs: DataFrame, kb: KbIngest.Ingested, surfaceForms: DataFrame,
           hierarchy: Map[String, String],
           cfg: T2KConfig = T2KConfig(),
-          ckpt: Checkpointer = LocalCheckpointer): T2KResult = {
-    val pinned = collection.mutable.ArrayBuffer[DataFrame]()
-    val cache = cacheInto(pinned) _
-
+          ckpt: Checkpointer = LocalCheckpointer): T2KResult = Materialize.scoped { scope =>
     // --- decode + dims (S1) ---------------------------------------------
     val cells = ckpt("cells", SpanCodec.cells(docs))
-    val webCols = cache(SpanCodec.columns(docs)) // small dim: one row/column
+    val webCols = Materialize(SpanCodec.columns(docs)) // small dim: one row/column
     val keyCols = Keys.detect(webCols)
     val keyCorrs = Keys.keyCorrs(keyCols)
     // kb.cells feeds ~8 downstream joins: checkpoint once so each reuse
@@ -91,7 +77,7 @@ object T2KPipeline {
     val kbCells = ckpt("kb_cells", kb.cells)
     // from the header block (NOT from cell values): valueless properties
     // still exist for label matching and class refinement
-    val kbPropsByClass = cache(kb.propsByClass)
+    val kbPropsByClass = Materialize(kb.propsByClass)
     val propClasses = kbPropsByClass.select("classId", "propId").distinct()
 
     // --- candidate index (S5) -------------------------------------------
@@ -125,7 +111,7 @@ object T2KPipeline {
       rankByIdf = cfg.idfRanking, saltHotTokenDf = cfg.saltHotTokenDf)))
 
     // --- class decision (A1-A3) -----------------------------------------
-    val classes0 = cache(Classes.decide(selection, kb.classes,
+    val classes0 = Materialize(Classes.decide(selection, kb.classes,
       cfg.classConsensus, cfg.classFallbackTopK))
 
     // --- candidate refinement (class-filtered, th 0.7, fuzzy-on-miss) ---
@@ -136,7 +122,7 @@ object T2KPipeline {
 
     // --- first duplicate-based schema matching + class refinement -------
     val pairs0 = Schema.blockPairs(webCols, classes0, kbPropsByClass, cfg.kurtosisMin)
-    val dup0 = cache(Schema.duplicateBased(refined, cells, kbCells,
+    val dup0 = Materialize(Schema.duplicateBased(refined, cells, kbCells,
       pairs0, cfg.dupK, cfg.dupThreshold, cfg.voteThreshold,
       cfg.dupResultThreshold, Some(surfaceForms)))
     val schemaSeed = dup0.unionByName(keyCorrs.join(
@@ -147,10 +133,10 @@ object T2KPipeline {
     // candidate-filter set additionally admits superclasses (A4).
     val classes0Top1 = top1(classes0.withColumnRenamed("classScore", "score"),
       Seq("tableName"), "classId").withColumnRenamed("score", "classScore")
-    val classesBest = cache(classesRefined.unionByName(
+    val classesBest = Materialize(classesRefined.unionByName(
       classes0Top1.join(classesRefined.select("tableName").distinct(),
         Seq("tableName"), "left_anti")))
-    val classes = cache(
+    val classes = Materialize(
       Classes.withAncestors(classesBest, kb.classes, hierarchy))
     // No spread(): unlike the window-top-N stages, the semi-join's output
     // is shuffle-partitioned on (tableName, classId) and stays wide; the
@@ -161,7 +147,7 @@ object T2KPipeline {
       Classes.filterCandidates(refined, classes))
 
     // --- iteration loop (T2KMatch.java:356-405) -------------------------
-    val pairs = cache(
+    val pairs = Materialize(
       Schema.blockPairs(webCols, classes, kbPropsByClass, cfg.kurtosisMin))
     var schemaCorrs: DataFrame = null
     var instanceCands: DataFrame = candidates
@@ -191,9 +177,9 @@ object T2KPipeline {
     }
 
     // --- 1:1 top-1 (T2KMatch.java:411-413) ------------------------------
-    val instanceTop1 = cache(
+    val instanceTop1 = Materialize(
       top1(instanceCands, Seq("tableName", "rowNum"), "uri"))
-    val schemaTop1 = cache(
+    val schemaTop1 = Materialize(
       top1(schemaCorrs, Seq("tableName", "colIdx"), "propId"))
 
     // --- optional mapped-ratio table filter (A8) ------------------------
@@ -222,6 +208,6 @@ object T2KPipeline {
       kb.props, webCols)
     val triples = if (ckpt.durable) ckpt("triples", triplesDf) else triplesDf
 
-    T2KResult(instF, schemaF, classCorrs, triples, schemaCorrs, pinned.toSeq)
+    T2KResult(instF, schemaF, classCorrs, triples, schemaCorrs)(scope)
   }
 }

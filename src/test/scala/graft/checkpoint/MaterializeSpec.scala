@@ -1,6 +1,7 @@
 package graft.checkpoint
 
 import graft.SparkSpec
+import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -27,5 +28,33 @@ class MaterializeSpec extends SparkSpec {
       assert(m.storageLevel === StorageLevel.DISK_ONLY)
       assert(m.count() === 10)
     } finally m.unpersist(blocking = true)
+  }
+
+  test("scope: release() unpersists what the non-local branch persisted inside it") {
+    val cm = spark.sharedState.cacheManager
+    val frames = Materialize.scoped { scope =>
+      val fs = Seq(spark.range(0, 11).toDF("id"), spark.range(0, 12).toDF("id"))
+        .map(Materialize(_, StorageLevel.MEMORY_AND_DISK, local = false))
+      fs.foreach(f => assert(cm.lookupCachedData(f).isDefined))
+      scope.release()
+      fs
+    }
+    frames.foreach(f => assert(cm.lookupCachedData(f).isEmpty))
+  }
+
+  test("scope: a frame persisted outside every scope is not recorded") {
+    val cm = spark.sharedState.cacheManager
+    val outside = Materialize(spark.range(0, 13).toDF("id"),
+      StorageLevel.MEMORY_AND_DISK, local = false)
+    try {
+      val inside = Materialize.scoped { scope =>
+        val f = Materialize(spark.range(0, 14).toDF("id"),
+          StorageLevel.MEMORY_AND_DISK, local = false)
+        scope.release()
+        f
+      }
+      assert(cm.lookupCachedData(inside).isEmpty)
+      assert(cm.lookupCachedData(outside).isDefined)
+    } finally outside.unpersist(blocking = true)
   }
 }

@@ -59,4 +59,20 @@ class EvaluatorSpec extends SparkSpec {
     assert(r.getDouble(0) === 0.5)  // (1.0 + 0.0) / 2
     assert(r.getDouble(1) === 0.5)
   }
+
+  test("evaluate: one uncached aggregation, same PRF as the cached form") {
+    val keys = Seq("tableName", "rowNum")
+    val pred = Seq[(String, java.lang.Integer)](("A", 1), ("A", 1), ("A", 2),
+      (null, 3), (null, 3), ("B", null), ("C", 4)).toDF(keys: _*)
+    val gold = Seq[(String, java.lang.Integer)](("A", 1), ("A", 1), (null, 3),
+      ("B", null), ("C", 5), ("D", 6)).toDF(keys: _*)
+    spark.catalog.clearCache()
+    try {
+      val got = Evaluator.evaluate(pred, gold, keys)
+      assert(spark.sharedState.cacheManager.isEmpty)
+      // distinct rows per side; a null key is counted but never matches
+      assert(got === Evaluator.PRF(1, 5, 5))
+      assert(got === ReferenceExprs.evaluateCached(pred, gold, keys))
+    } finally spark.catalog.clearCache()
+  }
 }

@@ -59,13 +59,19 @@ class PipelineSpec extends SparkSpec {
     assert(best.head._2 === 0.999)
   }
 
-  test("release() is a safe no-op on local masters (no pinned persists)") {
-    // localCheckpoint blocks register nothing; the persist() fallback is
-    // cluster-only, so `cached` must stay empty here and release() must
-    // not disturb the result frames
-    assert(result.cached.isEmpty)
-    result.release()
-    assert(result.classCorrs.count() > 0)
+  test("release() leaves the CacheManager empty after KB ingest and a full run") {
+    // every barrier goes through Materialize: on a local master nothing
+    // reaches the CacheManager, and release() frees whatever a run left
+    spark.catalog.clearCache()
+    val freshKb = KbIngest.fromLodTables(spark, MicroCorpus.lodTables,
+      MicroCorpus.classHierarchy)
+    val r = T2KPipeline.run(MicroCorpus.docs(spark), freshKb,
+      MicroCorpus.surfaceFormsDf(spark), hierarchy)
+    Seq(r.instanceCorrs, r.schemaCorrs, r.classCorrs, r.triples, r.schemaCombined)
+      .foreach(df => assert(df.collect().nonEmpty))
+    r.release()
+    assert(spark.sharedState.cacheManager.isEmpty)
+    assert(r.classCorrs.count() > 0) // the result frames survive release()
   }
 
   test("class decision assigns the right KB class per table") {
