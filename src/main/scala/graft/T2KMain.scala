@@ -22,23 +22,6 @@ import org.apache.spark.sql.functions._
  */
 object T2KMain {
 
-  /** Offline candidate-index build: the exact checkpoint stages the
-    * pipeline's index path runs (same names, same config thresholds), so
-    * a later `T2KPipeline.run` against the same checkpoint dir resumes
-    * them without rebuilding. Standalone counterpart of the reference's
-    * DBpediaIndexer.main (DBpediaIndexer.java:133-159). */
-  def buildIndex(kb: graft.kb.KbIngest.Ingested,
-                 sf: org.apache.spark.sql.DataFrame, cfg: T2KConfig,
-                 ckpt: graft.checkpoint.Checkpointer): Unit = Materialize.scoped { scope =>
-    val kbCells = ckpt("kb_cells", kb.cells)
-    val index = ckpt("candidate_tokens",
-      graft.kb.CandidateIndex.build(kbCells, sf, cfg.tokenDfCap))
-    if (cfg.refinementEditDistance > 0)
-      ckpt("candidate_variants",
-        graft.pipeline.Candidates.variantIndex(index, cfg.variantTokenDfCap))
-    scope.release()
-  }
-
   def main(args: Array[String]): Unit = {
     val opts = args.sliding(2, 2).collect {
       case Array(k, v) if k.startsWith("--") => k.drop(2) -> v
@@ -63,7 +46,7 @@ object T2KMain {
     // reference's offline-Lucene-index workflow (one KB, many corpora).
     // No --web needed in this mode.
     if (opts.contains("build-index")) {
-      buildIndex(kb, sf, cfg,
+      T2KPipeline.index(kb, sf, cfg,
         new ParquetCheckpointer(spark, opts("build-index")))
       println(s"built candidate index in ${opts("build-index")}")
       spark.stop()

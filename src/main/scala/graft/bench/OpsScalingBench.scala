@@ -39,7 +39,7 @@ object OpsScalingBench {
       val t0 = System.nanoTime()
       val rows = body(spark)
       val secs = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(1500) // let the async listener bus drain
+      l.drain()
       OpRun(secs, rows, l.shufWriteB.get / 1048576.0, l.shufReadB.get / 1048576.0)
     } finally spark.stop()
   }

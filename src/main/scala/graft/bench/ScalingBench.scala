@@ -36,6 +36,26 @@ object ScalingBench {
         shufReadB.addAndGet(m.shuffleReadMetrics.totalBytesRead)
       }
     }
+    /** Wait for the async listener bus to deliver the run's task-end
+      * events (listenerBus.waitUntilEmpty is private[spark]): poll until
+      * EACH task counter separately is stable for TWO consecutive 500 ms
+      * intervals (a bus draining with >500 ms gaps between task-end
+      * events, or offsetting changes in a summed probe, would otherwise
+      * exit early and under-report), bounded at ~30 s. */
+    def drain(): Unit = {
+      var prevCpu = -1L
+      var prevRun = -1L
+      var quiet = 0
+      var tries = 0
+      while (tries < 60 && quiet < 2) {
+        if (cpuNs.get == prevCpu && runMs.get == prevRun) quiet += 1
+        else quiet = 0
+        prevCpu = cpuNs.get
+        prevRun = runMs.get
+        Thread.sleep(500)
+        tries += 1
+      }
+    }
     def cpuSec: Double = cpuNs.get / 1e9
     def runSec: Double = runMs.get / 1e3
     def cpuFraction: Double = if (runSec > 0) cpuSec / runSec else 0.0
@@ -62,24 +82,7 @@ object ScalingBench {
       result.triples.write.mode("overwrite")
         .parquet(s"$dataDir/out_triples_c$cores.parquet")
       val secs = (System.nanoTime() - t0) / 1e9
-      // Drain the async listener bus before reading the counters
-      // (listenerBus.waitUntilEmpty is private[spark]): poll until EACH
-      // task counter separately is stable for TWO consecutive 500 ms
-      // intervals (a bus draining with >500 ms gaps between task-end
-      // events, or offsetting changes in a summed probe, would otherwise
-      // exit early and under-report), bounded at ~30 s.
-      var prevCpu = -1L
-      var prevRun = -1L
-      var quiet = 0
-      var tries = 0
-      while (tries < 60 && quiet < 2) {
-        if (listener.cpuNs.get == prevCpu && listener.runMs.get == prevRun) quiet += 1
-        else quiet = 0
-        prevCpu = listener.cpuNs.get
-        prevRun = listener.runMs.get
-        Thread.sleep(500)
-        tries += 1
-      }
+      listener.drain()
       System.err.println(f"[cpu] cores=$cores taskCpu=${listener.cpuSec}%.1f s " +
         f"taskRun=${listener.runSec}%.1f s cpuFraction=${listener.cpuFraction}%.3f " +
         f"shufW=${listener.shufWriteB.get / 1048576.0}%.1f MB " +

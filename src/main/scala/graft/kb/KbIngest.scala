@@ -61,24 +61,9 @@ object KbIngest {
   def fromLodTables(spark: SparkSession, tables: Seq[LodTable],
                     hierarchy: Seq[(String, String)]): Ingested = {
     import spark.implicits._
-    // Long form: one record per (className, propUri, uri, rawValue);
-    // duplicate-propUri collapse via the shared label-twin rule
-    // (LodParse.keepColumns, KnowledgeBase.java:159-175).
-    val long = tables
-      .filter(t => t.propUris.lift(1).contains(Dtype.RdfsLabelUri))
-      .flatMap { t =>
-        val keepCols = LodParse.keepColumns(t.headers, t.propUris)
-        val schemaRows = (1 until t.propUris.length).filter(keepCols).map(c =>
-          (t.className, t.propUris(c), t.headers(c),
-            t.xsdTypes.lift(c).orNull, null: String, null: String))
-        val dataRows = for {
-          row <- t.rows
-          c <- 1 until t.propUris.length if keepCols(c)
-          v = row.lift(c).orNull if v != null && v != "NULL"
-        } yield (t.className, t.propUris(c), t.headers(c),
-          t.xsdTypes.lift(c).orNull, row.head, v)
-        schemaRows ++ dataRows
-      }.toDF("className", "propUri", "propHeader", "xsdType", "uri", "rawValue")
+    // the CLI path's long-form rule (LodParse.tableCells), over in-memory tables
+    val long = tables.flatMap(t => LodParse.tableCells(t.className, t.headers,
+      t.propUris, t.xsdTypes, t.rows.iterator)).toDF()
     fromLongForm(spark, long, hierarchy)
   }
 

@@ -102,16 +102,24 @@ object LodParse {
     }
   }
 
-  /** Parse one LOD class file's content into long-form cells; empty when
-    * the file does not participate (col 1 != rdfs:label). */
+  /** Parse one LOD class file's content into long-form cells: its first
+    * three rows are the header block, the rest go to [[tableCells]]. */
   def longForm(className: String, content: String): Iterator[LodCell] = {
-    val rows = parseCsv(content)
-    if (!rows.hasNext) return Iterator.empty
-    val headers = rows.next().toSeq
-    if (!rows.hasNext) return Iterator.empty
-    val propUris = rows.next().toSeq
+    val rows = parseCsv(content).map(_.toSeq)
+    def headerRow(): Seq[String] = if (rows.hasNext) rows.next() else Seq.empty
+    val headers = headerRow()
+    val propUris = headerRow()
+    val xsdTypes = headerRow()
+    tableCells(className, headers, propUris, xsdTypes, rows)
+  }
+
+  /** One LOD class table's long-form cells, from its header block and its
+    * remaining rows; empty when the table does not participate (col 1 !=
+    * rdfs:label). Rows whose col-0 URI is not http(s) or is owl#Thing (the
+    * range row of the header block) carry no entity and are skipped. */
+  def tableCells(className: String, headers: Seq[String], propUris: Seq[String],
+                 xsdTypes: Seq[String], rows: Iterator[Seq[String]]): Iterator[LodCell] = {
     if (!propUris.lift(1).contains(Dtype.RdfsLabelUri)) return Iterator.empty
-    val xsdTypes: Seq[String] = if (rows.hasNext) rows.next().toSeq else Seq.empty
     val keep = keepColumns(headers, propUris).toArray.sorted
     // schema marker rows (uri = null): a property EXISTS even when every
     // value in the dump is NULL — the reference's schema comes from the
@@ -119,10 +127,10 @@ object LodParse {
     val schemaRows = keep.iterator.map(c => LodCell(className, propUris(c),
       headers.lift(c).orNull, xsdTypes.lift(c).orNull, null, null))
     val dataRows = rows.flatMap { r =>
-      val uri = if (r.nonEmpty) r(0) else null
+      val uri = r.headOption.orNull
       if (uri == null || !uri.startsWith("http") || uri == OwlThing) Iterator.empty
       else keep.iterator.flatMap { c =>
-        val v = if (c < r.length) r(c) else null
+        val v = r.lift(c).orNull
         if (v == null || v.isEmpty || v == "NULL") Iterator.empty
         else Iterator.single(LodCell(className, propUris(c),
           headers.lift(c).orNull, xsdTypes.lift(c).orNull, uri, v))

@@ -263,19 +263,10 @@ object Dedup {
 
   /** The signature column for a non-empty `hs` array (shared by
     * [[minhashSignatures]] and [[bandedRows]]). */
-  private def sigCol(hsCol: Column, numHashes: Int): Column = {
+  private[ops] def sigCol(hsCol: Column, numHashes: Int): Column = {
     val f = udf((hs: Seq[Long]) => sigKernel(hs, numHashes))
     f(hsCol)
   }
-
-  /** Expression-tree signature (the kernel's semantic definition) — kept
-    * for the parity spec gating [[sigKernel]] bit-equality. */
-  private[ops] def sigExprCol(hsCol: Column, numHashes: Int): Column =
-    transform(sequence(lit(0), lit(numHashes - 1)),
-      i => array_min(transform(hsCol, h => xxhash64(h, i))))
-
-  private[ops] def sigKernelCol(hsCol: Column, numHashes: Int): Column =
-    sigCol(hsCol, numHashes)
 
   /** MinHash signature. Each token is string-hashed ONCE (xxhash64); the
     * `numHashes` permutations derive from that 8-byte value

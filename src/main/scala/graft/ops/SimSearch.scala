@@ -120,15 +120,6 @@ object SimSearch {
     f(vec.cast("array<double>"))
   }
 
-  /** Drop buckets above `cap` members (same rationale as Dedup.capBuckets:
-    * a degenerate bucket turns the bucket join quadratic). */
-  private def capBuckets(df: DataFrame, keys: Seq[String], cap: Int): DataFrame = {
-    if (cap == Int.MaxValue) return df // uncapped: skip the size pass
-    val sizes = df.groupBy(keys.map(col): _*)
-      .agg(count(lit(1)).as("_bsz")).filter(col("_bsz") <= cap).drop("_bsz")
-    df.join(sizes, keys)
-  }
-
   /** ANN via multi-table sign-bit LSH + exact re-rank. The bucket join
     * and the candidate distinct run on (id, tab, bucket) ROWS ONLY —
     * vectors re-attach to the distinct survivors for the exact re-rank
@@ -145,7 +136,7 @@ object SimSearch {
           posexplode(allBucketsCol(col(s"${side}v"), tables, nBits, dim))
             .as(Seq("tab", "bucket")))
     val qb = bucketed(q, "q")
-    val cb = capBuckets(bucketed(c, "c"), Seq("tab", "bucket"), bucketCap)
+    val cb = Dedup.capBuckets(bucketed(c, "c"), Seq("tab", "bucket"), bucketCap)
     val cand = qb.join(cb, Seq("tab", "bucket"))
       .filter(col("qid") =!= col("cid"))
       .select("qid", "cid").distinct()
@@ -301,7 +292,7 @@ object SimSearch {
   def ivfInvertedFile(corpus: DataFrame, idCol: String, vecCol: String,
                       cents: Array[Array[Double]],
                       cellCap: Int = 1000000): DataFrame =
-    capBuckets(
+    Dedup.capBuckets(
       corpus.select(col(idCol).as("cid"), col(vecCol).as("cv"))
         .withColumn("cell", nearestCell(col("cv").cast("array<double>"), cents)),
       Seq("cell"), cellCap)
@@ -353,7 +344,7 @@ object SimSearch {
     // payload through the capBuckets join, the self-join AND a distinct
     // over the payload columns (guide §8: the shuffle only decides which
     // ids meet; vectors re-attach to the distinct survivors once).
-    val buckets = capBuckets(
+    val buckets = Dedup.capBuckets(
       base.select(col("vid"),
         posexplode(allBucketsCol(col("vv"), tables, nBits, dim))
           .as(Seq("tab", "bucket"))),

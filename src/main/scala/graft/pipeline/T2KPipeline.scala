@@ -12,14 +12,14 @@ import org.apache.spark.sql.functions._
  * The full matching pipeline (reference T2KMatch.match(),
  * /root/reference .../t2k/match/T2KMatch.java:250-684; lifecycle documented
  * in SURVEY.md §3.1). Every stage is a lazily-planned DataFrame transform;
- * stage boundaries optionally checkpoint (resumable, with lineage).
+ * every barrier between stages is a named stage of the run's
+ * [[Checkpointer]] (resumable, with lineage, when it is durable).
  *
  * All reference thresholds land verbatim in [[T2KConfig]] (SURVEY.md §7.4).
  */
 case class T2KConfig(
   selectionCandidates: Int = 50, selectionThreshold: Double = 0.2,   // CandidateSelection.java:52-56
   refinementCandidates: Int = 100, refinementThreshold: Double = 0.7, // CandidateRefinement.java:56-60
-  refinementEditDistance: Int = 1,                                    // CandidateRefinement.java:58 (fuzzy lookup)
   classConsensus: Double = 0.5, classFallbackTopK: Int = 5,           // ClassDecision.java:104-127
   dupK: Int = 2, dupThreshold: Double = 0.5,                          // DuplicateBasedSchemaMatching.java:91-93
   voteThreshold: Double = 0.4,                                        // SchemaVotingRule threshold
@@ -32,7 +32,6 @@ case class T2KConfig(
   numIterations: Int = 1,                                             // T2KMatch.java:153-154
   tokenDfCap: Long = 100000, mappedRatio: Double = 0.0,
   variantTokenDfCap: Long = 2000,   // fuzzy deletion-variant guard; unit = DISTINCT TOKENS per deletion shape (round-3 change from row-level occurrences — far weaker pruning needed; revisit any tuning against the old unit)
-  idfRanking: Boolean = true,                                         // IDF-weighted selection cut (Lucene TF-IDF analog; measured +0.34pp T2D selection recall, no loss)
   saltHotTokenDf: Long = 0)                                           // >0: salt the candidate token join for tokens at/above this df
 
 /** `schemaCombined` is the final iteration's PRE-top-1 combined schema
@@ -59,38 +58,44 @@ object T2KPipeline {
           .orderBy(col("score").desc, col(tieCol).asc)))
       .filter(col("rk") === 1).drop("rk")
 
+  /** The index stages (S5): `kb_cells` -> `candidate_tokens` ->
+    * `candidate_variants`, returned in that order. A durable checkpoint
+    * dir built by `T2KMain --build-index` (the reference's offline
+    * DBpediaIndexer.main, DBpediaIndexer.java:133-159) is resumed by a
+    * later [[run]] against the same dir instead of rebuilt. */
+  def index(kb: KbIngest.Ingested, surfaceForms: DataFrame, cfg: T2KConfig,
+            ckpt: Checkpointer): (DataFrame, DataFrame, DataFrame) = {
+    // kb.cells feeds ~8 downstream joins: checkpoint once so each reuse
+    // references the materialised table, not the full ingest lineage.
+    val kbCells = ckpt("kb_cells", kb.cells)
+    val tokens = ckpt("candidate_tokens",
+      CandidateIndex.build(kbCells, surfaceForms, cfg.tokenDfCap))
+    // deletion-variant expansion: a pure function of the index — built and
+    // checkpointed ONCE here; rebuilding it inside each generate() call was
+    // the refinement stage's dominant cost (270 s on the T2D run)
+    val variants = ckpt("candidate_variants",
+      Candidates.variantIndex(tokens, cfg.variantTokenDfCap))
+    (kbCells, tokens, variants)
+  }
+
   /** Every frame [[Materialize]] persists during the run (LocalCheckpointer
-    * stages, the reused dims, CandidateIndex's names, the exact candidate
-    * leg) belongs to the run's scope, which [[T2KResult.release]] frees.
-    * The frames of `kb` stay its caller's: one KB serves many corpora. */
+    * stages, CandidateIndex's names, the exact candidate leg) belongs to
+    * the run's scope, which [[T2KResult.release]] frees. The frames of
+    * `kb` stay its caller's: one KB serves many corpora. */
   def run(docs: DataFrame, kb: KbIngest.Ingested, surfaceForms: DataFrame,
           hierarchy: Map[String, String],
           cfg: T2KConfig = T2KConfig(),
           ckpt: Checkpointer = LocalCheckpointer): T2KResult = Materialize.scoped { scope =>
     // --- decode + dims (S1) ---------------------------------------------
     val cells = ckpt("cells", SpanCodec.cells(docs))
-    val webCols = Materialize(SpanCodec.columns(docs)) // small dim: one row/column
+    val webCols = ckpt("web_cols", SpanCodec.columns(docs)) // small dim: one row/column
     val keyCols = Keys.detect(webCols)
     val keyCorrs = Keys.keyCorrs(keyCols)
-    // kb.cells feeds ~8 downstream joins: checkpoint once so each reuse
-    // references the materialised table, not the full ingest lineage.
-    val kbCells = ckpt("kb_cells", kb.cells)
+    val (kbCells, tokens, variants) = index(kb, surfaceForms, cfg, ckpt)
     // from the header block (NOT from cell values): valueless properties
     // still exist for label matching and class refinement
-    val kbPropsByClass = Materialize(kb.propsByClass)
+    val kbPropsByClass = ckpt("kb_props_by_class", kb.propsByClass)
     val propClasses = kbPropsByClass.select("classId", "propId").distinct()
-
-    // --- candidate index (S5) -------------------------------------------
-    val index = ckpt("candidate_tokens",
-      CandidateIndex.build(kbCells, surfaceForms, cfg.tokenDfCap))
-    // deletion-variant expansion: a pure function of the index — built and
-    // checkpointed ONCE here; rebuilding it inside each generate() call was
-    // the refinement stage's dominant cost (270 s on the T2D run)
-    val variants =
-      if (cfg.refinementEditDistance > 0)
-        Some(ckpt("candidate_variants",
-          Candidates.variantIndex(index, cfg.variantTokenDfCap)))
-      else None
 
     // window top-N stages coalesce to ~1 partition under AQE at small
     // corpus sizes, serialising every downstream task (manifest evidence:
@@ -106,23 +111,27 @@ object T2KPipeline {
     // --- candidate selection (B1 + R1/R2) -------------------------------
     // checkpointed: consumed by the class decision AND as the refinement
     // pass's exact leg (refineFromSelection) — the token join runs ONCE.
+    // IDF-weighted top-N cut: the Lucene TF-IDF analog (measured +0.34pp
+    // T2D selection recall, no loss).
     val selection = ckpt("candidates_selected", spread(Candidates.generate(
-      cells, keyCols, index, cfg.selectionCandidates, cfg.selectionThreshold,
-      rankByIdf = cfg.idfRanking, saltHotTokenDf = cfg.saltHotTokenDf)))
+      cells, keyCols, tokens, cfg.selectionCandidates, cfg.selectionThreshold,
+      rankByIdf = true, saltHotTokenDf = cfg.saltHotTokenDf)))
 
     // --- class decision (A1-A3) -----------------------------------------
-    val classes0 = Materialize(Classes.decide(selection, kb.classes,
+    val classes0 = ckpt("classes_decided", Classes.decide(selection, kb.classes,
       cfg.classConsensus, cfg.classFallbackTopK))
 
     // --- candidate refinement (class-filtered, th 0.7, fuzzy-on-miss) ---
+    // fuzzy lookup at edit distance 1 (CandidateRefinement.java:58), the
+    // refineFromSelection default
     val refined = ckpt("candidates_refined", spread(
       Candidates.refineFromSelection(selection, classes0, cells, keyCols,
-        index, cfg.refinementCandidates, cfg.refinementThreshold,
-        cfg.refinementEditDistance, cfg.variantTokenDfCap, variants)))
+        tokens, cfg.refinementCandidates, cfg.refinementThreshold,
+        variantTokenDfCap = cfg.variantTokenDfCap, variants = Some(variants))))
 
     // --- first duplicate-based schema matching + class refinement -------
     val pairs0 = Schema.blockPairs(webCols, classes0, kbPropsByClass, cfg.kurtosisMin)
-    val dup0 = Materialize(Schema.duplicateBased(refined, cells, kbCells,
+    val dup0 = ckpt("schema_dup_seed", Schema.duplicateBased(refined, cells, kbCells,
       pairs0, cfg.dupK, cfg.dupThreshold, cfg.voteThreshold,
       cfg.dupResultThreshold, Some(surfaceForms)))
     val schemaSeed = dup0.unionByName(keyCorrs.join(
@@ -133,10 +142,10 @@ object T2KPipeline {
     // candidate-filter set additionally admits superclasses (A4).
     val classes0Top1 = top1(classes0.withColumnRenamed("classScore", "score"),
       Seq("tableName"), "classId").withColumnRenamed("score", "classScore")
-    val classesBest = Materialize(classesRefined.unionByName(
+    val classesBest = ckpt("classes_best", classesRefined.unionByName(
       classes0Top1.join(classesRefined.select("tableName").distinct(),
         Seq("tableName"), "left_anti")))
-    val classes = Materialize(
+    val classes = ckpt("classes_with_ancestors",
       Classes.withAncestors(classesBest, kb.classes, hierarchy))
     // No spread(): unlike the window-top-N stages, the semi-join's output
     // is shuffle-partitioned on (tableName, classId) and stays wide; the
@@ -147,7 +156,7 @@ object T2KPipeline {
       Classes.filterCandidates(refined, classes))
 
     // --- iteration loop (T2KMatch.java:356-405) -------------------------
-    val pairs = Materialize(
+    val pairs = ckpt("schema_pairs",
       Schema.blockPairs(webCols, classes, kbPropsByClass, cfg.kurtosisMin))
     var schemaCorrs: DataFrame = null
     var instanceCands: DataFrame = candidates
@@ -177,9 +186,9 @@ object T2KPipeline {
     }
 
     // --- 1:1 top-1 (T2KMatch.java:411-413) ------------------------------
-    val instanceTop1 = Materialize(
+    val instanceTop1 = ckpt("instance_top1",
       top1(instanceCands, Seq("tableName", "rowNum"), "uri"))
-    val schemaTop1 = Materialize(
+    val schemaTop1 = ckpt("schema_top1",
       top1(schemaCorrs, Seq("tableName", "colIdx"), "propId"))
 
     // --- optional mapped-ratio table filter (A8) ------------------------

@@ -7,7 +7,7 @@ import graft.pipeline.{T2KConfig, T2KPipeline}
 import java.nio.file.{Files, Paths}
 
 /**
- * `--build-index` workflow (T2KMain.buildIndex — the reference's offline
+ * `--build-index` workflow (T2KPipeline.index — the reference's offline
  * DBpediaIndexer.java:133-159): a prebuilt index checkpoint dir must be
  * CONSUMED by a later pipeline run, not rebuilt — the manifest appends a
  * line only when a stage actually runs, so each prebuilt stage must
@@ -21,7 +21,7 @@ class BuildIndexSpec extends SparkSpec {
       MicroCorpus.classHierarchy)
     val sf = MicroCorpus.surfaceFormsDf(spark)
 
-    graft.T2KMain.buildIndex(kb, sf, T2KConfig(),
+    T2KPipeline.index(kb, sf, T2KConfig(),
       new ParquetCheckpointer(spark, dir))
     val built = Files.readString(Paths.get(dir, "manifest.jsonl"))
     Seq("kb_cells", "candidate_tokens", "candidate_variants").foreach { s =>

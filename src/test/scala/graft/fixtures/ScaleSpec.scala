@@ -84,6 +84,12 @@ class ScaleSpec extends SparkSpec {
     val manifest = Files.readString(Paths.get(dir, "manifest.jsonl"))
     assert(manifest.contains("\"stage\":\"triples\"") &&
       manifest.contains("perPartitionRows"))
+    // the dims are durable stages too, so the resume below reuses them
+    Seq("web_cols", "kb_props_by_class", "classes_decided", "schema_dup_seed",
+      "classes_best", "classes_with_ancestors", "schema_pairs",
+      "instance_top1", "schema_top1").foreach { s =>
+      assert(manifest.contains("\"stage\":\"" + s + "\""), s"missing stage $s")
+    }
     // resume: a fresh checkpointer over the same dir must reuse stages
     val r2 = T2KPipeline.run(docs, kb2, sf2, ScaleGen.hierarchy(small).toMap,
       ckpt = new ParquetCheckpointer(spark, dir))

@@ -61,6 +61,16 @@ class KbIngestSpec extends SparkSpec {
     assert(gestern(KbIngest.RdfsLabelPropId) === "Gestern")
   }
 
+  test("in-memory tables follow the CLI rule: owl#Thing and non-http rows ingest no cell") {
+    val t1 = MicroCorpus.kbTable1
+    val t = t1.copy(rows = t1.rows ++ Seq(
+      Seq("http://www.w3.org/2002/07/owl#Thing", "Thing", "Nobody"),
+      Seq("URI", "label", "author")))
+    val kb2 = KbIngest.fromLodTables(spark, Seq(t), MicroCorpus.classHierarchy)
+    val uris = kb2.cells.select("uri").distinct().collect().map(_.getString(0)).toSet
+    assert(uris === t1.rows.map(_.head).toSet)
+  }
+
   test("most-specific-class dedup keeps deepest class") {
     // entity in both a class and its (shallower) superclass
     val t1 = MicroCorpus.kbTable1

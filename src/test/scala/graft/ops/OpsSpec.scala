@@ -301,8 +301,8 @@ class OpsSpec extends SparkSpec {
       .withColumn("hs", array_sort(transform(col("toks"), t => xxhash64(t))))
     for (n <- Seq(16, 64)) {
       val both = hashed.select(col("docId"),
-        Dedup.sigKernelCol(col("hs"), n).as("k"),
-        Dedup.sigExprCol(col("hs"), n).as("e")).collect()
+        Dedup.sigCol(col("hs"), n).as("k"),
+        ReferenceExprs.sigExprCol(col("hs"), n).as("e")).collect()
       assert(both.nonEmpty)
       both.foreach(r => assert(r.getSeq[Long](1) === r.getSeq[Long](2),
         s"doc ${r.getLong(0)} n=$n"))

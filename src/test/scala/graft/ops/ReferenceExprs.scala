@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Expression-tree reference forms of the per-row kernels in
-  * [[TextAnalysis]] and [[SimSearch]]: the semantic definitions the
+  * [[TextAnalysis]], [[SimSearch]] and [[Dedup]]: the semantic definitions the
   * kernels are parity-gated against in OpsSpec. The production paths use
   * the kernels (these HOF trees are CodegenFallback and dominated both
   * Catalyst planning and evaluation). */
@@ -89,4 +89,10 @@ object ReferenceExprs {
                      nProbe: Int): Column =
     transform(slice(array_sort(cellScores(vec, cents)), 1, nProbe),
       s => s.getField("cell"))
+
+  /** MinHash signature as a HOF tree over the token hashes `hs`
+    * ([[Dedup.sigKernel]]): permutation i is min over h of xxhash64(h, i). */
+  def sigExprCol(hsCol: Column, numHashes: Int): Column =
+    transform(sequence(lit(0), lit(numHashes - 1)),
+      i => array_min(transform(hsCol, h => xxhash64(h, i))))
 }

@@ -1,10 +1,12 @@
 package graft.pipeline
 
 import graft.SparkSpec
+import graft.checkpoint.{Checkpointer, LocalCheckpointer}
 import graft.eval.Evaluator
 import graft.fixtures.MicroCorpus
 import graft.kb.{CandidateIndex, KbIngest}
 import graft.model.SpanCodec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** End-to-end golden tests on the micro corpus (reference semantics from
@@ -72,6 +74,24 @@ class PipelineSpec extends SparkSpec {
     r.release()
     assert(spark.sharedState.cacheManager.isEmpty)
     assert(r.classCorrs.count() > 0) // the result frames survive release()
+  }
+
+  test("every pipeline barrier is a named checkpoint stage, in run order") {
+    val stages = collection.mutable.ArrayBuffer.empty[String]
+    val recording = new Checkpointer {
+      def apply(name: String, df: => DataFrame): DataFrame = {
+        stages += name
+        LocalCheckpointer(name, df)
+      }
+    }
+    T2KPipeline.run(docs, kb, sf, hierarchy, ckpt = recording).release()
+    // not durable: the final instance_cands and triples barriers are elided
+    assert(stages.toSeq === Seq("cells", "web_cols", "kb_cells",
+      "candidate_tokens", "candidate_variants", "kb_props_by_class",
+      "candidates_selected", "classes_decided", "candidates_refined",
+      "schema_dup_seed", "classes_best", "classes_with_ancestors",
+      "candidates_filtered", "schema_pairs", "schema_corrs_it0",
+      "instance_top1", "schema_top1"))
   }
 
   test("class decision assigns the right KB class per table") {
