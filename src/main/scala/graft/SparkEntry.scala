@@ -8,7 +8,7 @@ import graft.onetoone.{OneToOne, SimilarityFlooding}
 import graft.ops.{Dedup, Multimodal, SimSearch, TextAnalysis}
 import graft.pipeline.{Candidates, Classes, Keys, Schema, T2KPipeline}
 import graft.triples.Canonicalizer
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
@@ -87,11 +87,31 @@ object SparkEntry {
   }
 
   // ---- shared derivations (identical shapes mirrored in the oracle) -----
-  /** part-name token sets: the web-table key-value / entity-label proxy. */
-  private def partTokens(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "part").select(col("p_partkey").as("id"),
-      array_distinct(TextAnalysis.tokensCol(col("p_name"))).as("toks"))
-      .withColumn("n", size(col("toks")))
+  /** Candidate-lookup inputs over part-name entities (the web-table
+    * key-value / entity-label proxy): (cells, keyCols, index). Query rows
+    * are the parts with key < `maxKey`, key text `text` in column 0 of
+    * table "part"; the index holds every part name as one class-0 entity
+    * with its distinct token set. */
+  private def partLookup(s: SparkSession, dir: String, maxKey: Int,
+                         text: Column): (DataFrame, DataFrame, DataFrame) = {
+    val cells = t(s, dir, "part").filter(col("p_partkey") < maxKey)
+      .select(lit("part").as("tableName"),
+        col("p_partkey").cast("int").as("rowNum"), lit(0).as("colIdx"),
+        lit("text").as("kind"), text.as("text"),
+        lit(null).cast("string").as("mediaRef"))
+    val keyCols = s.createDataFrame(java.util.List.of[Row](Row("part", 0)),
+      StructType(Seq(StructField("tableName", StringType),
+        StructField("colIdx", IntegerType))))
+    val index = t(s, dir, "part")
+      .select(col("p_partkey").as("id"),
+        array_distinct(TextAnalysis.tokensCol(col("p_name"))).as("toks"))
+      .select(concat(lit("p"), lpad(col("id").cast("string"), 10, "0")).as("uri"),
+        lit(0).as("classId"),
+        xxhash64(concat_ws(" ", col("toks"))).as("nameId"),
+        size(col("toks")).as("nNameTok"), explode(col("toks")).as("token"))
+      .withColumn("idf", lit(1.0))
+    (cells, keyCols, index)
+  }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // S1/A: scan + hash aggregation with pushdown (TPC-H Q1 shape)
@@ -255,24 +275,7 @@ object SparkEntry {
     // scale); the index side stays complete — the realistic asymmetry
     // (rows << KB) of the actual pipeline.
     "q_candidates_topk" -> ((s, dir) => {
-      val pt = partTokens(s, dir)
-      val cells = t(s, dir, "part").filter(col("p_partkey") < 2000)
-        .select(lit("part").as("tableName"),
-        col("p_partkey").cast("int").as("rowNum"), lit(0).as("colIdx"),
-        lit("text").as("kind"), col("p_name").as("text"),
-        lit(null).cast("string").as("mediaRef"))
-      val keyCols = s.createDataFrame(java.util.List.of[org.apache.spark.sql.Row](
-        org.apache.spark.sql.Row("part", 0)),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("tableName", org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("colIdx", org.apache.spark.sql.types.IntegerType))))
-      val nNames = pt.count().max(1L)
-      val index = pt
-        .select(concat(lit("p"), lpad(col("id").cast("string"), 10, "0")).as("uri"),
-          lit(0).as("classId"),
-          xxhash64(concat_ws(" ", col("toks"))).as("nameId"),
-          col("n").as("nNameTok"), explode(col("toks")).as("token"))
-        .withColumn("idf", lit(1.0))
+      val (cells, keyCols, index) = partLookup(s, dir, 2000, col("p_name"))
       Candidates.generate(cells, keyCols, index, 5, 0.5)
         .select(col("rowNum").as("row_id"), col("uri"), col("score"))
     }),
@@ -281,39 +284,23 @@ object SparkEntry {
     // query key has its 3rd character deleted — the typo'd token still
     // links through the deletion-1 neighborhood join, scored
     // greatest(exact, 0.999·fuzzy). Oracle: DuckDB levenshtein join.
+    // Selection then refinement, as in the pipeline: the one-row class
+    // dim (part, 0) keeps every index row (all have class 0), so rows with
+    // an exact candidate keep their exact top-5 and the others get fuzzy
+    // candidates only. Serialized Materialize barriers, like the
+    // pipeline's `candidate_tokens` and `candidates_selected` stages: the
+    // index feeds selection, the variant expansion, the fuzzy join and the
+    // name dim, and the selection feeds both the hit-row split and the
+    // result union.
     "q_candidates_fuzzy" -> ((s, dir) => {
-      val pt = partTokens(s, dir)
-      val cells = t(s, dir, "part").filter(col("p_partkey") < 500)
-        .select(lit("part").as("tableName"),
-          col("p_partkey").cast("int").as("rowNum"), lit(0).as("colIdx"),
-          lit("text").as("kind"),
-          concat(substring(col("p_name"), 1, 2), substring(col("p_name"), 4, 1000)).as("text"),
-          lit(null).cast("string").as("mediaRef"))
-      val keyCols = s.createDataFrame(java.util.List.of[org.apache.spark.sql.Row](
-        org.apache.spark.sql.Row("part", 0)),
-        StructType(Seq(StructField("tableName", StringType),
-          StructField("colIdx", IntegerType))))
-      // The token index feeds THREE plan legs (exact join, fuzzy join,
-      // deletion-variant expansion): one serialized Materialize computes
-      // the scan+tokenize once, exactly like the pipeline's
-      // `candidate_tokens` checkpoint (T2KPipeline.scala).
-      val index = Materialize(pt
-        .select(concat(lit("p"), lpad(col("id").cast("string"), 10, "0")).as("uri"),
-          lit(0).as("classId"),
-          xxhash64(concat_ws(" ", col("toks"))).as("nameId"),
-          col("n").as("nNameTok"), explode(col("toks")).as("token")),
+      val (cells, keyCols, tokens) = partLookup(s, dir, 500,
+        concat(substring(col("p_name"), 1, 2), substring(col("p_name"), 4, 1000)))
+      val index = Materialize(tokens, StorageLevel.MEMORY_AND_DISK_SER)
+      val selection = Materialize(Candidates.generate(cells, keyCols, index, 5, 0.5),
         StorageLevel.MEMORY_AND_DISK_SER)
-      // Prebuilt variant index, mirroring the pipeline's checkpointed
-      // `candidate_variants` stage — passing variants=None rebuilt the
-      // expansion (index scan + df-count shuffle) inside every bench
-      // invocation (the round-3 bench regression). The cap applies at the
-      // DISTINCT-TOKEN level (deletion shapes shared by > 2000 distinct
-      // tokens), which never triggers on a realistic vocabulary — engine
-      // and the uncapped DuckDB levenshtein oracle agree at any SF.
-      val variants = Materialize(Candidates.variantIndex(index),
-        StorageLevel.MEMORY_AND_DISK_SER)
-      Candidates.generate(cells, keyCols, index, 5, 0.5, None, 1,
-        variants = Some(variants))
+      Candidates.refineFromSelection(selection,
+          keyCols.select(col("tableName"), lit(0).as("classId")), cells, keyCols,
+          index, Candidates.variantIndex(index), 5, 0.5)
         .select(col("rowNum").as("row_id"), col("uri"), col("score"))
     }),
 

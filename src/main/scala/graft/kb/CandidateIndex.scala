@@ -1,6 +1,5 @@
 package graft.kb
 
-import graft.checkpoint.Materialize
 import graft.text.Normalize
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -45,17 +44,23 @@ object CandidateIndex {
     * keys keep the lookup join's shuffle rows narrow. */
   def build(kbCells: DataFrame, surfaceForms: DataFrame,
             dfCap: Long = 100000): DataFrame = {
-    // materialised: the count() action below and the explode both consume it
-    val names = Materialize(entityNames(kbCells, surfaceForms)
+    val names = entityNames(kbCells, surfaceForms)
       .withColumn("tokens", array_distinct(split(col("nameNorm"), " ")))
       .withColumn("nNameTok", size(col("tokens")))
-      .withColumn("nameId", xxhash64(col("nameNorm"))))
+      .withColumn("nameId", xxhash64(col("nameNorm")))
     val exploded = names.select(col("uri"), col("classId"), col("nameId"),
-      col("nNameTok"), explode(col("tokens")).as("token"))
-    val nNames = names.count().max(1L)
+      col("nNameTok"), posexplode(col("tokens")).as(Seq("pos", "token")))
+    // The name count is a one-row aggregate inside this query: no driver
+    // count job and no barrier on `names`. Every name has exactly one
+    // token at position 0 (a normalised name is non-empty), so counting
+    // those reads the same plan, and the same shuffle, as the token rows.
+    val nNames = exploded.filter(col("pos") === 0)
+      .agg(greatest(count(lit(1)), lit(1L)).as("nNames"))
     val tokenDf = exploded.groupBy("token").agg(count(lit(1)).as("df"))
       .filter(col("df") <= dfCap)
-      .withColumn("idf", log(lit(nNames.toDouble + 1.0) / col("df")))
+      .crossJoin(broadcast(nNames))
+      .withColumn("idf", log((col("nNames").cast("double") + 1.0) / col("df")))
+      .drop("nNames")
     exploded.join(tokenDf, "token")
       .select("token", "idf", "uri", "classId", "nameId", "nNameTok")
   }

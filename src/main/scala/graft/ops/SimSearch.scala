@@ -129,8 +129,9 @@ object SimSearch {
   def lshTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
               vecCol: String, k: Int, tables: Int = 8, nBits: Int = 12,
               dim: Int = 64, bucketCap: Int = 100000): DataFrame = {
-    val q = Materialize(queries.select(col(idCol).as("qid"), col(vecCol).as("qv")))
-    val c = Materialize(corpus.select(col(idCol).as("cid"), col(vecCol).as("cv")))
+    // distinct: a repeated input row must not multiply the output rows
+    val q = Materialize(queries.select(col(idCol).as("qid"), col(vecCol).as("qv")).distinct())
+    val c = Materialize(corpus.select(col(idCol).as("cid"), col(vecCol).as("cv")).distinct())
     def bucketed(df: DataFrame, side: String): DataFrame =
       df.select(col(s"${side}id"),
           posexplode(allBucketsCol(col(s"${side}v"), tables, nBits, dim))
@@ -337,8 +338,9 @@ object SimSearch {
   def cosineNearDupPairs(vectors: DataFrame, idCol: String, vecCol: String,
                          threshold: Double, tables: Int = 8, nBits: Int = 12,
                          dim: Int = 64, bucketCap: Int = 100000): DataFrame = {
-    // base feeds the bucket pass and both verify joins: scan/build once
-    val base = Materialize(vectors.select(col(idCol).as("vid"), col(vecCol).as("vv")))
+    // base feeds the bucket pass and both verify joins: scan/build once;
+    // distinct, so a repeated input row does not multiply the pairs
+    val base = Materialize(vectors.select(col(idCol).as("vid"), col(vecCol).as("vv")).distinct())
     // The bucket self-join and the pair distinct run on NARROW
     // (vid, tab, bucket) rows — the previous shape carried the vector
     // payload through the capBuckets join, the self-join AND a distinct

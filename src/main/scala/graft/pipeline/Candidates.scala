@@ -1,11 +1,9 @@
 package graft.pipeline
 
-import graft.checkpoint.Materialize
 import graft.text.Normalize
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /**
  * Candidate generation / selection / refinement (SURVEY.md §2.2 B1-B2,
@@ -23,11 +21,15 @@ import org.apache.spark.storage.StorageLevel
  * UDF, the whole path is joins + hash aggregation inside whole-stage
  * codegen. R2's "max over surface forms" is the final max() per (row, uri).
  *
+ * Two lookups, as in the reference: [[generate]] is selection (exact
+ * tokens, edit distance 0) and [[refineFromSelection]] is refinement
+ * (edit distance 1, class-filtered), derived from the selection output.
+ *
  * Scale notes: the token join is the engine's biggest shuffle; the index
  * side drops stop tokens (CandidateIndex.dfCap), and candidates per row are
- * bounded by a window top-N so downstream fan-out is capped. The optional
- * class filter (refinement) is applied BEFORE the aggregation so pruned
- * classes never reach the shuffle.
+ * bounded by a window top-N so downstream fan-out is capped. Refinement's
+ * class filter is applied BEFORE the fuzzy aggregation so pruned classes
+ * never reach the shuffle.
  */
 object Candidates {
 
@@ -65,8 +67,7 @@ object Candidates {
     * shorter than `minLen` are not expanded (they only match exactly),
     * bounding the fan-out the way Lucene's fuzzy rewrite effectively does
     * on short terms. Pure column expression (stays in codegen). */
-  private def deletions(token: org.apache.spark.sql.Column,
-                        minLen: Int = 4): org.apache.spark.sql.Column =
+  private def deletions(token: Column, minLen: Int = 4): Column =
     when(length(token) < minLen, array().cast("array<string>")).otherwise(
       array_distinct(transform(sequence(lit(0), length(token) - 1),
         i => concat(token.substr(lit(1), i),
@@ -75,7 +76,7 @@ object Candidates {
   /**
    * Deletion-variant expansion of the index's DISTINCT TOKENS — a pure
    * function of the KB, built ONCE (and checkpointed next to
-   * `candidate_tokens`) instead of re-expanded inside every `generate`
+   * `candidate_tokens`) instead of re-expanded inside every refinement
    * call. Token-level, not row-level: the ED-1 neighborhood of a Zipfian
    * corpus is bounded by |vocabulary|, so expanding VOCABULARY entries
    * (and equi-joining rows back through the verified token pairs) keeps
@@ -99,21 +100,6 @@ object Candidates {
     self.unionByName(del0.join(delDf, "variant"))
   }
 
-  /**
-   * Generate scored candidates:
-   * (tableName, rowNum, uri, classId, score) with score = max over entity
-   * names of tokenJaccard(keyValue, name); top `numCandidates` per row with
-   * score >= simThreshold. `classesPerTable` (tableName, classId) filters
-   * the index side when present (refinement pass).
-   *
-   * `maxEditDistance = 1` (refinement parity: CandidateRefinement.java:57-60,
-   * per-token `~1` fuzziness KeyIndexLookup.java:112-145) joins key tokens
-   * to index tokens through deletion-1 neighborhoods and scores
-   * greatest(exactJaccard, 0.999 × fuzzyJaccard): the reference retrieves
-   * fuzzily and re-scores with exact WebJaccard, so exact matches must
-   * always outrank typo matches, but a typo'd key cell whose tokens are
-   * all within edit distance 1 still clears the refinement threshold.
-   */
   /** Exact leg: Jaccard per (row, candidate name) from shared-token
     * counts. Names are pre-hashed 64-bit ids (CandidateIndex) — the
     * aggregation only needs name identity. With `withIdf`, also carries
@@ -133,7 +119,6 @@ object Candidates {
     * re-scores the retrieved name itself); measured output-identical on
     * the T2D selection (same rows, same gold coverage). */
   private def exactPerName(kt: DataFrame, candidateTokens: DataFrame,
-                           classesPerTable: Option[DataFrame],
                            withIdf: Boolean,
                            saltHotTokenDf: Long,
                            simThreshold: Double): DataFrame = {
@@ -152,19 +137,11 @@ object Candidates {
     // Default off: CandidateIndex.dfCap already drops stop tokens and AQE
     // splits moderate skew; this is the guard for a corpus where even the
     // capped df concentrates in one executor's memory.
-    val hits0 =
+    val hits =
       if (saltHotTokenDf > 0L)
         graft.util.Salt.skewSplitJoin(idx, kt, "token", 8,
           saltHotTokenDf, Seq("nameId"))
       else kt.join(idx, "token")
-    // No broadcast hint: classesPerTable is O(#tables) rows — at
-    // millions of tables that's a multi-GB driver broadcast. AQE
-    // decides; the left-semi is fine as a shuffle. `cpt` arrives
-    // pre-encoded as (tableId, classId).
-    val hits = classesPerTable match {
-      case Some(cpt) => hits0.join(cpt, Seq("tableId", "classId"), "left_semi")
-      case None => hits0
-    }
     val aggs =
       if (withIdf) Seq(count(lit(1)).as("shared"), sum(col("idf")).as("idfSum"))
       else Seq(count(lit(1)).as("shared"))
@@ -178,18 +155,19 @@ object Candidates {
     val nameDim = candidateTokens
       .select("nameId", "classId", "uri").distinct()
     val outCols = Seq(col("tableId"), col("rowNum"), col("uri"),
-      col("classId"), col("nameId"), col("nNameTok"), col("nKeyTok"),
-      col("jaccard")) ++ (if (withIdf) Seq(col("idfSum")) else Nil)
+      col("classId"), col("jaccard")) ++ (if (withIdf) Seq(col("idfSum")) else Nil)
     scored.join(nameDim, Seq("nameId", "classId")).select(outCols: _*)
   }
 
-  /** Fuzzy (ED <= maxEditDistance) scores per (row, candidate name) for
-    * the key-token rows in `kt` — the deletion-neighborhood join leg.
-    * The fuzzy intersection is bounded by BOTH sides: countDistinct of
-    * key tokens alone can exceed the matched index tokens (two key tokens
-    * hitting one index token), pushing jaccardFuzzy past 1.0 and above a
-    * true exact match. ED is verified with levenshtein (the neighborhood
-    * intersection alone admits distance-2 pairs).
+  /** Fuzzy (edit distance 1) scores per (row, candidate name) for the
+    * key-token rows in `kt` — the deletion-neighborhood join leg, with the
+    * index side restricted to each table's classes `cpt` (tableId,
+    * classId). The fuzzy intersection is bounded by BOTH sides:
+    * countDistinct of key tokens alone can exceed the matched index tokens
+    * (two key tokens hitting one index token), pushing jaccardFuzzy past
+    * 1.0 and above a true exact match. The distance is verified with
+    * levenshtein (the neighborhood intersection alone admits distance-2
+    * pairs); the deletion neighborhood finds no pair beyond distance 1.
     *
     * Shuffle shape: the two countDistinct aggregates force a 3x expand,
     * so the aggregation runs on NARROW keys — (tableId, rowNum,
@@ -202,37 +180,30 @@ object Candidates {
     * the sf0.1 bench leg (3.4 s -> 1.3 s for the aggregation, and the
     * survivors entering the dim join drop from 1.79M to 77k). */
   private def fuzzyPerName(kt: DataFrame, candidateTokens: DataFrame,
-                           classesPerTable: Option[DataFrame],
-                           maxEditDistance: Int, variantTokenDfCap: Long,
-                           variants: Option[DataFrame],
+                           cpt: DataFrame, variants: DataFrame,
                            simThreshold: Double): DataFrame = {
-    // 1) ED pairs at the DISTINCT-TOKEN level: key vocabulary x index
-    // vocabulary through the shared deletion neighborhood, levenshtein-
-    // verified (the neighborhood intersection alone admits distance-2
-    // pairs). Bounded by vocabulary sizes, not corpus size.
+    // 1) distance-1 pairs at the DISTINCT-TOKEN level: key vocabulary x
+    // index vocabulary (`variants`, the prebuilt [[variantIndex]]) through
+    // the shared deletion neighborhood, levenshtein-verified. Bounded by
+    // vocabulary sizes, not corpus size.
     val kTok = kt.select(col("token")).distinct()
       .select(col("token").as("keyToken"),
         explode(concat(array(col("token")), deletions(col("token")))).as("variant"))
-    // index side: prebuilt (checkpointed) when the caller has one — the
-    // expansion is a pure function of the KB, so rebuilding it per call
-    // wastes a full index scan + df-count shuffle every time.
-    val idxv = variants.getOrElse(variantIndex(candidateTokens, variantTokenDfCap))
-    val edPairs = kTok.join(idxv, "variant")
+    val edPairs = kTok.join(variants, "variant")
       .select("keyToken", "idxToken").distinct()
       .filter(col("keyToken") === col("idxToken") ||
-        levenshtein(col("keyToken"), col("idxToken")) <= maxEditDistance)
+        levenshtein(col("keyToken"), col("idxToken")) <= 1)
     // 2) rows join through the verified pairs — two equi-joins at the
     // exact leg's scale; the variant fan-out never touches row payloads.
     // uri stays OUT of the hot join/aggregation (narrow-key shape above).
-    val hits0 = kt.select(col("tableId"), col("rowNum"), col("nKeyTok"),
+    // No broadcast hint on the class filter: `cpt` is O(#tables) rows — at
+    // millions of tables that's a multi-GB driver broadcast. AQE decides.
+    val hits = kt.select(col("tableId"), col("rowNum"), col("nKeyTok"),
         col("token").as("keyToken"))
       .join(edPairs, "keyToken")
       .join(candidateTokens.select(col("classId"), col("nameId"),
         col("nNameTok"), col("token").as("idxToken")).distinct(), "idxToken")
-    val hits = classesPerTable match {
-      case Some(cpt) => hits0.join(cpt, Seq("tableId", "classId"), "left_semi")
-      case None => hits0
-    }
+      .join(cpt, Seq("tableId", "classId"), "left_semi")
     val scored = hits
       .groupBy(col("tableId"), col("rowNum"), col("classId"),
         col("nameId"), col("nNameTok"), col("nKeyTok"))
@@ -251,12 +222,32 @@ object Candidates {
       .select("nameId", "classId", "uri").distinct()
     scored.join(nameDim, Seq("nameId", "classId"))
       .select(col("tableId"), col("rowNum"), col("uri"), col("classId"),
-        col("nameId"), col("nNameTok"), col("nKeyTok"), col("jaccard"))
+        col("jaccard"))
+  }
+
+  /** Top `numCandidates` per (tableId, rowNum) by `ordering`, with table
+    * names re-attached on the survivors only. */
+  private def topN(perUri: DataFrame, keyCols: DataFrame, numCandidates: Int,
+                   ordering: Seq[Column]): DataFrame = {
+    val w = Window.partitionBy(col("tableId"), col("rowNum")).orderBy(ordering: _*)
+    perUri.withColumn("rk", row_number().over(w))
+      .filter(col("rk") <= numCandidates).drop("rk")
+      .join(tableDim(keyCols), "tableId")
+      .select("tableName", "rowNum", "uri", "classId", "score")
   }
 
   /**
-   * Refinement pass DERIVED FROM the selection output instead of a second
-   * full token join. This is a measured APPROXIMATION of the reference,
+   * Candidate refinement (reference lookup 2: top-100, th 0.7, edit
+   * distance 1, class-filtered — CandidateRefinement.java:56-60,
+   * KeyIndexLookup.java:112-145), DERIVED FROM the selection output
+   * instead of a second full token join. Scores are
+   * greatest(exactJaccard, 0.999 × fuzzyJaccard): the reference retrieves
+   * fuzzily and re-scores with exact WebJaccard, so exact matches always
+   * outrank typo matches, but a typo'd key cell whose tokens are all
+   * within edit distance 1 still clears the threshold. `variants` is the
+   * prebuilt [[variantIndex]] of `candidateTokens`.
+   *
+   * This is a measured APPROXIMATION of the reference,
    * not an equivalence: the reference re-queries its index per row
    * (top-100, th 0.7, class-filtered, ~1 fuzzy terms appended to EVERY
    * query — CandidateRefinement.java:56-60, DBPediaInstanceIndex.java:
@@ -274,92 +265,50 @@ object Candidates {
    */
   def refineFromSelection(selection: DataFrame, classesPerTable: DataFrame,
                           cells: DataFrame, keyCols: DataFrame,
-                          candidateTokens: DataFrame,
-                          numCandidates: Int, simThreshold: Double,
-                          maxEditDistance: Int = 1, variantTokenDfCap: Long = 2000,
-                          variants: Option[DataFrame] = None): DataFrame = {
+                          candidateTokens: DataFrame, variants: DataFrame,
+                          numCandidates: Int, simThreshold: Double): DataFrame = {
     // Hot path runs on 8-byte tableIds (see tableDim); the checkpointed
     // selection and the class dim are encoded on entry, names re-attach
     // on the top-N survivors only.
     val cpt = classesPerTable
       .select(xxhash64(col("tableName")).as("tableId"), col("classId"))
-    val filtered = selection
+    val exactHits = selection
       .withColumn("tableId", xxhash64(col("tableName"))).drop("tableName")
       .join(cpt, Seq("tableId", "classId"), "left_semi")
-    val exactHits = filtered.filter(col("score") >= simThreshold)
-    val perUri =
-      if (maxEditDistance <= 0) exactHits
-      else {
-        val hitRows = exactHits.select("tableId", "rowNum").distinct()
-        val missKt = keyTokens(cells, keyCols)
-          .join(hitRows, Seq("tableId", "rowNum"), "left_anti")
-        val fuzzy = fuzzyPerName(missKt, candidateTokens, Some(cpt),
-          maxEditDistance, variantTokenDfCap, variants, simThreshold)
-          .groupBy(col("tableId"), col("rowNum"), col("uri"), col("classId"))
-          .agg(max(col("jaccard")).as("score"))
-          .filter(col("score") >= simThreshold)
-        exactHits.select("tableId", "rowNum", "uri", "classId", "score")
-          .unionByName(fuzzy)
-      }
-    val w = Window.partitionBy(col("tableId"), col("rowNum"))
-      .orderBy(col("score").desc, col("uri").asc)
-    perUri.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= numCandidates).drop("rk")
-      .join(tableDim(keyCols), "tableId")
-      .select("tableName", "rowNum", "uri", "classId", "score")
+      .filter(col("score") >= simThreshold)
+    // hit rows keep their exact candidates; the fuzzy leg runs only for
+    // the rows with none, so its cost follows the miss count
+    val hitRows = exactHits.select("tableId", "rowNum").distinct()
+    val missKt = keyTokens(cells, keyCols)
+      .join(hitRows, Seq("tableId", "rowNum"), "left_anti")
+    val fuzzy = fuzzyPerName(missKt, candidateTokens, cpt, variants, simThreshold)
+      .groupBy(col("tableId"), col("rowNum"), col("uri"), col("classId"))
+      .agg(max(col("jaccard")).as("score"))
+      .filter(col("score") >= simThreshold)
+    topN(exactHits.select("tableId", "rowNum", "uri", "classId", "score")
+        .unionByName(fuzzy),
+      keyCols, numCandidates, Seq(col("score").desc, col("uri").asc))
   }
 
+  /**
+   * Candidate selection (reference lookup 1: top-50, th 0.2, edit
+   * distance 0 — CandidateSelection.java:52-56):
+   * (tableName, rowNum, uri, classId, score) with score = max over entity
+   * names of tokenJaccard(keyValue, name); top `numCandidates` per row with
+   * score >= simThreshold. With `rankByIdf` the top-N cut orders by the
+   * IDF-weighted retrieval score (rare shared tokens beat stop-ish ones —
+   * Lucene TF-IDF parity, SURVEY §2.2 B2) while the threshold keeps R1's
+   * WebJaccard semantics; score stays Jaccard.
+   */
   def generate(cells: DataFrame, keyCols: DataFrame, candidateTokens: DataFrame,
                numCandidates: Int, simThreshold: Double,
-               classesPerTable: Option[DataFrame] = None,
-               maxEditDistance: Int = 0, variantTokenDfCap: Long = 2000,
-               variants: Option[DataFrame] = None,
                rankByIdf: Boolean = false,
                saltHotTokenDf: Long = 0L): DataFrame = {
-    val kt = keyTokens(cells, keyCols)
-    val cptEnc = classesPerTable.map(_
-      .select(xxhash64(col("tableName")).as("tableId"), col("classId")))
-    val perName =
-      if (maxEditDistance <= 0) {
-        exactPerName(kt, candidateTokens, cptEnc, rankByIdf,
-          saltHotTokenDf, simThreshold)
-      } else {
-        // Fuzzy-on-miss: the exact leg runs for ALL rows; the deletion-
-        // variant join runs ONLY for rows whose exact pass produced no
-        // candidate >= simThreshold (the reference queries fuzzily to
-        // recover rows the exact lookup loses — rows with an exact match
-        // above the threshold keep their exact candidate set). This keeps
-        // the expensive variant join proportional to the MISS count, not
-        // the corpus.
-        // The exact leg feeds both the miss-row filter and the result
-        // union: materialised once (graft.checkpoint.Materialize).
-        // SERIALIZED storage: the default deserialized blocks are ~10x the
-        // on-wire size and OOM'd a 32-thread 8g JVM on the T2D corpus
-        // while the per-name aggregation was still running alongside.
-        val exact = Materialize(exactPerName(kt, candidateTokens, cptEnc,
-            withIdf = false, saltHotTokenDf, simThreshold),
-          StorageLevel.MEMORY_AND_DISK_SER)
-        // exactPerName already applies the per-name threshold, so hit
-        // rows are simply the rows with ANY surviving exact candidate
-        val hitRows = exact.select("tableId", "rowNum").distinct()
-        val missKt = kt.join(hitRows, Seq("tableId", "rowNum"), "left_anti")
-        val fuzzy = fuzzyPerName(missKt, candidateTokens, cptEnc,
-          maxEditDistance, variantTokenDfCap, variants, simThreshold)
-        // union is exact-for-hit-rows ∪ fuzzy-for-miss-rows: the fuzzy leg
-        // re-derives every exact share of a miss row through self-variants,
-        // and its greatest() score dominates the exact leg's, so the
-        // per-uri max below resolves the overlap for miss rows.
-        exact.select("tableId", "rowNum", "uri", "classId", "nameId",
-            "nNameTok", "nKeyTok", "jaccard")
-          .unionByName(fuzzy.select("tableId", "rowNum", "uri", "classId",
-            "nameId", "nNameTok", "nKeyTok", "jaccard"))
-      }
-    // R2: max over {label} ∪ surface forms. With rankByIdf the top-N cut
-    // orders by the IDF-weighted retrieval score (rare shared tokens beat
-    // stop-ish ones — Lucene TF-IDF parity, SURVEY §2.2 B2) while the
-    // threshold keeps R1's WebJaccard semantics; score stays Jaccard.
+    val perName = exactPerName(keyTokens(cells, keyCols), candidateTokens,
+      rankByIdf, saltHotTokenDf, simThreshold)
+    // R2: max over {label} ∪ surface forms
     val uriAggs =
-      if (rankByIdf && maxEditDistance <= 0)
+      if (rankByIdf)
         Seq(max(col("jaccard")).as("score"), max(col("idfSum")).as("retrieval"))
       else Seq(max(col("jaccard")).as("score"))
     val perUri = perName
@@ -367,14 +316,8 @@ object Candidates {
       .agg(uriAggs.head, uriAggs.tail: _*)
       .filter(col("score") >= simThreshold)
     val ordering =
-      if (rankByIdf && maxEditDistance <= 0)
-        Seq(col("retrieval").desc, col("score").desc, col("uri").asc)
+      if (rankByIdf) Seq(col("retrieval").desc, col("score").desc, col("uri").asc)
       else Seq(col("score").desc, col("uri").asc)
-    val w = Window.partitionBy(col("tableId"), col("rowNum"))
-      .orderBy(ordering: _*)
-    perUri.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= numCandidates).drop("rk")
-      .join(tableDim(keyCols), "tableId")
-      .select("tableName", "rowNum", "uri", "classId", "score")
+    topN(perUri, keyCols, numCandidates, ordering)
   }
 }

@@ -78,10 +78,10 @@ object T2KPipeline {
     (kbCells, tokens, variants)
   }
 
-  /** Every frame [[Materialize]] persists during the run (LocalCheckpointer
-    * stages, CandidateIndex's names, the exact candidate leg) belongs to
-    * the run's scope, which [[T2KResult.release]] frees. The frames of
-    * `kb` stay its caller's: one KB serves many corpora. */
+  /** Every frame [[Materialize]] persists during the run (its
+    * LocalCheckpointer stages) belongs to the run's scope, which
+    * [[T2KResult.release]] frees. The frames of `kb` stay its caller's:
+    * one KB serves many corpora. */
   def run(docs: DataFrame, kb: KbIngest.Ingested, surfaceForms: DataFrame,
           hierarchy: Map[String, String],
           cfg: T2KConfig = T2KConfig(),
@@ -122,12 +122,10 @@ object T2KPipeline {
       cfg.classConsensus, cfg.classFallbackTopK))
 
     // --- candidate refinement (class-filtered, th 0.7, fuzzy-on-miss) ---
-    // fuzzy lookup at edit distance 1 (CandidateRefinement.java:58), the
-    // refineFromSelection default
+    // fuzzy lookup at edit distance 1 (CandidateRefinement.java:58)
     val refined = ckpt("candidates_refined", spread(
       Candidates.refineFromSelection(selection, classes0, cells, keyCols,
-        tokens, cfg.refinementCandidates, cfg.refinementThreshold,
-        variantTokenDfCap = cfg.variantTokenDfCap, variants = Some(variants))))
+        tokens, variants, cfg.refinementCandidates, cfg.refinementThreshold)))
 
     // --- first duplicate-based schema matching + class refinement -------
     val pairs0 = Schema.blockPairs(webCols, classes0, kbPropsByClass, cfg.kurtosisMin)

@@ -12,7 +12,7 @@ import java.util.regex.Pattern
  * t2k/match/data/SurfaceForms.java:184-187).
  *
  * Semantics: lowercase (root locale); decode common HTML escapes; strip
- * bracketed qualifiers "(...)" when requested; map every non-alphanumeric
+ * bracketed qualifiers "(...)"; map every non-alphanumeric
  * char to a space; collapse whitespace; trim; "null"/"" -> null.
  *
  * One implementation, [[normalise]]; the distributed form
@@ -33,19 +33,19 @@ object Normalize {
   private val Brackets = Pattern.compile("\\(.*?\\)")
   private val NonAlnum = Pattern.compile("[^a-z0-9]+")
 
-  /** Pure-Scala normalise. `removeBrackets` strips "(...)" qualifiers. */
-  def normalise(raw: String, removeBrackets: Boolean = true): String = {
+  /** Pure-Scala normalise; strips "(...)" qualifiers. */
+  def normalise(raw: String): String = {
     if (raw == null) return null
     var s = raw.toLowerCase(Locale.ROOT)
     HtmlEscapes.foreach { case (k, v) => s = s.replace(k, v) }
-    if (removeBrackets) s = Brackets.matcher(s).replaceAll(" ")
+    s = Brackets.matcher(s).replaceAll(" ")
     s = NonAlnum.matcher(s).replaceAll(" ").trim
     if (s.isEmpty || s == "null") null else s
   }
 
   /** Pure-Scala tokenise: normalise then split on whitespace. */
-  def tokenise(raw: String, removeBrackets: Boolean = true): Array[String] = {
-    val n = normalise(raw, removeBrackets)
+  def tokenise(raw: String): Array[String] = {
+    val n = normalise(raw)
     if (n == null) Array.empty else n.split(" ").filter(_.nonEmpty)
   }
 

@@ -292,6 +292,41 @@ class OpsSpec extends SparkSpec {
     assert(hits >= 3, s"ann=$ann exact=$exact")
   }
 
+  test("LSH ANN: a repeated input row gives the same output as the deduplicated input") {
+    val rnd = new scala.util.Random(7)
+    val base = Array.fill(8)(Array.fill(64)(rnd.nextFloat()))
+    val vecs = (0 until 64).map { i =>
+      val c = base(i % 8)
+      (i.toLong, c.map(x => x + (rnd.nextFloat() - 0.5f) * 0.05f))
+    }.toDF("vec_id", "embedding")
+    def topK(df: org.apache.spark.sql.DataFrame) =
+      SimSearch.lshTopK(df.filter($"vec_id" < 4), df, "vec_id", "embedding", 3,
+          tables = 8, nBits = 8).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSeq.sorted
+    val expected = topK(vecs)
+    assert(expected.nonEmpty)
+    // queries 0-3 and corpus rows 0-15 each appear twice
+    assert(topK(vecs.unionByName(vecs.filter($"vec_id" < 16))) === expected)
+  }
+
+  test("embedding LSH near-dup: a repeated input row gives the same pairs as the deduplicated input") {
+    val rnd = new scala.util.Random(11)
+    val base = (0 until 40).map(i => (i.toLong, Array.fill(64)(rnd.nextFloat() * 2 - 1)))
+    val planted = (0 until 20).map { i =>
+      (10000L + i, base(i)._2.map(x => x + (rnd.nextFloat() - 0.5f) * 0.02f))
+    }
+    val vecs = (base ++ planted).toDF("vec_id", "embedding")
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      SimSearch.cosineNearDupPairs(df, "vec_id", "embedding", 0.99).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+        .sortBy(p => (p._1, p._2))
+    val expected = pairs(vecs)
+    assert(expected.nonEmpty)
+    // the planted pairs' both sides appear twice
+    assert(pairs(vecs.unionByName(vecs.filter($"vec_id" < 10 || $"vec_id" >= 10000L))) ===
+      expected)
+  }
+
   test("minhash signature kernel is bit-identical to the expression tree") {
     // the one-pass UDF kernel replaced the CodegenFallback HOF tree for
     // DRAM reasons; the LSH oracle (q_minhash_lsh) recomputes signatures

@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 
@@ -52,12 +53,23 @@ class CandidatesSpec extends SparkSpec {
     assert(math.abs(out("u900") - 1.0 / 3.0) < 1e-12)
   }
 
+  /** Selection at `simThreshold`, then refinement at the same threshold
+    * against the class dim `classes` (tableName, classId) — the
+    * pipeline's two lookups on one fixture. */
+  private def refined(cells: DataFrame, index: DataFrame, simThreshold: Double,
+                      classes: DataFrame = Seq(("t", 0)).toDF("tableName", "classId"),
+                      numCandidates: Int = 100): DataFrame = {
+    val selection = Candidates.generate(cells, keyCols, index, numCandidates,
+      simThreshold)
+    Candidates.refineFromSelection(selection, classes, cells, keyCols, index,
+      Candidates.variantIndex(index), numCandidates, simThreshold)
+  }
+
   test("every uri of a shared name scores identically in the fuzzy leg") {
     val dupes = (1 to 7).map(i => (s"v$i", 0, "delta epsilon"))
     val index = indexOf(dupes: _*)
     // typo'd key: "delta epsilom" — ED-1 of epsilon; no exact hit at 0.5
-    val out = Candidates.generate(cellsOf(0 -> "delta epsilom"), keyCols, index,
-      numCandidates = 100, simThreshold = 0.5, maxEditDistance = 1)
+    val out = refined(cellsOf(0 -> "delta epsilom"), index, simThreshold = 0.5)
       .select($"uri", $"score").as[(String, Double)].collect().toMap
     assert(out.size === 7)
     // both tokens within ED 1 → sharedFuzzy=2, jaccardFuzzy=1.0, ×0.999
@@ -94,11 +106,30 @@ class CandidatesSpec extends SparkSpec {
   }
 
   test("class filter prunes before scoring") {
+    // row 0 hits exactly (its selection is class-filtered); row 1's typo
+    // misses at 0.4 and goes through the fuzzy leg, whose class filter
+    // runs before the per-name aggregation
     val index = indexOf(("a1", 1, "iota kappa"), ("a2", 2, "iota kappa"))
     val cpt = Seq(("t", 1)).toDF("tableName", "classId")
-    val out = Candidates.generate(cellsOf(0 -> "iota kappa"), keyCols, index,
-      numCandidates = 10, simThreshold = 0.4, classesPerTable = Some(cpt))
-      .select($"uri").as[String].collect().toSet
-    assert(out === Set("a1"))
+    val out = refined(cellsOf(0 -> "iota kappa", 1 -> "iota kappo"), index,
+        simThreshold = 0.4, classes = cpt, numCandidates = 10)
+      .select($"rowNum", $"uri").as[(Int, String)].collect()
+    assert(out.filter(_._1 == 0).map(_._2).toSet === Set("a1"))
+    assert(out.filter(_._1 == 1).map(_._2).toSet === Set("a1"))
+  }
+
+  test("refinement: a hit row keeps only its exact candidates, a miss row gets fuzzy ones") {
+    // row 0 "lambda sigma" matches n1 exactly; n2 "lambda sigmas" is its
+    // typo neighbour (edit distance 1) and must NOT join row 0's
+    // candidates. Row 1 "lambda sigmo" has no exact candidate >= 0.7 and
+    // gets n1 through the fuzzy leg, scored 0.999 (sigmas is 2 edits away).
+    val index = indexOf(("n1", 0, "lambda sigma"), ("n2", 0, "lambda sigmas"))
+    val out = refined(cellsOf(0 -> "lambda sigma", 1 -> "lambda sigmo"), index,
+        simThreshold = 0.7)
+      .select($"rowNum", $"uri", $"score").as[(Int, String, Double)].collect()
+    assert(out.filter(_._1 == 0).map(r => r._2 -> r._3).toMap === Map("n1" -> 1.0))
+    val miss = out.filter(_._1 == 1).map(r => r._2 -> r._3).toMap
+    assert(miss.keySet === Set("n1"))
+    assert(math.abs(miss("n1") - 0.999) < 1e-12)
   }
 }

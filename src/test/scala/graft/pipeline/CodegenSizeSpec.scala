@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.SparkSpec
+import graft.checkpoint.LocalCheckpointer
 import graft.fixtures.ScaleGen
 import graft.kb.KbIngest
 import graft.model.SpanCodec
@@ -29,8 +30,12 @@ class CodegenSizeSpec extends SparkSpec {
     val webCols = SpanCodec.columns(docs)
     val keyCols = Keys.detect(webCols)
     val pairs = Schema.blockPairs(webCols, result.classCorrs, kb.propsByClass)
+    val (_, tokens, variants) = T2KPipeline.index(kb, sf, T2KConfig(), LocalCheckpointer)
+    val selection = Candidates.generate(cells, keyCols, tokens, 50, 0.2)
     Map(
       "Candidates.keyTokens" -> Candidates.keyTokens(cells, keyCols),
+      "Candidates.refineFromSelection" -> Candidates.refineFromSelection(
+        selection, result.classCorrs, cells, keyCols, tokens, variants, 100, 0.7),
       "Schema.duplicateBased" -> Schema.duplicateBased(result.instanceCorrs,
         cells, kb.cells, pairs, surfaceForms = Some(sf)),
       "Identity.resolve" -> Identity.resolve(result.instanceCorrs,
@@ -39,7 +44,8 @@ class CodegenSizeSpec extends SparkSpec {
         result.schemaCorrs, cells, kb.cells, kb.props, webCols))
   }
 
-  for (name <- Seq("Candidates.keyTokens", "Schema.duplicateBased",
+  for (name <- Seq("Candidates.keyTokens", "Candidates.refineFromSelection",
+      "Schema.duplicateBased",
       "Identity.resolve", "Triples.generate"))
     test(s"$name: every generated method stays under the JIT limit") {
       val df = stages(name)

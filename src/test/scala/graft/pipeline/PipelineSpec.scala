@@ -49,11 +49,14 @@ class PipelineSpec extends SparkSpec {
       .toDF("tableName", "rowNum", "colIdx", "kind", "text", "mediaRef")
     val keyCols = Seq(("webtableX.csv", 0)).toDF("tableName", "colIdx")
     val index = CandidateIndex.build(kb.cells, sf)
-    // exact-token refinement (th 0.7) loses the typo'd key...
+    // exact-token selection (th 0.7) loses the typo'd key...
     val exact = Candidates.generate(cells, keyCols, index, 50, 0.7)
     assert(exact.count() === 0)
-    // ...the deletion-1 neighborhood join still links it
-    val fuzzy = Candidates.generate(cells, keyCols, index, 50, 0.7, None, 1)
+    // ...the refinement's deletion-1 neighborhood join still links it
+    // (class dim: every index class, so nothing is filtered out)
+    val classes = index.select(lit("webtableX.csv").as("tableName"), $"classId").distinct()
+    val fuzzy = Candidates.refineFromSelection(exact, classes, cells, keyCols,
+      index, Candidates.variantIndex(index), 50, 0.7)
     val best = fuzzy.orderBy($"score".desc, $"uri").select("uri", "score")
       .as[(String, Double)].collect()
     assert(best.nonEmpty &&

@@ -46,7 +46,9 @@ class PlanSpec extends SparkSpec {
     import spark.implicits._
     val classes = Seq(("webtable1.csv", 0), ("webtable2.csv", 1))
       .toDF("tableName", "classId")
-    val cands = Candidates.generate(cells, keyCols, index, 50, 0.2, Some(classes))
+    val selection = Candidates.generate(cells, keyCols, index, 50, 0.2)
+    val cands = Candidates.refineFromSelection(selection, classes, cells, keyCols,
+      index, Candidates.variantIndex(index), 50, 0.2)
     val plan = executedPlan(cands)
     assert(plan.contains("BroadcastHashJoin"), s"class filter not broadcast:\n$plan")
     assert(!plan.contains("CartesianProduct"), s"cartesian in candidate gen:\n$plan")
