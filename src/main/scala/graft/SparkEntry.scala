@@ -313,7 +313,7 @@ object SparkEntry {
         lit(1.0).as("score"))
       val classes = cands.select(col("classId")).distinct()
         .withColumn("classWeight", lit(0.0))
-      Classes.decide(cands, classes, 0.5, 5)
+      Classes.decide(cands, classes)
         .select(col("tableName").as("table_name"), col("classId").as("class_id"),
           col("classScore").as("class_score"))
     }),
@@ -332,7 +332,7 @@ object SparkEntry {
       val keyCorrs = o.select(col("o_orderstatus").as("tableName")).distinct()
         .select(col("tableName"), lit(0).as("colIdx"), lit(0).as("propId"),
           lit(1.0).as("score"))
-      Schema.combine(dup, label, keyCorrs, 0.8, 0.2, 0.03)
+      Schema.combine(dup, label, keyCorrs)
         .select(col("tableName").as("table_name"), col("colIdx").as("col_idx"),
           col("propId").as("prop_id"), round(col("score"), 4).as("score"))
     }),

@@ -46,8 +46,7 @@ object T2KMain {
     // reference's offline-Lucene-index workflow (one KB, many corpora).
     // No --web needed in this mode.
     if (opts.contains("build-index")) {
-      T2KPipeline.index(kb, sf, cfg,
-        new ParquetCheckpointer(spark, opts("build-index")))
+      T2KPipeline.index(kb, sf, new ParquetCheckpointer(spark, opts("build-index")))
       println(s"built candidate index in ${opts("build-index")}")
       spark.stop()
       return
@@ -349,8 +348,7 @@ object T2KMain {
         val label = graft.pipeline.Schema.labelBased(pairs, webCols, kb.props)
         val emptyDup = label.limit(0)
         val labelMatrix = Materialize(graft.pipeline.Schema.combine(
-            emptyDup, label, keyCorrs, 0.8, 0.2, 0.03)
-          .join(props, "propId"))
+            emptyDup, label, keyCorrs).join(props, "propId"))
         val labelSeeds = SFMatchers.pipelineMatrixSeeds(
           labelMatrix.select("tableName", "colIdx", "propId", "score"),
           webCols, kb.propsByClass, classesAnc)

@@ -13,11 +13,13 @@ import org.apache.spark.sql.functions._
  * tokens with IDF weights precomputed per token (SURVEY.md §2.2 B1/B2).
  *
  * Scale design: the index is a flat table bucketable by `token`; stop
- * tokens (document frequency above `dfCap`) are dropped — the same
+ * tokens (document frequency above `DfCap`) are dropped — the same
  * effect Lucene's IDF scoring has on them, and the guard that keeps the
  * candidate join from exploding on Zipfian token distributions.
  */
 object CandidateIndex {
+
+  private val DfCap = 100000L
 
   /** kbCells (long form) + surfaceForms(label, surfaceForm) ->
     * names(uri, classId, nameNorm, nameTokens). */
@@ -42,8 +44,7 @@ object CandidateIndex {
     * from shared-token counts in the lookup join. Names are carried as
     * 64-bit hashes — only name identity matters downstream, and hashed
     * keys keep the lookup join's shuffle rows narrow. */
-  def build(kbCells: DataFrame, surfaceForms: DataFrame,
-            dfCap: Long = 100000): DataFrame = {
+  def build(kbCells: DataFrame, surfaceForms: DataFrame): DataFrame = {
     val names = entityNames(kbCells, surfaceForms)
       .withColumn("tokens", array_distinct(split(col("nameNorm"), " ")))
       .withColumn("nNameTok", size(col("tokens")))
@@ -57,7 +58,7 @@ object CandidateIndex {
     val nNames = exploded.filter(col("pos") === 0)
       .agg(greatest(count(lit(1)), lit(1L)).as("nNames"))
     val tokenDf = exploded.groupBy("token").agg(count(lit(1)).as("df"))
-      .filter(col("df") <= dfCap)
+      .filter(col("df") <= DfCap)
       .crossJoin(broadcast(nNames))
       .withColumn("idf", log((col("nNames").cast("double") + 1.0) / col("df")))
       .drop("nNames")

@@ -32,16 +32,14 @@ case class LodTable(className: String, headers: Seq[String],
  *  - per-property value-majority dtype inference and per-class dims.
  *
  * Output tables (see FIXTURES.md §2): kb_cells (long form, one row per
- * (classId, uri, propId, value)), kb_rows (nested form), kb_props,
- * kb_classes. At cluster scale kb_cells/kb_rows are written partitioned by
- * classId (Zipfian class sizes — partition pruning + AQE skew handling).
+ * (classId, uri, propId, value)), kb_props, kb_classes. At cluster scale
+ * kb_cells is written partitioned by classId (Zipfian class sizes —
+ * partition pruning + AQE skew handling).
  */
 object KbIngest {
   val RdfsLabelPropId = 0
 
-  case class Ingested(cells: DataFrame, rows: DataFrame,
-                      props: DataFrame, classes: DataFrame,
-                      classDepth: Map[String, Int],
+  case class Ingested(cells: DataFrame, props: DataFrame, classes: DataFrame,
                       propsByClass: DataFrame)
 
   private val datePat = graft.util.SafeCast.datePat
@@ -197,9 +195,6 @@ object KbIngest {
         sz, 1.0 - sz.toDouble / maxSize)
     }.toDF("classId", "className", "superClass", "size", "classWeight")
 
-    val rows = cells.groupBy("classId", "className", "uri")
-      .agg(collect_list(struct(col("propId"), col("value"), col("dtype"))).as("cells"))
-
     // Per-class property ownership from the header block — includes
     // valueless properties, which value-derived dims would silently lose.
     val propsByClass = schemaDim.select("className", "propUri")
@@ -207,6 +202,6 @@ object KbIngest {
       .withColumn("classId", classIdUdf(col("className")))
       .select("classId", "propId", "dtype").distinct()
 
-    Ingested(cells, rows, props, classes, depthMap, propsByClass)
+    Ingested(cells, props, classes, propsByClass)
   }
 }

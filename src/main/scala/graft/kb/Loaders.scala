@@ -21,8 +21,6 @@ import org.apache.spark.sql.functions._
  * col0 being an entity URI, so no order dependence on the CSV split).
  */
 object Loaders {
-  private val OwlThing = "http://www.w3.org/2002/07/owl#Thing"
-
   private def stripExt(name: String): String =
     name.replaceAll("\\.csv(\\.gz)?$", "")
 

@@ -8,46 +8,9 @@ package graft.model
  * one header doc per table + one row doc per data row. Media spans carry
  * provenance only — invisible to matching, preserved verbatim (the per-row
  * span-sequence-equality invariant).
- *
- * Correspondences mirror the reference's scored edges
- * (WInte.r Correspondence, used at T2KMatch.java:279) with provenance
- * flattened into explicit columns instead of nested object graphs.
  */
 case class Span(kind: String, text: String, media_ref: String, offset: Int)
 case class Doc(doc_id: String, spans: Seq[Span])
-
-/** One decoded web-table cell. rowRef/colRef follow the reference id scheme
-  * "<table>~Row<k>" / "<table>~Col<j>" (WebTablesTest.java:37-50). */
-case class WebCell(tableName: String, rowNum: Int, colIdx: Int,
-                   kind: String, text: String, mediaRef: String)
-
-/** Per-column metadata: inferred type + stats used by blockers
-  * (kurtosis gate ClassAndTypeBasedSchemaBlocker.java:249-260; date range
-  * MatchableTableRowDateComparator.java:68-71). */
-case class WebColumn(tableName: String, colIdx: Int, header: String,
-                     dtype: String, kurtosis: Option[Double],
-                     minYear: Option[Int], maxYear: Option[Int],
-                     uniqueness: Double)
-
-/** KB row: values keyed by GLOBAL property id (eliminates the reference's
-  * propertyIndices translation maps, KnowledgeBase.java:191-223). */
-case class KbCell(propId: Int, value: String, dtype: String)
-case class KbRow(classId: Int, className: String, uri: String, cells: Seq[KbCell])
-case class KbProp(propId: Int, uri: String, header: String, dtype: String)
-case class KbClass(classId: Int, className: String, superClass: String,
-                   size: Long, classWeight: Double)
-
-case class InstanceCorr(tableName: String, rowNum: Int, uri: String,
-                        classId: Int, score: Double)
-case class SchemaCorr(tableName: String, colIdx: Int, propId: Int, score: Double)
-case class ClassCorr(tableName: String, classId: Int, className: String, score: Double)
-
-/** Extracted triple under the local-closed-world evaluation
-  * (reference t2k/match/data/ExtractedTriple.java:36-56). */
-case class Triple(subjectUri: String, predicateUri: String, objectValue: String,
-                  kbValue: String, isNew: Boolean, lcwaCorrect: Boolean,
-                  sourceTable: String, sourceRow: Int, sourceCol: Int,
-                  subjectScore: Double, predicateScore: Double)
 
 object Dtype {
   val String = "string"

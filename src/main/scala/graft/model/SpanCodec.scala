@@ -1,6 +1,6 @@
 package graft.model
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -95,6 +95,11 @@ object SpanCodec {
         col("kurtosis"), col("minYear"), col("maxYear"), col("uniqueness"),
         col("coverage"), col("avgLen"), col("digitFrac"))
   }
+
+  /** Year span of a [[columns]] row, 1.0 for a column without dates: the
+    * date comparator's range (MatchableTableRowDateComparator.java:68-71). */
+  val yearRange: Column =
+    coalesce((col("maxYear") - col("minYear")).cast("double"), lit(1.0))
 
   /** Re-encode cells back into the docs shape (for round-trip testing and
     * checkpoint materialisation). Spans sorted by original offset. */

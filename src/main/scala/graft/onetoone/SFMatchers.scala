@@ -3,7 +3,7 @@ package graft.onetoone
 import graft.checkpoint.Materialize
 import graft.eval.Evaluator
 import graft.kb.KbIngest
-import graft.model.Dtype
+import graft.model.{Dtype, SpanCodec}
 import graft.text.{Normalize, Similarity}
 import graft.util.Udfs
 import org.apache.spark.sql.DataFrame
@@ -63,8 +63,7 @@ object SFMatchers {
     val webVals = cells.filter(col("kind") === "text" && col("text").isNotNull)
       .select("tableName", "rowNum", "colIdx", "text")
     val colMeta = webCols
-      .withColumn("yearRange",
-        coalesce((col("maxYear") - col("minYear")).cast("double"), lit(1.0)))
+      .withColumn("yearRange", SpanCodec.yearRange)
       .select("tableName", "colIdx", "dtype", "yearRange")
     val kbVals0 = kbCells
       .select(col("uri"), col("propId"), col("value").as("kbValue"),

@@ -26,12 +26,15 @@ import org.apache.spark.sql.functions._
  * (edit distance 1, class-filtered), derived from the selection output.
  *
  * Scale notes: the token join is the engine's biggest shuffle; the index
- * side drops stop tokens (CandidateIndex.dfCap), and candidates per row are
+ * side drops stop tokens (CandidateIndex.DfCap), and candidates per row are
  * bounded by a window top-N so downstream fan-out is capped. Refinement's
  * class filter is applied BEFORE the fuzzy aggregation so pruned classes
  * never reach the shuffle.
  */
 object Candidates {
+
+  // Unit: DISTINCT index tokens per deletion shape (see variantIndex).
+  private val VariantTokenDfCap = 2000L
 
   /** Dictionary dim for re-attaching table names after the hot path:
     * (tableId = xxhash64(tableName), tableName), one row per table with a
@@ -82,21 +85,21 @@ object Candidates {
    * (and equi-joining rows back through the verified token pairs) keeps
    * the fuzzy leg's shuffle at the exact leg's scale — the row-level
    * expansion put every occurrence of a hot token through the variant
-   * join (165M-row blowups at sf0.1; the round-2 `variantTokenDfCap` silently
+   * join (165M-row blowups at sf0.1; the round-2 `VariantTokenDfCap` silently
    * dropped hot shapes to survive, diverging from the uncapped oracle).
    *
    * Self-variants are kept unconditionally; deletion variants shared by
-   * more than `variantTokenDfCap` DISTINCT tokens are dropped — at token
+   * more than `VariantTokenDfCap` DISTINCT tokens are dropped — at token
    * level the cap only triggers on degenerate vocabularies, so engine
    * and (uncapped) oracle agree at any realistic scale.
    */
-  def variantIndex(candidateTokens: DataFrame, variantTokenDfCap: Long = 2000): DataFrame = {
+  def variantIndex(candidateTokens: DataFrame): DataFrame = {
     val toks = candidateTokens.select(col("token").as("idxToken")).distinct()
     val self = toks.select(col("idxToken"), col("idxToken").as("variant"))
     val del0 = toks.select(col("idxToken"),
       explode(deletions(col("idxToken"))).as("variant"))
     val delDf = del0.groupBy("variant").agg(count(lit(1)).as("_df"))
-      .filter(col("_df") <= variantTokenDfCap).drop("_df")
+      .filter(col("_df") <= VariantTokenDfCap).drop("_df")
     self.unionByName(del0.join(delDf, "variant"))
   }
 
@@ -134,7 +137,7 @@ object Candidates {
     // Explicit hot-token salting (opt-in): tokens whose index-side df
     // reaches the threshold join through Salt.skewSplitJoin — the index
     // rows spread across 8 salted partitions instead of one straggler.
-    // Default off: CandidateIndex.dfCap already drops stop tokens and AQE
+    // Default off: CandidateIndex.DfCap already drops stop tokens and AQE
     // splits moderate skew; this is the guard for a corpus where even the
     // capped df concentrates in one executor's memory.
     val hits =

@@ -11,16 +11,18 @@ import org.apache.spark.sql.functions._
  */
 object Classes {
 
+  private val Consensus = 0.5   // ClassDecision.java:104-127
+  private val FallbackTopK = 5
+
   /**
    * A1+A2+A3: boost candidate scores by the class-popularity prior
    * (classWeight, KnowledgeBase.java:341-364), take top-1 per row, build
    * the per-table class distribution, normalise by the max count, keep
-   * classes >= `consensus` of the max — top-5 fallback when none survive
-   * (ClassDecision.java:104-127).
+   * classes >= `Consensus` of the max — top-`FallbackTopK` fallback when
+   * none survive (ClassDecision.java:104-127).
    * Returns classesPerTable(tableName, classId, classScore).
    */
-  def decide(candidates: DataFrame, kbClasses: DataFrame,
-             consensus: Double = 0.5, fallbackTopK: Int = 5): DataFrame = {
+  def decide(candidates: DataFrame, kbClasses: DataFrame): DataFrame = {
     val boosted = candidates
       .join(broadcast(kbClasses.select("classId", "classWeight")), "classId")
       .withColumn("boosted", col("score") + col("classWeight"))
@@ -36,9 +38,9 @@ object Classes {
       .withColumn("classScore", col("cnt").cast("double") / col("maxCnt"))
       .withColumn("rk", row_number().over(
         wTab.orderBy(col("cnt").desc, col("classId").asc)))
-      .withColumn("nKeep", sum(when(col("classScore") >= consensus, 1).otherwise(0)).over(wTab))
-    normed.filter(col("classScore") >= consensus ||
-        (col("nKeep") === 0 && col("rk") <= fallbackTopK))
+      .withColumn("nKeep", sum(when(col("classScore") >= Consensus, 1).otherwise(0)).over(wTab))
+    normed.filter(col("classScore") >= Consensus ||
+        (col("nKeep") === 0 && col("rk") <= FallbackTopK))
       .select(col("tableName"), col("classId"), col("classScore"))
   }
 

@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.kb.KbIngest
-import graft.model.Dtype
+import graft.model.{Dtype, SpanCodec}
 import graft.text.Similarity
 import graft.util.Udfs
 import org.apache.spark.sql.DataFrame
@@ -42,21 +42,22 @@ import org.apache.spark.sql.functions._
  */
 object Identity {
 
+  private val KeyWeight = 5.0        // DataTypeDependentRecordMatchingRule
+  private val Threshold = 0.1
+  private val ValueThreshold = 0.4   // IdentityResolution.java:77-96
+
   def resolve(candidates: DataFrame, schemaCorrs: DataFrame, keyCols: DataFrame,
-              cells: DataFrame, kbCells: DataFrame, webCols: DataFrame,
-              keyWeight: Double = 5.0, threshold: Double = 0.1,
-              valueThreshold: Double = 0.4): DataFrame = {
+              cells: DataFrame, kbCells: DataFrame, webCols: DataFrame): DataFrame = {
     // keyCols/colMeta are O(#tables) dims — no forced broadcast (AQE picks).
     val corrs = schemaCorrs
       .join(keyCols.withColumn("isKey", lit(true)),
         Seq("tableName", "colIdx"), "left")
       .withColumn("isKey", coalesce(col("isKey"), lit(false)))
-      .withColumn("w", when(col("isKey"), lit(keyWeight)).otherwise(col("score")))
+      .withColumn("w", when(col("isKey"), lit(KeyWeight)).otherwise(col("score")))
       .select(xxhash64(col("tableName")).as("tableId"), col("colIdx"),
         col("propId"), col("w"), col("isKey"))
     val colMeta = webCols
-      .withColumn("yearRange",
-        coalesce((col("maxYear") - col("minYear")).cast("double"), lit(1.0)))
+      .withColumn("yearRange", SpanCodec.yearRange)
       .select(xxhash64(col("tableName")).as("tableId"), col("colIdx"),
         col("dtype"), col("yearRange"))
     val webVals = cells.filter(col("kind") === "text")
@@ -99,11 +100,11 @@ object Identity {
         col("candScore"), col("colIdx"), col("w"), col("isKey"))
       .agg(max(col("rawSim")).as("sim0"))
       // key: 1/3 key comparator + 2/3 string comparator, always counted;
-      // non-key: drop non-comparable pairs, zero sims below valueThreshold.
+      // non-key: drop non-comparable pairs, zero sims below ValueThreshold.
       .filter(col("isKey") || col("sim0").isNotNull)
       .withColumn("sim", when(col("isKey"),
           col("candScore") / 3 + coalesce(col("sim0"), lit(0.0)) * 2 / 3)
-        .otherwise(when(col("sim0") >= valueThreshold, col("sim0")).otherwise(0.0)))
+        .otherwise(when(col("sim0") >= ValueThreshold, col("sim0")).otherwise(0.0)))
 
     // exact decimal sums (see Schema.duplicateBased): the weighted average
     // is a pure function of the correspondence set, bit-identical under
@@ -112,7 +113,7 @@ object Identity {
       .groupBy(col("tableId"), col("rowNum"), col("uriId"), col("classId"))
       .agg((sum((col("sim") * col("w")).cast("decimal(30,15)")).cast("double") /
         sum(col("w").cast("decimal(30,15)")).cast("double")).as("score"))
-      .filter(col("score") >= threshold)
+      .filter(col("score") >= Threshold)
     // re-attach the strings through the candidates frame (unique per
     // (table, row, uri) — the survivor set's own identity)
     scored.join(candidates

@@ -26,14 +26,14 @@ object Keys {
     * coverage factor (non-null fraction) keeps sparse columns from
     * winning: a mostly-empty column's few non-null values are trivially
     * unique (T2D tables pad with "&nbsp;", which decodes to null). */
-  def detect(webCols: DataFrame, minUniqueness: Double = 0.0): DataFrame = {
+  def detect(webCols: DataFrame): DataFrame = {
     val score = col("uniqueness") *
       (lit(1.0) - coalesce(col("digitFrac"), lit(0.0))) *
       coalesce(col("coverage"), lit(1.0))
     val isShort = coalesce(col("avgLen"), lit(0.0)) < 4.0
     val w = Window.partitionBy(col("tableName"))
       .orderBy(isShort.asc, score.desc, col("colIdx").asc)
-    webCols.filter(col("dtype") === "string" && col("uniqueness") >= minUniqueness)
+    webCols.filter(col("dtype") === "string")
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") === 1)
       .select(col("tableName"), col("colIdx"))

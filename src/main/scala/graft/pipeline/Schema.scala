@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.kb.KbIngest
-import graft.model.Dtype
+import graft.model.{Dtype, SpanCodec}
 import graft.text.{Normalize, Similarity}
 import graft.util.Udfs
 import org.apache.spark.sql.DataFrame
@@ -32,21 +32,29 @@ import org.apache.spark.sql.functions._
  */
 object Schema {
 
+  private val KurtosisMin = 2.0       // ClassAndTypeBasedSchemaBlocker.java:249-260
+  private val DupK = 2                // DuplicateBasedSchemaMatching.java:91-93
+  private val DupThreshold = 0.5
+  private val VoteThreshold = 0.4     // SchemaVotingRule threshold
+  private val WeightDup = 0.8         // CombineSchemaCorrespondences.java:80-121
+  private val WeightLabel = 0.2
+  private val CombineThreshold = 0.03
+  private val UpdateWeight = 0.5      // UpdateSchemaCorrespondences.java:53-75
+
   /**
    * B4: blocked column pairs
    * (tableName, colIdx, propId, classId, dtype, yearRange).
    * `kbPropsByClass` = distinct (classId, propId, dtype) from kb_cells.
    */
   def blockPairs(webCols: DataFrame, classesPerTable: DataFrame,
-                 kbPropsByClass: DataFrame, kurtosisMin: Double = 2.0): DataFrame = {
+                 kbPropsByClass: DataFrame): DataFrame = {
     webCols.filter(col("dtype") =!= "media")
       .join(classesPerTable.select("tableName", "classId"), "tableName")
       .join(kbPropsByClass.withColumnRenamed("dtype", "kbDtype"), Seq("classId"))
       .filter(col("dtype") === col("kbDtype"))
       .filter(col("dtype") =!= Dtype.Numeric ||
-        (col("kurtosis").isNotNull && col("kurtosis") >= kurtosisMin))
-      .withColumn("yearRange",
-        coalesce((col("maxYear") - col("minYear")).cast("double"), lit(1.0)))
+        (col("kurtosis").isNotNull && col("kurtosis") >= KurtosisMin))
+      .withColumn("yearRange", SpanCodec.yearRange)
       .select("tableName", "colIdx", "propId", "classId", "dtype", "yearRange")
       .distinct()
   }
@@ -68,45 +76,39 @@ object Schema {
       .otherwise(coalesce(strSim, lit(0.0)))
   }
 
+  /** R5 surface-form expansion: string KB values additionally compare
+    * against their surface forms; the later max-per-pair keeps the best
+    * (MatchableTableRowComparatorBasedOnSurfaceForms.java:34-127). */
+  def expandWithSurfaceForms(kbVals: DataFrame, surfaceForms: DataFrame): DataFrame = {
+    val alts = kbVals.join(
+        surfaceForms.select(Normalize.normaliseCol(col("label")).as("labelNorm"),
+          col("surfaceForm")),
+        Normalize.normaliseCol(col("kbValue")) === col("labelNorm"))
+      .select(col("uri"), col("propId"), col("surfaceForm").as("kbValue"))
+    kbVals.unionByName(alts)
+  }
+
   /**
    * Duplicate-based schema matching. `candidates` are instance corrs;
-   * top-`dupK` per row above `dupThreshold` act as duplicates; each
-   * (duplicate × blocked pair) with value sim >= `voteThreshold` votes
+   * top-`DupK` per row above `DupThreshold` act as duplicates; each
+   * (duplicate × blocked pair) with value sim >= `VoteThreshold` votes
    * sim × dupScore; score = sum(votes)/count(votes), kept above
    * `resultThreshold`. rdfs:label is never a vote target
    * (SchemaVotingRule.java:71-92).
    */
-  /** R5 surface-form expansion: string KB values additionally compare
-    * against their surface forms; the later max-per-pair keeps the best
-    * (MatchableTableRowComparatorBasedOnSurfaceForms.java:34-127). */
-  def expandWithSurfaceForms(kbVals: DataFrame, surfaceForms: Option[DataFrame]): DataFrame =
-    surfaceForms match {
-      case None => kbVals
-      case Some(sf) =>
-        val alts = kbVals.join(
-            sf.select(Normalize.normaliseCol(col("label")).as("labelNorm"),
-              col("surfaceForm")),
-            Normalize.normaliseCol(col("kbValue")) === col("labelNorm"))
-          .select(col("uri"), col("propId"), col("surfaceForm").as("kbValue"))
-        kbVals.unionByName(alts)
-    }
-
   def duplicateBased(candidates: DataFrame, cells: DataFrame, kbCells: DataFrame,
-                     pairs: DataFrame,
-                     dupK: Int = 2, dupThreshold: Double = 0.5,
-                     voteThreshold: Double = 0.4,
-                     resultThreshold: Double = 0.02,
-                     surfaceForms: Option[DataFrame] = None): DataFrame = {
-    // The top-dupK window keeps its STRING tie-break (score desc, uri asc
+                     pairs: DataFrame, resultThreshold: Double,
+                     surfaceForms: DataFrame): DataFrame = {
+    // The top-DupK window keeps its STRING tie-break (score desc, uri asc
     // — reference ordering); the ids enter only after it, so the heavy
     // joins and both vote aggregations below run on 8-byte tableId/uriId
     // instead of the table-name and ~50-char URI strings (same
     // dictionary-encoding + collision policy as the candidate path).
-    val dups = candidates.filter(col("score") >= dupThreshold)
+    val dups = candidates.filter(col("score") >= DupThreshold)
       .withColumn("rk", row_number().over(
         Window.partitionBy(col("tableName"), col("rowNum"))
           .orderBy(col("score").desc, col("uri").asc)))
-      .filter(col("rk") <= dupK)
+      .filter(col("rk") <= DupK)
       .select(xxhash64(col("tableName")).as("tableId"), col("rowNum"),
         xxhash64(col("uri")).as("uriId"), col("score").as("dupScore"))
     val webVals = cells.filter(col("kind") === "text")
@@ -131,7 +133,7 @@ object Schema {
       .groupBy(col("tableId"), col("rowNum"), col("uriId"), col("colIdx"),
         col("propId"), col("dupScore"))
       .agg(max(col("sim")).as("sim"))
-      .filter(col("sim") >= voteThreshold)
+      .filter(col("sim") >= VoteThreshold)
     // EXACT decimal accumulation: a double sum's value depends on the
     // nondeterministic partition/merge order (ulp drift that can flip
     // borderline thresholds downstream — measured when the shuffle keys
@@ -160,16 +162,14 @@ object Schema {
   }
 
   /** A6: combine 0.8·dup + 0.2·label, group-sum, threshold, append key corrs. */
-  def combine(dup: DataFrame, label: DataFrame, keyCorrs: DataFrame,
-              wDup: Double = 0.8, wLabel: Double = 0.2,
-              threshold: Double = 0.03): DataFrame = {
-    val merged = dup.withColumn("score", col("score") * wDup)
-      .unionByName(label.withColumn("score", col("score") * wLabel))
+  def combine(dup: DataFrame, label: DataFrame, keyCorrs: DataFrame): DataFrame = {
+    val merged = dup.withColumn("score", col("score") * WeightDup)
+      .unionByName(label.withColumn("score", col("score") * WeightLabel))
       .groupBy(col("tableName"), col("colIdx"), col("propId"))
       // exact sum (see duplicateBased): the 0.03 threshold below must not
       // depend on which union leg's partition merges first
       .agg(sum(col("score").cast("decimal(30,15)")).cast("double").as("score"))
-      .filter(col("score") >= threshold)
+      .filter(col("score") >= CombineThreshold)
     // key corrs win over any conflicting derived corr for the same column
     merged.join(keyCorrs.select("tableName", "colIdx"),
         Seq("tableName", "colIdx"), "left_anti")
@@ -178,8 +178,8 @@ object Schema {
 
   /** A7: iteration smoothing — 0.5·previous + 0.5·current. */
   def update(prev: DataFrame, cur: DataFrame): DataFrame =
-    prev.withColumn("score", col("score") * 0.5)
-      .unionByName(cur.withColumn("score", col("score") * 0.5))
+    prev.withColumn("score", col("score") * UpdateWeight)
+      .unionByName(cur.withColumn("score", col("score") * UpdateWeight))
       .groupBy(col("tableName"), col("colIdx"), col("propId"))
       .agg(sum(col("score").cast("decimal(30,15)")).cast("double").as("score"))
 }

@@ -15,24 +15,17 @@ import org.apache.spark.sql.functions._
  * every barrier between stages is a named stage of the run's
  * [[Checkpointer]] (resumable, with lineage, when it is durable).
  *
- * All reference thresholds land verbatim in [[T2KConfig]] (SURVEY.md §7.4).
+ * Each reference threshold (SURVEY.md §7.4) is a constant stated once,
+ * with its citation: in the stage object that applies it (e.g.
+ * `Classes.Consensus`, `Schema.CombineThreshold`, `CandidateIndex.DfCap`),
+ * or in [[T2KPipeline]] when the stage takes it as a parameter
+ * because other callers pass other values. [[T2KConfig]] holds only what a
+ * caller varies.
  */
 case class T2KConfig(
-  selectionCandidates: Int = 50, selectionThreshold: Double = 0.2,   // CandidateSelection.java:52-56
-  refinementCandidates: Int = 100, refinementThreshold: Double = 0.7, // CandidateRefinement.java:56-60
-  classConsensus: Double = 0.5, classFallbackTopK: Int = 5,           // ClassDecision.java:104-127
-  dupK: Int = 2, dupThreshold: Double = 0.5,                          // DuplicateBasedSchemaMatching.java:91-93
-  voteThreshold: Double = 0.4,                                        // SchemaVotingRule threshold
-  dupResultThreshold: Double = 0.02,                                  // T2KMatch.java:321-323 (class-refinement pass only)
-  dupLoopThreshold: Double = 0.0,                                     // DuplicateBasedSchemaMatching.java:72 default (iterative loop)
-  combineWeightDup: Double = 0.8, combineWeightLabel: Double = 0.2,
-  combineThreshold: Double = 0.03,                                    // CombineSchemaCorrespondences.java:80-121
-  irThreshold: Double = 0.1, keyWeight: Double = 5.0,                 // DataTypeDependentRecordMatchingRule
-  kurtosisMin: Double = 2.0,                                          // ClassAndTypeBasedSchemaBlocker.java:249-260
-  numIterations: Int = 1,                                             // T2KMatch.java:153-154
-  tokenDfCap: Long = 100000, mappedRatio: Double = 0.0,
-  variantTokenDfCap: Long = 2000,   // fuzzy deletion-variant guard; unit = DISTINCT TOKENS per deletion shape (round-3 change from row-level occurrences — far weaker pruning needed; revisit any tuning against the old unit)
-  saltHotTokenDf: Long = 0)                                           // >0: salt the candidate token join for tokens at/above this df
+  numIterations: Int = 1,     // T2KMatch.java:153-154
+  mappedRatio: Double = 0.0,  // >0: keep tables with nMapped/nRows >= it (A8)
+  saltHotTokenDf: Long = 0)   // >0: salt the candidate token join for tokens at/above this df
 
 /** `schemaCombined` is the final iteration's PRE-top-1 combined schema
   * corr matrix — the input the reference's SF emission filter consumed
@@ -51,6 +44,13 @@ case class T2KResult(instanceCorrs: DataFrame, schemaCorrs: DataFrame,
 
 object T2KPipeline {
 
+  private val SelectionCandidates = 50    // CandidateSelection.java:52-56
+  private val SelectionThreshold = 0.2
+  private val RefinementCandidates = 100  // CandidateRefinement.java:56-60
+  private val RefinementThreshold = 0.7
+  private val DupResultThreshold = 0.02   // T2KMatch.java:321-323 (class-refinement pass only)
+  private val DupLoopThreshold = 0.0      // DuplicateBasedSchemaMatching.java:72 default (iterative loop)
+
   /** Top-1 per group window, deterministic tie-break on `tieCol`. */
   private def top1(df: DataFrame, part: Seq[String], tieCol: String): DataFrame =
     df.withColumn("rk", row_number().over(
@@ -63,18 +63,17 @@ object T2KPipeline {
     * dir built by `T2KMain --build-index` (the reference's offline
     * DBpediaIndexer.main, DBpediaIndexer.java:133-159) is resumed by a
     * later [[run]] against the same dir instead of rebuilt. */
-  def index(kb: KbIngest.Ingested, surfaceForms: DataFrame, cfg: T2KConfig,
+  def index(kb: KbIngest.Ingested, surfaceForms: DataFrame,
             ckpt: Checkpointer): (DataFrame, DataFrame, DataFrame) = {
     // kb.cells feeds ~8 downstream joins: checkpoint once so each reuse
     // references the materialised table, not the full ingest lineage.
     val kbCells = ckpt("kb_cells", kb.cells)
     val tokens = ckpt("candidate_tokens",
-      CandidateIndex.build(kbCells, surfaceForms, cfg.tokenDfCap))
+      CandidateIndex.build(kbCells, surfaceForms))
     // deletion-variant expansion: a pure function of the index — built and
     // checkpointed ONCE here; rebuilding it inside each generate() call was
     // the refinement stage's dominant cost (270 s on the T2D run)
-    val variants = ckpt("candidate_variants",
-      Candidates.variantIndex(tokens, cfg.variantTokenDfCap))
+    val variants = ckpt("candidate_variants", Candidates.variantIndex(tokens))
     (kbCells, tokens, variants)
   }
 
@@ -91,7 +90,7 @@ object T2KPipeline {
     val webCols = ckpt("web_cols", SpanCodec.columns(docs)) // small dim: one row/column
     val keyCols = Keys.detect(webCols)
     val keyCorrs = Keys.keyCorrs(keyCols)
-    val (kbCells, tokens, variants) = index(kb, surfaceForms, cfg, ckpt)
+    val (kbCells, tokens, variants) = index(kb, surfaceForms, ckpt)
     // from the header block (NOT from cell values): valueless properties
     // still exist for label matching and class refinement
     val kbPropsByClass = ckpt("kb_props_by_class", kb.propsByClass)
@@ -114,24 +113,22 @@ object T2KPipeline {
     // IDF-weighted top-N cut: the Lucene TF-IDF analog (measured +0.34pp
     // T2D selection recall, no loss).
     val selection = ckpt("candidates_selected", spread(Candidates.generate(
-      cells, keyCols, tokens, cfg.selectionCandidates, cfg.selectionThreshold,
+      cells, keyCols, tokens, SelectionCandidates, SelectionThreshold,
       rankByIdf = true, saltHotTokenDf = cfg.saltHotTokenDf)))
 
     // --- class decision (A1-A3) -----------------------------------------
-    val classes0 = ckpt("classes_decided", Classes.decide(selection, kb.classes,
-      cfg.classConsensus, cfg.classFallbackTopK))
+    val classes0 = ckpt("classes_decided", Classes.decide(selection, kb.classes))
 
     // --- candidate refinement (class-filtered, th 0.7, fuzzy-on-miss) ---
     // fuzzy lookup at edit distance 1 (CandidateRefinement.java:58)
     val refined = ckpt("candidates_refined", spread(
       Candidates.refineFromSelection(selection, classes0, cells, keyCols,
-        tokens, variants, cfg.refinementCandidates, cfg.refinementThreshold)))
+        tokens, variants, RefinementCandidates, RefinementThreshold)))
 
     // --- first duplicate-based schema matching + class refinement -------
-    val pairs0 = Schema.blockPairs(webCols, classes0, kbPropsByClass, cfg.kurtosisMin)
+    val pairs0 = Schema.blockPairs(webCols, classes0, kbPropsByClass)
     val dup0 = ckpt("schema_dup_seed", Schema.duplicateBased(refined, cells, kbCells,
-      pairs0, cfg.dupK, cfg.dupThreshold, cfg.voteThreshold,
-      cfg.dupResultThreshold, Some(surfaceForms)))
+      pairs0, DupResultThreshold, surfaceForms))
     val schemaSeed = dup0.unionByName(keyCorrs.join(
       dup0.select("tableName", "colIdx"), Seq("tableName", "colIdx"), "left_anti"))
     val classesRefined = Classes.refine(schemaSeed, propClasses, classes0)
@@ -155,7 +152,7 @@ object T2KPipeline {
 
     // --- iteration loop (T2KMatch.java:356-405) -------------------------
     val pairs = ckpt("schema_pairs",
-      Schema.blockPairs(webCols, classes, kbPropsByClass, cfg.kurtosisMin))
+      Schema.blockPairs(webCols, classes, kbPropsByClass))
     var schemaCorrs: DataFrame = null
     var instanceCands: DataFrame = candidates
     // Barrier elision for SINGLE-CONSUMER stages (non-durable
@@ -169,15 +166,12 @@ object T2KPipeline {
     for (it <- 0 until nIter) {
       val label = Schema.labelBased(pairs, webCols, kb.props)
       val dup = Schema.duplicateBased(instanceCands, cells, kbCells, pairs,
-        cfg.dupK, cfg.dupThreshold, cfg.voteThreshold, cfg.dupLoopThreshold,
-        Some(surfaceForms))
-      val combined = Schema.combine(dup, label, keyCorrs,
-        cfg.combineWeightDup, cfg.combineWeightLabel, cfg.combineThreshold)
+        DupLoopThreshold, surfaceForms)
+      val combined = Schema.combine(dup, label, keyCorrs)
       schemaCorrs = if (it == 0) combined else Schema.update(schemaCorrs, combined)
       schemaCorrs = ckpt(s"schema_corrs_it$it", schemaCorrs)
       val resolved = spread(Identity.resolve(
-        instanceCands, schemaCorrs, keyCols, cells, kbCells, webCols,
-        cfg.keyWeight, cfg.irThreshold))
+        instanceCands, schemaCorrs, keyCols, cells, kbCells, webCols))
       instanceCands =
         if (it == nIter - 1 && !ckpt.durable) resolved
         else ckpt(s"instance_cands_it$it", resolved)

@@ -1,7 +1,7 @@
 package graft.triples
 
 import graft.kb.KbIngest
-import graft.model.Dtype
+import graft.model.{Dtype, SpanCodec}
 import graft.text.Similarity
 import graft.util.Udfs
 import org.apache.spark.sql.DataFrame
@@ -31,8 +31,7 @@ object Triples {
     val webVals = cells.filter(col("kind") === "text" && col("text").isNotNull)
       .select("tableName", "rowNum", "colIdx", "text")
     val colTypes = webCols
-      .withColumn("yearRange",
-        coalesce((col("maxYear") - col("minYear")).cast("double"), lit(1.0)))
+      .withColumn("yearRange", SpanCodec.yearRange)
       .select("tableName", "colIdx", "dtype", "yearRange")
     val kbVals = kbCells.select(col("uri"), col("propId"), col("value").as("kbValue"))
 

@@ -3,7 +3,7 @@ package graft.checkpoint
 import graft.SparkSpec
 import graft.fixtures.MicroCorpus
 import graft.kb.KbIngest
-import graft.pipeline.{T2KConfig, T2KPipeline}
+import graft.pipeline.T2KPipeline
 import java.nio.file.{Files, Paths}
 
 /**
@@ -21,8 +21,7 @@ class BuildIndexSpec extends SparkSpec {
       MicroCorpus.classHierarchy)
     val sf = MicroCorpus.surfaceFormsDf(spark)
 
-    T2KPipeline.index(kb, sf, T2KConfig(),
-      new ParquetCheckpointer(spark, dir))
+    T2KPipeline.index(kb, sf, new ParquetCheckpointer(spark, dir))
     val built = Files.readString(Paths.get(dir, "manifest.jsonl"))
     Seq("kb_cells", "candidate_tokens", "candidate_variants").foreach { s =>
       assert(built.contains("\"stage\":\"" + s + "\""), s"missing stage $s")

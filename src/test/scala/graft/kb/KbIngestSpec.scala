@@ -53,7 +53,7 @@ class KbIngestSpec extends SparkSpec {
   }
 
   test("kb rows and cells") {
-    assert(kb.rows.count() === 10)
+    assert(kb.cells.select("uri").distinct().count() === 10)
     // each entity: 1 label + 1 value cell
     assert(kb.cells.count() === 20)
     val gestern = kb.cells.filter(col("uri") === "http://dbpedia.org/resource/Gestern"

@@ -60,7 +60,7 @@ class LoadersSpec extends SparkSpec {
     // hierarchy entries are local names
     assert(hierarchy.exists(_ == ("Publisher", "Company")))
     val kb = Loaders.loadLodCsvDir(spark, s"$res/kbtables", Nil)
-    assert(kb.rows.count() === 10)
+    assert(kb.cells.select("uri").distinct().count() === 10)
     val props = kb.props.collect().map(_.getString(1))
     assert(props.contains("http://dbpedia.org/ontology/year"))
   }

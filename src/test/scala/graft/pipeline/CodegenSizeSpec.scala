@@ -30,14 +30,14 @@ class CodegenSizeSpec extends SparkSpec {
     val webCols = SpanCodec.columns(docs)
     val keyCols = Keys.detect(webCols)
     val pairs = Schema.blockPairs(webCols, result.classCorrs, kb.propsByClass)
-    val (_, tokens, variants) = T2KPipeline.index(kb, sf, T2KConfig(), LocalCheckpointer)
+    val (_, tokens, variants) = T2KPipeline.index(kb, sf, LocalCheckpointer)
     val selection = Candidates.generate(cells, keyCols, tokens, 50, 0.2)
     Map(
       "Candidates.keyTokens" -> Candidates.keyTokens(cells, keyCols),
       "Candidates.refineFromSelection" -> Candidates.refineFromSelection(
         selection, result.classCorrs, cells, keyCols, tokens, variants, 100, 0.7),
       "Schema.duplicateBased" -> Schema.duplicateBased(result.instanceCorrs,
-        cells, kb.cells, pairs, surfaceForms = Some(sf)),
+        cells, kb.cells, pairs, 0.02, sf),
       "Identity.resolve" -> Identity.resolve(result.instanceCorrs,
         result.schemaCorrs, keyCols, cells, kb.cells, webCols),
       "Triples.generate" -> Triples.generate(result.instanceCorrs,

@@ -5,7 +5,7 @@ import graft.checkpoint.{Checkpointer, LocalCheckpointer}
 import graft.eval.Evaluator
 import graft.fixtures.MicroCorpus
 import graft.kb.{CandidateIndex, KbIngest}
-import graft.model.SpanCodec
+import graft.model.{Doc, Span, SpanCodec}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -19,6 +19,20 @@ class PipelineSpec extends SparkSpec {
   lazy val sf = MicroCorpus.surfaceFormsDf(spark)
   lazy val hierarchy = MicroCorpus.classHierarchy.toMap
   lazy val result: T2KResult = T2KPipeline.run(docs, kb, sf, hierarchy)
+
+  /** Runs the pipeline on `in` through a checkpointer that records every
+    * stage name, in order. */
+  private def recordedRun(in: DataFrame, cfg: T2KConfig): (Seq[String], T2KResult) = {
+    val stages = collection.mutable.ArrayBuffer.empty[String]
+    val recording = new Checkpointer {
+      def apply(name: String, df: => DataFrame): DataFrame = {
+        stages += name
+        LocalCheckpointer(name, df)
+      }
+    }
+    val r = T2KPipeline.run(in, kb, sf, hierarchy, cfg, recording)
+    (stages.toSeq, r)
+  }
 
   test("key detection finds reference key columns (Col0 / Col1)") {
     val keys = Keys.detect(SpanCodec.columns(docs)).collect()
@@ -80,21 +94,65 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("every pipeline barrier is a named checkpoint stage, in run order") {
-    val stages = collection.mutable.ArrayBuffer.empty[String]
-    val recording = new Checkpointer {
-      def apply(name: String, df: => DataFrame): DataFrame = {
-        stages += name
-        LocalCheckpointer(name, df)
-      }
-    }
-    T2KPipeline.run(docs, kb, sf, hierarchy, ckpt = recording).release()
+    val (stages, r) = recordedRun(docs, T2KConfig())
+    r.release()
     // not durable: the final instance_cands and triples barriers are elided
-    assert(stages.toSeq === Seq("cells", "web_cols", "kb_cells",
+    assert(stages === Seq("cells", "web_cols", "kb_cells",
       "candidate_tokens", "candidate_variants", "kb_props_by_class",
       "candidates_selected", "classes_decided", "candidates_refined",
       "schema_dup_seed", "classes_best", "classes_with_ancestors",
       "candidates_filtered", "schema_pairs", "schema_corrs_it0",
       "instance_top1", "schema_top1"))
+  }
+
+  test("numIterations = 2 runs the schema/identity loop twice") {
+    val (stages, r) = recordedRun(docs, T2KConfig(numIterations = 2))
+    // only the last iteration's instance_cands barrier is elided
+    assert(stages.filter(_.matches("(schema_corrs|instance_cands)_it\\d+")) ===
+      Seq("schema_corrs_it0", "instance_cands_it0", "schema_corrs_it1"))
+    Seq(r.instanceCorrs, r.schemaCorrs, r.classCorrs, r.triples)
+      .foreach(df => assert(df.collect().nonEmpty))
+    r.release()
+  }
+
+  test("mappedRatio keeps exactly the tables whose mapped-row share reaches it") {
+    // two rows no KB entity matches: 5 of webtable1's 7 rows can map
+    val unmatched = Seq(
+      Doc("webtable1.csv#r5", Seq("qqxv zzyw", "9911", "nobody known", "1950")
+        .zipWithIndex.map { case (v, i) => Span("text", v, null, i) }),
+      Doc("webtable1.csv#r6", Seq("wwpk jjvb", "9912", "someone else", "1951")
+        .zipWithIndex.map { case (v, i) => Span("text", v, null, i) }))
+    val in = docs.unionByName(unmatched.toDF())
+    val nRows = SpanCodec.cells(in).select("tableName", "rowNum").distinct()
+      .groupBy("tableName").count().as[(String, Long)].collect().toMap
+    def shares(r: T2KResult): Map[String, Double] =
+      r.instanceCorrs.groupBy("tableName").count().as[(String, Long)].collect()
+        .map { case (t, n) => t -> n.toDouble / nRows(t) }.toMap
+    val unfiltered = T2KPipeline.run(in, kb, sf, hierarchy)
+    val all = shares(unfiltered)
+    unfiltered.release()
+    val ratio = 0.85
+    assert(all.values.exists(_ >= ratio) && all.values.exists(_ < ratio),
+      s"shares $all do not straddle $ratio")
+
+    val r = T2KPipeline.run(in, kb, sf, hierarchy, T2KConfig(mappedRatio = ratio))
+    val kept = shares(r)
+    assert(kept.nonEmpty && kept.values.forall(_ >= ratio), s"kept $kept")
+    assert((all.keySet -- kept.keySet).forall(all(_) < ratio), s"all $all, kept $kept")
+    assert(kept === all.filter(_._2 >= ratio))
+    assert(r.schemaCorrs.select("tableName").distinct().as[String].collect().toSet ===
+      kept.keySet)
+    r.release()
+  }
+
+  test("Schema.update averages the previous and current scores per correspondence") {
+    val cols = Seq("tableName", "colIdx", "propId", "score")
+    val prev = Seq(("t", 0, 1, 0.4), ("t", 1, 2, 0.6)).toDF(cols: _*)
+    val cur = Seq(("t", 0, 1, 0.8), ("t", 2, 3, 1.0)).toDF(cols: _*)
+    val got = Schema.update(prev, cur).as[(String, Int, Int, Double)].collect()
+      .map { case (t, c, p, s) => (t, c, p) -> s }.toMap
+    // both sides: 0.5·0.4 + 0.5·0.8; one side: half its score
+    assert(got === Map(("t", 0, 1) -> 0.6, ("t", 1, 2) -> 0.3, ("t", 2, 3) -> 0.5))
   }
 
   test("class decision assigns the right KB class per table") {
