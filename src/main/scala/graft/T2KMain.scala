@@ -3,6 +3,7 @@ package graft
 import graft.checkpoint.{Materialize, ParquetCheckpointer}
 import graft.eval.{Diagnostics, Evaluator}
 import graft.kb.Loaders
+import graft.onetoone.{SFMatchers, SimilarityFlooding}
 import graft.pipeline.{T2KConfig, T2KPipeline}
 import graft.triples.GraphSink
 import org.apache.spark.sql.functions._
@@ -16,9 +17,14 @@ import org.apache.spark.sql.functions._
  *
  * Usage:
  *   runMain graft.T2KMain --web <dirOfCsvs | docsParquet> --kb <lodCsvDir>
- *     --ontology <tsv> [--sf <file>] [--redirect <file>] [--out <dir>]
- *     [--checkpoint <dir>] [--gs-instance <csv>] [--gs-property <csv>]
- *     [--iterations N] [--mapped-ratio X]
+ *     [--ontology <tsv>] [--sf <file>] [--redirect <file>] [--out <dir>]
+ *     [--checkpoint <dir>] [--gs-instance <csv>] [--gs-class <csv>]
+ *     [--gs-property <csv>] [--iterations N] [--mapped-ratio X]
+ *     [--sf-matcher label|label-kb2wb|value|value-string] [--sf-sweep <dir>]
+ *     [--parity-ref <refCsv> [--parity-out <dir>]
+ *       [--parity-emit formula:minSim:filter:maxIter]]
+ *   runMain graft.T2KMain --build-index <checkpointDir> --kb <lodCsvDir>
+ *     [--ontology <tsv>] [--sf <file>] [--redirect <file>]
  */
 object T2KMain {
 
@@ -73,20 +79,20 @@ object T2KMain {
 
     // Reference-format CSV artifacts (what a reference user diffs:
     // CSVCorrespondenceFormatter outputs + class_decision + triples,
-    // T2KMatch.java:662-681) and the A9 candidate statistics.
-    def csv(df: org.apache.spark.sql.DataFrame, name: String): Unit =
-      df.coalesce(1).write.mode("overwrite").option("header", "true")
-        .csv(s"$out/csv/$name")
+    // T2KMatch.java:662-681) and the A9 candidate statistics: one
+    // header-first CSV file per directory.
+    def csv(df: org.apache.spark.sql.DataFrame, path: String): Unit =
+      df.coalesce(1).write.mode("overwrite").option("header", "true").csv(path)
     csv(result.instanceCorrs.select(
       concat(col("tableName"), lit("~Row"), col("rowNum")).as("id1"),
-      col("uri").as("id2"), col("score")), "instance_correspondences")
+      col("uri").as("id2"), col("score")), s"$out/csv/instance_correspondences")
     csv(result.schemaCorrs.join(kb.props.select("propId", "propUri"), "propId")
       .select(concat(col("tableName"), lit("~Col"), col("colIdx")).as("id1"),
-        col("propUri").as("id2"), col("score")), "schema_correspondences")
+        col("propUri").as("id2"), col("score")), s"$out/csv/schema_correspondences")
     csv(result.classCorrs.select(col("tableName"), col("className"), col("score")),
-      "class_decision")
-    csv(result.triples, "extracted_triples")
-    csv(Diagnostics.candidateStats(result.instanceCorrs), "candidate_statistics")
+      s"$out/csv/class_decision")
+    csv(result.triples, s"$out/csv/extracted_triples")
+    csv(Diagnostics.candidateStats(result.instanceCorrs), s"$out/csv/candidate_statistics")
     // LCWA summary (reference prints existing/correct%/new counts)
     val lcwa = graft.triples.Triples.lcwaStats(result.triples).collect()
       .map(r => (r.getBoolean(0), r.getBoolean(1)) -> r.getLong(2)).toMap
@@ -102,8 +108,9 @@ object T2KMain {
     // dir has 116).
     val loadedTables = docs
       .select(substring_index(col("doc_id"), "#", 1).as("tableName")).distinct()
-    def pruned(gs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-      gs.withColumn("tableName", split(col("leftId"), "~").getItem(0))
+    def gold(path: String): org.apache.spark.sql.DataFrame =
+      Loaders.loadGoldStandard(spark, path).filter(col("isPositive"))
+        .withColumn("tableName", split(col("leftId"), "~").getItem(0))
         .join(loadedTables, Seq("tableName"), "left_semi").drop("tableName")
 
     // Per-table evaluation matrix (the reference's evaluation.csv +
@@ -114,10 +121,10 @@ object T2KMain {
                     gs: org.apache.spark.sql.DataFrame, level: String): Unit =
       csv(Evaluator.perGroup(pred, gs, Seq("leftId", "rightId"),
           split(col("leftId"), "~").getItem(0)).orderBy("tableName"),
-        s"evaluation_$level")
+        s"$out/csv/evaluation_$level")
 
     opts.get("gs-instance").foreach { p =>
-      val gs = pruned(Loaders.loadGoldStandard(spark, p).filter(col("isPositive")))
+      val gs = gold(p)
       val pred = result.instanceCorrs.select(
         concat(col("tableName"), lit("~Row"), col("rowNum")).as("leftId"),
         col("uri").as("rightId"))
@@ -126,7 +133,7 @@ object T2KMain {
       perTableCsv(pred, gs, "instance")
     }
     opts.get("gs-class").foreach { p =>
-      val gs = pruned(Loaders.loadGoldStandard(spark, p).filter(col("isPositive")))
+      val gs = gold(p)
       val pred = result.classCorrs.select(
         col("tableName").as("leftId"), col("className").as("rightId"))
       val prf = Evaluator.evaluate(pred, gs, Seq("leftId", "rightId"))
@@ -134,7 +141,7 @@ object T2KMain {
       perTableCsv(pred, gs, "class")
     }
     opts.get("gs-property").foreach { p =>
-      val gs = pruned(Loaders.loadGoldStandard(spark, p).filter(col("isPositive")))
+      val gs = gold(p)
       val pred = result.schemaCorrs
         .join(kb.props.select("propId", "propUri"), "propId")
         .select(concat(col("tableName"), lit("~Col"), col("colIdx")).as("leftId"),
@@ -161,7 +168,6 @@ object T2KMain {
     // matcher over the pipeline's class decision, fixpoint + stable 1:1,
     // write corrs, evaluate vs --gs-property when present.
     opts.get("sf-matcher").foreach { mode =>
-      import graft.onetoone.SFMatchers
       val cells = graft.model.SpanCodec.cells(docs)
       val webCols = graft.model.SpanCodec.columns(docs)
       val classes = result.classCorrs.select("tableName", "classId")
@@ -170,12 +176,12 @@ object T2KMain {
         case "label" => SFMatchers.labelSeeds(webCols, kb.props, kbPropsByClass, classes)
         case "label-kb2wb" => SFMatchers.labelSeeds(webCols, kb.props, kbPropsByClass, classes, "kb2wb")
         case "value" => SFMatchers.valueSeeds(result.instanceCorrs, cells, kb.cells,
-          webCols, Some(sf), typed = true)
+          webCols, sf, typed = true)
         case "value-string" => SFMatchers.valueSeeds(result.instanceCorrs, cells, kb.cells,
-          webCols, Some(sf), typed = false)
+          webCols, sf, typed = false)
         case other => throw new IllegalArgumentException(s"sf-matcher: $other")
       }
-      val corrs = SFMatchers.run(seeds, "A", 0.10, "stable")
+      val corrs = SimilarityFlooding.run(seeds)
       corrs.write.mode("overwrite").parquet(s"$out/sf_${mode}_correspondences")
       opts.get("gs-property").foreach { p =>
         val swap = mode.endsWith("kb2wb")
@@ -185,7 +191,7 @@ object T2KMain {
           (if (swap) col("left") else col("right")).as("propId"))
           .join(kb.props.select("propId", "propUri"), "propId")
           .select(col("leftId"), col("propUri").as("rightId"))
-        val gs = pruned(Loaders.loadGoldStandard(spark, p).filter(col("isPositive")))
+        val gs = gold(p)
         val prf = Evaluator.evaluate(pred, gs, Seq("leftId", "rightId"))
         println(f"sf-$mode property P=${prf.precision}%.4f R=${prf.recall}%.4f F1=${prf.f1}%.4f")
       }
@@ -199,7 +205,6 @@ object T2KMain {
     //  label     — F2 label-based seeds;
     //  value     — F3 typed value-based seeds.
     opts.get("sf-sweep").foreach { sweepOut =>
-      import graft.onetoone.SFMatchers
       val classes = result.classCorrs.select("tableName", "classId")
       val cells = graft.model.SpanCodec.cells(docs)
       val webCols = graft.model.SpanCodec.columns(docs)
@@ -208,9 +213,9 @@ object T2KMain {
           result.schemaCorrs, webCols, kb.propsByClass, classes),
         "label" -> SFMatchers.labelSeeds(webCols, kb.props, kb.propsByClass, classes),
         "value" -> SFMatchers.valueSeeds(result.instanceCorrs, cells, kb.cells,
-          webCols, Some(sf), typed = true))
-      val gold = opts.get("gs-property").map { p =>
-        pruned(Loaders.loadGoldStandard(spark, p).filter(col("isPositive")))
+          webCols, sf, typed = true))
+      val goldPairs = opts.get("gs-property").map { p =>
+        gold(p)
           .select(split(col("leftId"), "~Col").getItem(0).as("tableName"),
             split(col("leftId"), "~Col").getItem(1).cast("int").as("left"),
             col("rightId").as("propUri"))
@@ -219,35 +224,9 @@ object T2KMain {
           .select(concat(col("tableName"), lit("|"), col("classId")).as("groupKey"),
             col("left"), col("right"))
       }.getOrElse(seedSources.head._2.limit(0).select("groupKey", "left", "right"))
-      val table = SFMatchers.sweep(seedSources, gold)
-      table.coalesce(1).write.mode("overwrite").option("header", "true").csv(sweepOut)
+      val table = SFMatchers.sweep(seedSources, goldPairs)
+      csv(table, sweepOut)
       table.orderBy(col("f1").desc).show(60, truncate = false)
-    }
-
-    // --- reference-output parity: sweep SF configs over OUR pipeline
-    // matrix, evaluated against the reference's own emitted artifact
-    // (output/SF_schema_correspondences.csv) — the BASELINE.json metric is
-    // P/R vs reference OUTPUT, and the artifact is an SF run over the
-    // combined corr matrix, so the reproducing config shows up as the
-    // max-F1 row here.
-    opts.get("sf-ref").foreach { refCsv =>
-      import graft.onetoone.SFMatchers
-      val classes = result.classCorrs.select("tableName", "classId")
-      val webCols = graft.model.SpanCodec.columns(docs)
-      val seeds = SFMatchers.pipelineMatrixSeeds(
-        result.schemaCorrs, webCols, kb.propsByClass, classes)
-      val refGold = spark.read.csv(refCsv)
-        .select(split(col("_c0"), "~Col").getItem(0).as("tableName"),
-          split(col("_c0"), "~Col").getItem(1).cast("int").as("left"),
-          col("_c1").as("propUri"))
-        .join(kb.props.select(col("propId").as("right"), col("propUri")), "propUri")
-        .join(classes, "tableName")
-        .select(concat(col("tableName"), lit("|"), col("classId")).as("groupKey"),
-          col("left"), col("right"))
-      val table = SFMatchers.sweep(Seq("pipeline" -> seeds), refGold)
-      table.coalesce(1).write.mode("overwrite").option("header", "true")
-        .csv(s"$out/sf_ref_parity")
-      table.orderBy(col("f1").desc).show(45, truncate = false)
     }
 
     // --- emission parity vs the reference's own emitted artifact ---------
@@ -263,7 +242,6 @@ object T2KMain {
     //   --parity-ref <refCsv> [--parity-out <dir>]
     //   [--parity-emit formula:minSim:filter:maxIter   default none:0.02:stable:0]
     opts.get("parity-ref").foreach { refCsv =>
-      import graft.onetoone.{SFMatchers, SimilarityFlooding}
       val outDir = opts.getOrElse("parity-out", s"$out/parity")
       val props = kb.props.select(col("propId"), col("propUri"))
       val ref = spark.read.csv(refCsv).select(
@@ -291,9 +269,7 @@ object T2KMain {
           when(col("inTop1"), "emitted")
             .when(col("matrixScore").isNotNull, "lost_at_top1")
             .otherwise("absent_from_matrix"))
-      acct.orderBy("status", "tableName", "colIdx")
-        .coalesce(1).write.mode("overwrite").option("header", "true")
-        .csv(s"$outDir/accounting")
+      csv(acct.orderBy("status", "tableName", "colIdx"), s"$outDir/accounting")
       acct.groupBy("status").count().orderBy("status").show(truncate = false)
 
       // (b) emission filters over the combined matrix
@@ -367,11 +343,9 @@ object T2KMain {
             .join(labelMatrix.select("tableName", "colIdx", "propId", "propUri", "score"),
               Seq("tableName", "colIdx", "propId")))
         eval("labelstate-stable", labelState)
-        labelState
+        csv(labelState
           .select(concat(col("tableName"), lit("~Col"), col("colIdx")).as("id1"),
-            col("propUri").as("id2"), col("score"))
-          .coalesce(1).write.mode("overwrite").option("header", "true")
-          .csv(s"$outDir/labelstate_artifact")
+            col("propUri").as("id2"), col("score")), s"$outDir/labelstate_artifact")
         val top1Set = top1.select("tableName", "colIdx", "propUri")
         eval("shipped-top1", top1Set)
         val unionSet = top1Set
@@ -389,22 +363,18 @@ object T2KMain {
               .withColumn("inT", lit(true)),
               Seq("tableName", "colIdx", "propUri"), "left_anti")
             .select(col("tableName"), col("colIdx"), col("propUri"), col("score")))
-        unionArtifact
+        csv(unionArtifact
           .select(concat(col("tableName"), lit("~Col"), col("colIdx")).as("id1"),
-            col("propUri").as("id2"), col("score"))
-          .coalesce(1).write.mode("overwrite").option("header", "true")
-          .csv(s"$outDir/union_artifact")
+            col("propUri").as("id2"), col("score")), s"$outDir/union_artifact")
       }
 
       val Array(ef, em, efilt, eit) =
         opts.getOrElse("parity-emit", "none:0.02:stable:0").split(":")
       val artifact = emitted(if (ef == "none") "A" else ef, em.toDouble, efilt,
         if (ef == "none") 0 else eit.toInt)
-      artifact
+      csv(artifact
         .select(concat(col("tableName"), lit("~Col"), col("colIdx")).as("id1"),
-          col("propUri").as("id2"), col("score"))
-        .coalesce(1).write.mode("overwrite").option("header", "true")
-        .csv(s"$outDir/emission_artifact")
+          col("propUri").as("id2"), col("score")), s"$outDir/emission_artifact")
       val prf = Evaluator.evaluate(
         artifact.select("tableName", "colIdx", "propUri"), refPairs,
         Seq("tableName", "colIdx", "propUri"))

@@ -33,8 +33,9 @@ object ScaleGen {
     * hotToken-th entity's label gains the literal token "hotshared", so
     * the candidate token join sees ONE key whose index df is
     * nEntities/hotToken and whose web-side occurrences scale with the
-    * corpus — the pathological head key the saltHotTokenDf guard exists
-    * for (the perfbench t2k_corpus workload plants it at hotToken 50).
+    * corpus — a pathological head key: AQE's skew-join splitting absorbs
+    * it, and `CandidateIndex.DfCap` drops it once its df passes the cap
+    * (the perfbench t2k_corpus workload plants it at hotToken 50).
     * Default 0: no change to any existing corpus. */
   /** `tableNamePad` > 0 pads table names with a deterministic per-table
     * hex infix of that length — real web-table corpora carry long opaque

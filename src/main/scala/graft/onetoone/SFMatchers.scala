@@ -2,8 +2,8 @@ package graft.onetoone
 
 import graft.checkpoint.Materialize
 import graft.eval.Evaluator
-import graft.kb.KbIngest
 import graft.model.{Dtype, SpanCodec}
+import graft.pipeline.Schema
 import graft.text.{Normalize, Similarity}
 import graft.util.Udfs
 import org.apache.spark.sql.DataFrame
@@ -55,29 +55,23 @@ object SFMatchers {
    * only same-type pairs count, ValueTypeComparatorWB2KB.java:75-92);
    * string mode compares everything with Levenshtein over surface-form
    * alternatives of either side (ValueStringComparatorWB2KB.java:57-98).
+   * Both modes expand the KB values with `surfaceForms` and orient the
+   * seeds WB2KB.
    */
   def valueSeeds(instanceCorrs: DataFrame, cells: DataFrame, kbCells: DataFrame,
-                 webCols: DataFrame, surfaceForms: Option[DataFrame] = None,
-                 typed: Boolean = true, direction: String = "wb2kb"): DataFrame = {
+                 webCols: DataFrame, surfaceForms: DataFrame,
+                 typed: Boolean = true): DataFrame = {
     val corrs = instanceCorrs.select("tableName", "rowNum", "uri", "classId")
     val webVals = cells.filter(col("kind") === "text" && col("text").isNotNull)
       .select("tableName", "rowNum", "colIdx", "text")
     val colMeta = webCols
       .withColumn("yearRange", SpanCodec.yearRange)
       .select("tableName", "colIdx", "dtype", "yearRange")
-    val kbVals0 = kbCells
-      .select(col("uri"), col("propId"), col("value").as("kbValue"),
-        col("dtype").as("kbDtype"))
     // surface-form alternatives of the KB value (string comparisons take
     // the max over them, both matcher variants)
-    val kbVals = surfaceForms match {
-      case None => kbVals0
-      case Some(sf) => kbVals0.unionByName(kbVals0.join(
-          sf.select(Normalize.normaliseCol(col("label")).as("l"), col("surfaceForm")),
-          Normalize.normaliseCol(col("kbValue")) === col("l"))
-        .select(col("uri"), col("propId"), col("surfaceForm").as("kbValue"),
-          col("kbDtype")))
-    }
+    val kbVals = Schema.expandWithSurfaceForms(kbCells
+      .select(col("uri"), col("propId"), col("value").as("kbValue"),
+        col("dtype").as("kbDtype")), surfaceForms)
     val joined = corrs
       .join(webVals, Seq("tableName", "rowNum"))
       .join(colMeta, Seq("tableName", "colIdx"))
@@ -115,7 +109,7 @@ object SFMatchers {
     val seeds = perCorr
       .groupBy(col("tableName"), col("classId"), col("colIdx"), col("propId"))
       .agg(avg(col("sim")).as("score"))
-    oriented(seeds, direction)
+    oriented(seeds, "wb2kb")
   }
 
   private def oriented(seeds: DataFrame, direction: String): DataFrame =
@@ -126,26 +120,6 @@ object SFMatchers {
         col("propId").as("left"), col("colIdx").as("right"), col("score"))
       case other => throw new IllegalArgumentException(s"direction: $other")
     }
-
-  /** Run one SF configuration over seed corrs (delegates to
-    * [[SimilarityFlooding.run]]; pass oneToOne = null to skip the 1:1
-    * filter like the bare reference matchers do). */
-  def run(seeds: DataFrame, formula: String = "A", minSim: Double = 0.10,
-          oneToOne: String = "stable"): DataFrame =
-    if (oneToOne == null) {
-      val spark = seeds.sparkSession
-      import spark.implicits._
-      seeds.select(col("groupKey").cast("string"), col("left").cast("int"),
-          col("right").cast("int"), col("score").cast("double"))
-        .as[(String, Int, Int, Double)]
-        .groupByKey(_._1)
-        .flatMapGroups { (key, it) =>
-          SimilarityFlooding.fixpoint(
-            it.map(t => SimilarityFlooding.Pair(t._2, t._3, t._4)).toSeq,
-            formula, minSim).map(e => (key, e.left, e.right, e.score))
-        }
-        .toDF("groupKey", "left", "right", "score")
-    } else SimilarityFlooding.run(seeds, formula, minSim, oneToOne)
 
   /** F5: the reference's hyper-parameter sweep — SEED SOURCES × formulas ×
     * minSim grid × 1:1 filters, each configuration evaluated against a gold
@@ -168,7 +142,8 @@ object SFMatchers {
       Materialize.scoped { scope =>
         val seedsOnce = Materialize(seeds)
         try for { f <- formulas; m <- minSims; filt <- filters } yield {
-          val prf = Evaluator.evaluate(run(seedsOnce, f, m, filt).select(keys.map(col): _*),
+          val prf = Evaluator.evaluate(
+            SimilarityFlooding.run(seedsOnce, f, m, filt).select(keys.map(col): _*),
             gold.select(keys.map(col): _*), keys)
           (seedName, f, m, filt, prf.tp, prf.predicted, prf.gold,
             prf.precision, prf.recall, prf.f1)

@@ -146,22 +146,6 @@ object Dedup {
       .select("id1", "id2", "jaccard")
   }
 
-  /**
-   * Exact set-Jaccard near-dup pairs via AllPairs/PPJoin-style prefix
-   * filtering — output-identical to UNCAPPED [[jaccardPairs]], but
-   * recall-LOSSLESS where the dfCap trades tail recall for a bounded
-   * worst case. Under a global (df, unit) order, two sets with J >= t
-   * must share a unit among each one's p = n - ceil(t*n) + 1 RAREST
-   * units (|A∩B| >= t*|A∪B| >= t*n, so the intersection cannot hide
-   * entirely in the ceil(t*n)-1 most frequent units of either set); the
-   * candidate join therefore touches only prefixes — the Zipfian head
-   * units sort LAST and fall outside almost every prefix, collapsing the
-   * quadratic blow-up without dropping anything. A length filter
-   * (ceil(t*n1) <= n2 and vice versa) prunes further; candidates are
-   * verified with exact Jaccard over the hashed sets. The epsilon inside
-   * ceil guards FP noise from pushing an exactly-integral t*n up one
-   * (which would shorten the prefix and silently lose pairs).
-   */
   /** One row per distinct word n-gram of the ORDERED token sequence:
     * (docId, gram) with gram = xxhash64 of the space-joined n tokens —
     * 8-byte keys, so the contamination join below never shuffles text. */
@@ -207,6 +191,22 @@ object Dedup {
       .agg(countDistinct(col("gram")).as("n_contaminated_grams"),
         countDistinct(col("benchId")).as("n_bench_docs"))
 
+  /**
+   * Exact set-Jaccard near-dup pairs via AllPairs/PPJoin-style prefix
+   * filtering — output-identical to UNCAPPED [[jaccardPairs]], but
+   * recall-LOSSLESS where the dfCap trades tail recall for a bounded
+   * worst case. Under a global (df, unit) order, two sets with J >= t
+   * must share a unit among each one's p = n - ceil(t*n) + 1 RAREST
+   * units (|A∩B| >= t*|A∪B| >= t*n, so the intersection cannot hide
+   * entirely in the ceil(t*n)-1 most frequent units of either set); the
+   * candidate join therefore touches only prefixes — the Zipfian head
+   * units sort LAST and fall outside almost every prefix, collapsing the
+   * quadratic blow-up without dropping anything. A length filter
+   * (ceil(t*n1) <= n2 and vice versa) prunes further; candidates are
+   * verified with exact Jaccard over the hashed sets. The epsilon inside
+   * ceil guards FP noise from pushing an exactly-integral t*n up one
+   * (which would shorten the prefix and silently lose pairs).
+   */
   def jaccardPairsPrefix(docs: DataFrame, idCol: String, textCol: String,
                          threshold: Double, gramSize: Int = 0): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0,

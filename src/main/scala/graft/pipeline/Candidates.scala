@@ -123,7 +123,6 @@ object Candidates {
     * the T2D selection (same rows, same gold coverage). */
   private def exactPerName(kt: DataFrame, candidateTokens: DataFrame,
                            withIdf: Boolean,
-                           saltHotTokenDf: Long,
                            simThreshold: Double): DataFrame = {
     // NAME-level distinct: candidateTokens carries one row per (uri,
     // name, token), and entities SHARING a name (surface forms, duplicate
@@ -134,21 +133,10 @@ object Candidates {
     val idxCols = Seq(col("classId"), col("nameId"), col("nNameTok"),
       col("token")) ++ (if (withIdf) Seq(col("idf")) else Nil)
     val idx = candidateTokens.select(idxCols: _*).distinct()
-    // Explicit hot-token salting (opt-in): tokens whose index-side df
-    // reaches the threshold join through Salt.skewSplitJoin — the index
-    // rows spread across 8 salted partitions instead of one straggler.
-    // Default off: CandidateIndex.DfCap already drops stop tokens and AQE
-    // splits moderate skew; this is the guard for a corpus where even the
-    // capped df concentrates in one executor's memory.
-    val hits =
-      if (saltHotTokenDf > 0L)
-        graft.util.Salt.skewSplitJoin(idx, kt, "token", 8,
-          saltHotTokenDf, Seq("nameId"))
-      else kt.join(idx, "token")
     val aggs =
       if (withIdf) Seq(count(lit(1)).as("shared"), sum(col("idf")).as("idfSum"))
       else Seq(count(lit(1)).as("shared"))
-    val scored = hits
+    val scored = kt.join(idx, "token")
       .groupBy(col("tableId"), col("rowNum"), col("classId"),
         col("nameId"), col("nNameTok"), col("nKeyTok"))
       .agg(aggs.head, aggs.tail: _*)
@@ -305,10 +293,9 @@ object Candidates {
    */
   def generate(cells: DataFrame, keyCols: DataFrame, candidateTokens: DataFrame,
                numCandidates: Int, simThreshold: Double,
-               rankByIdf: Boolean = false,
-               saltHotTokenDf: Long = 0L): DataFrame = {
+               rankByIdf: Boolean = false): DataFrame = {
     val perName = exactPerName(keyTokens(cells, keyCols), candidateTokens,
-      rankByIdf, saltHotTokenDf, simThreshold)
+      rankByIdf, simThreshold)
     // R2: max over {label} ∪ surface forms
     val uriAggs =
       if (rankByIdf)

@@ -78,13 +78,16 @@ object Schema {
 
   /** R5 surface-form expansion: string KB values additionally compare
     * against their surface forms; the later max-per-pair keeps the best
-    * (MatchableTableRowComparatorBasedOnSurfaceForms.java:34-127). */
+    * (MatchableTableRowComparatorBasedOnSurfaceForms.java:34-127). Each
+    * alternative row keeps every other column of `kbVals`, in its order,
+    * with the surface form in place of `kbValue`. */
   def expandWithSurfaceForms(kbVals: DataFrame, surfaceForms: DataFrame): DataFrame = {
     val alts = kbVals.join(
         surfaceForms.select(Normalize.normaliseCol(col("label")).as("labelNorm"),
           col("surfaceForm")),
         Normalize.normaliseCol(col("kbValue")) === col("labelNorm"))
-      .select(col("uri"), col("propId"), col("surfaceForm").as("kbValue"))
+      .select(kbVals.columns.toSeq.map(c =>
+        if (c == "kbValue") col("surfaceForm").as("kbValue") else col(c)): _*)
     kbVals.unionByName(alts)
   }
 

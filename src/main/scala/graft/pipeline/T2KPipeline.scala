@@ -20,12 +20,12 @@ import org.apache.spark.sql.functions._
  * `Classes.Consensus`, `Schema.CombineThreshold`, `CandidateIndex.DfCap`),
  * or in [[T2KPipeline]] when the stage takes it as a parameter
  * because other callers pass other values. [[T2KConfig]] holds only what a
- * caller varies.
+ * caller varies: the two `T2KMain` flags `--iterations` and
+ * `--mapped-ratio`.
  */
 case class T2KConfig(
   numIterations: Int = 1,     // T2KMatch.java:153-154
-  mappedRatio: Double = 0.0,  // >0: keep tables with nMapped/nRows >= it (A8)
-  saltHotTokenDf: Long = 0)   // >0: salt the candidate token join for tokens at/above this df
+  mappedRatio: Double = 0.0)  // >0: keep tables with nMapped/nRows >= it (A8)
 
 /** `schemaCombined` is the final iteration's PRE-top-1 combined schema
   * corr matrix — the input the reference's SF emission filter consumed
@@ -114,7 +114,7 @@ object T2KPipeline {
     // T2D selection recall, no loss).
     val selection = ckpt("candidates_selected", spread(Candidates.generate(
       cells, keyCols, tokens, SelectionCandidates, SelectionThreshold,
-      rankByIdf = true, saltHotTokenDf = cfg.saltHotTokenDf)))
+      rankByIdf = true)))
 
     // --- class decision (A1-A3) -----------------------------------------
     val classes0 = ckpt("classes_decided", Classes.decide(selection, kb.classes))

@@ -31,7 +31,7 @@ class SFMatchersSpec extends SparkSpec {
     val tables = webCols.select("tableName").distinct()
       .withColumn("classId", lit(cityClass))
     val seeds = SFMatchers.labelSeeds(webCols, kb.props, kb.propsByClass, tables)
-    val corrs = SFMatchers.run(seeds, "A", 0.10, "stable")
+    val corrs = SimilarityFlooding.run(seeds)
       .join(kb.props.select($"propId".as("right"), $"header".as("propHeader")), "right")
     // WInte.r lowercases web headers at parse time; ours preserve case
     val headerOf = webCols.select("colIdx", "header").as[(Int, String)]
@@ -61,8 +61,8 @@ class SFMatchersSpec extends SparkSpec {
       .map { case (t, r, u) => (t, r, u, kb1Class) }
       .toDF("tableName", "rowNum", "uri", "classId")
     val seeds = SFMatchers.valueSeeds(corrs, cells, kb.cells, webCols,
-      Some(MicroCorpus.surfaceFormsDf(spark)), typed = true)
-    val out = SFMatchers.run(seeds, "A", 0.10, "stable")
+      MicroCorpus.surfaceFormsDf(spark), typed = true)
+    val out = SimilarityFlooding.run(seeds)
     val authorProp = kb.props
       .filter($"propUri" === "http://dbpedia.org/ontology/PopulatedPlace/author")
       .select($"propId").as[Int].head()
@@ -82,10 +82,36 @@ class SFMatchersSpec extends SparkSpec {
       .map { case (t, r, u) => (t, r, u, kb1Class) }
       .toDF("tableName", "rowNum", "uri", "classId")
     val seeds = SFMatchers.valueSeeds(corrs, cells, kb.cells, webCols,
-      None, typed = false)
+      MicroCorpus.surfaceFormsDf(spark), typed = false)
     // string mode has no type gate: every (text col × prop) pair seeded
     assert(seeds.count() > 0)
     assert(seeds.select("groupKey").distinct().count() === 1)
+  }
+
+  test("F3 value matcher matches a web value to its KB value through a surface form") {
+    val docs = MicroCorpus.docs(spark)
+    val kb = KbIngest.fromLodTables(spark, MicroCorpus.lodTables, MicroCorpus.classHierarchy)
+    val cells = SpanCodec.cells(docs)
+    val webCols = SpanCodec.columns(docs)
+    val kb1Class = kb.classes.filter($"className" === "kbtable1")
+      .select($"classId").as[Int].head()
+    // rows 1 and 2 of webtable1 ("yesterday", "tomorrow") name Gestern and
+    // Morgen: their name cells equal a surface form of the KB label only
+    val corrs = MicroCorpus.gsInstance
+      .filter { case (t, r, _) => t == "webtable1.csv" && (r == 1 || r == 2) }
+      .map { case (t, r, u) => (t, r, u, kb1Class) }
+      .toDF("tableName", "rowNum", "uri", "classId")
+    val sf = MicroCorpus.surfaceFormsDf(spark)
+    def nameLabelScore(surfaceForms: org.apache.spark.sql.DataFrame,
+                       typed: Boolean): Option[Double] =
+      SFMatchers.valueSeeds(corrs, cells, kb.cells, webCols, surfaceForms, typed)
+        .filter($"left" === 0 && $"right" === KbIngest.RdfsLabelPropId)
+        .select("score").as[Double].collect().headOption
+    val modes = Seq(true, false)
+    val withSf = modes.map(t => s"typed=$t" -> nameLabelScore(sf, t))
+    val withoutSf = modes.map(t => s"typed=$t" -> nameLabelScore(sf.limit(0), t))
+    assert(withSf.forall(_._2.contains(1.0)), s"with surface forms: $withSf")
+    assert(withoutSf.forall(_._2.forall(_ < 1.0)), s"without surface forms: $withoutSf")
   }
 
   test("F5 sweep emits one evaluated row per configuration") {

@@ -3,8 +3,9 @@ package graft.pipeline
 import graft.SparkSpec
 import graft.checkpoint.LocalCheckpointer
 import graft.fixtures.ScaleGen
-import graft.kb.KbIngest
+import graft.kb.{CandidateIndex, KbIngest}
 import graft.model.SpanCodec
+import graft.onetoone.SFMatchers
 import graft.triples.Triples
 import org.apache.spark.sql.DataFrame
 
@@ -13,7 +14,7 @@ import org.apache.spark.sql.DataFrame
   * `DontCompileHugeMethods` leaves any method over 8,000 bytes of
   * bytecode in the interpreter for every row it processes; similarity
   * operands copied into each other as Column trees produced 25–65 KB
-  * methods in these four stages. */
+  * methods in four of these stages. */
 class CodegenSizeSpec extends SparkSpec {
   private val HugeMethodLimit = 8000
 
@@ -33,7 +34,10 @@ class CodegenSizeSpec extends SparkSpec {
     val (_, tokens, variants) = T2KPipeline.index(kb, sf, LocalCheckpointer)
     val selection = Candidates.generate(cells, keyCols, tokens, 50, 0.2)
     Map(
+      "CandidateIndex.build" -> CandidateIndex.build(kb.cells, sf),
       "Candidates.keyTokens" -> Candidates.keyTokens(cells, keyCols),
+      "Candidates.generate" -> selection,
+      "Classes.decide" -> Classes.decide(selection, kb.classes),
       "Candidates.refineFromSelection" -> Candidates.refineFromSelection(
         selection, result.classCorrs, cells, keyCols, tokens, variants, 100, 0.7),
       "Schema.duplicateBased" -> Schema.duplicateBased(result.instanceCorrs,
@@ -41,12 +45,15 @@ class CodegenSizeSpec extends SparkSpec {
       "Identity.resolve" -> Identity.resolve(result.instanceCorrs,
         result.schemaCorrs, keyCols, cells, kb.cells, webCols),
       "Triples.generate" -> Triples.generate(result.instanceCorrs,
-        result.schemaCorrs, cells, kb.cells, kb.props, webCols))
+        result.schemaCorrs, cells, kb.cells, kb.props, webCols),
+      "SFMatchers.valueSeeds" -> SFMatchers.valueSeeds(result.instanceCorrs,
+        cells, kb.cells, webCols, sf, typed = true))
   }
 
-  for (name <- Seq("Candidates.keyTokens", "Candidates.refineFromSelection",
-      "Schema.duplicateBased",
-      "Identity.resolve", "Triples.generate"))
+  for (name <- Seq("CandidateIndex.build", "Candidates.keyTokens",
+      "Candidates.generate", "Classes.decide", "Candidates.refineFromSelection",
+      "Schema.duplicateBased", "Identity.resolve", "Triples.generate",
+      "SFMatchers.valueSeeds"))
     test(s"$name: every generated method stays under the JIT limit") {
       val df = stages(name)
       assert(df.collect().nonEmpty, s"$name produced no rows") // final AQE plan
