@@ -8,6 +8,7 @@ import graft.onetoone.{OneToOne, SimilarityFlooding}
 import graft.ops.{Dedup, Multimodal, SimSearch, TextAnalysis}
 import graft.pipeline.{Candidates, Classes, Keys, Schema, T2KPipeline}
 import graft.triples.Canonicalizer
+import graft.util.Udfs
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -99,6 +100,7 @@ object SparkEntry {
         col("p_partkey").cast("int").as("rowNum"), lit(0).as("colIdx"),
         lit("text").as("kind"), text.as("text"),
         lit(null).cast("string").as("mediaRef"))
+      .select(col("*") +: Udfs.operands("text"): _*)
     val keyCols = s.createDataFrame(java.util.List.of[Row](Row("part", 0)),
       StructType(Seq(StructField("tableName", StringType),
         StructField("colIdx", IntegerType))))

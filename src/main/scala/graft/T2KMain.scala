@@ -2,7 +2,7 @@ package graft
 
 import graft.checkpoint.{Materialize, ParquetCheckpointer}
 import graft.eval.{Diagnostics, Evaluator}
-import graft.kb.Loaders
+import graft.kb.{KbIngest, Loaders}
 import graft.onetoone.{SFMatchers, SimilarityFlooding}
 import graft.pipeline.{T2KConfig, T2KPipeline}
 import graft.triples.GraphSink
@@ -175,10 +175,10 @@ object T2KMain {
       val seeds = mode match {
         case "label" => SFMatchers.labelSeeds(webCols, kb.props, kbPropsByClass, classes)
         case "label-kb2wb" => SFMatchers.labelSeeds(webCols, kb.props, kbPropsByClass, classes, "kb2wb")
-        case "value" => SFMatchers.valueSeeds(result.instanceCorrs, cells, kb.cells,
-          webCols, sf, typed = true)
-        case "value-string" => SFMatchers.valueSeeds(result.instanceCorrs, cells, kb.cells,
-          webCols, sf, typed = false)
+        case "value" => SFMatchers.valueSeeds(result.instanceCorrs, cells,
+          KbIngest.values(kb.cells, sf), webCols, typed = true)
+        case "value-string" => SFMatchers.valueSeeds(result.instanceCorrs, cells,
+          KbIngest.values(kb.cells, sf), webCols, typed = false)
         case other => throw new IllegalArgumentException(s"sf-matcher: $other")
       }
       val corrs = SimilarityFlooding.run(seeds)
@@ -212,8 +212,8 @@ object T2KMain {
         "pipeline" -> SFMatchers.pipelineMatrixSeeds(
           result.schemaCorrs, webCols, kb.propsByClass, classes),
         "label" -> SFMatchers.labelSeeds(webCols, kb.props, kb.propsByClass, classes),
-        "value" -> SFMatchers.valueSeeds(result.instanceCorrs, cells, kb.cells,
-          webCols, sf, typed = true))
+        "value" -> SFMatchers.valueSeeds(result.instanceCorrs, cells,
+          KbIngest.values(kb.cells, sf), webCols, typed = true))
       val goldPairs = opts.get("gs-property").map { p =>
         gold(p)
           .select(split(col("leftId"), "~Col").getItem(0).as("tableName"),

@@ -1,6 +1,5 @@
 package graft.kb
 
-import graft.text.Normalize
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -21,31 +20,18 @@ object CandidateIndex {
 
   private val DfCap = 100000L
 
-  /** kbCells (long form) + surfaceForms(label, surfaceForm) ->
-    * names(uri, classId, nameNorm, nameTokens). */
-  def entityNames(kbCells: DataFrame, surfaceForms: DataFrame): DataFrame = {
-    val labels = kbCells.filter(col("propId") === KbIngest.RdfsLabelPropId)
-      .select(col("uri"), col("classId"),
-        Normalize.normaliseCol(col("value")).as("labelNorm"))
-      .filter(col("labelNorm").isNotNull)
-    val sfNames = labels.join(
-        surfaceForms.select(Normalize.normaliseCol(col("label")).as("labelNorm"),
-          Normalize.normaliseCol(col("surfaceForm")).as("nameNorm")),
-        Seq("labelNorm"))
-      .select(col("uri"), col("classId"), col("nameNorm"))
-    labels.select(col("uri"), col("classId"), col("labelNorm").as("nameNorm"))
-      .unionByName(sfNames)
-      .filter(col("nameNorm").isNotNull)
-      .distinct()
-  }
-
-  /** names -> candidate_tokens(token, idf, uri, classId, nameId, nNameTok).
+  /** kb_cells ([[KbIngest.values]]) -> candidate_tokens(token, idf, uri,
+    * classId, nameId, nNameTok). The names are the normalised labels and
+    * their surface forms: the label rows of `kbValues`, `viaSf` or not.
     * Token sets are distinct per name so Jaccard can be computed exactly
     * from shared-token counts in the lookup join. Names are carried as
     * 64-bit hashes — only name identity matters downstream, and hashed
     * keys keep the lookup join's shuffle rows narrow. */
-  def build(kbCells: DataFrame, surfaceForms: DataFrame): DataFrame = {
-    val names = entityNames(kbCells, surfaceForms)
+  def build(kbValues: DataFrame): DataFrame = {
+    val names = kbValues.filter(col("propId") === KbIngest.RdfsLabelPropId)
+      .select(col("uri"), col("classId"), col("valueNorm").as("nameNorm"))
+      .filter(col("nameNorm").isNotNull)
+      .distinct()
       .withColumn("tokens", array_distinct(split(col("nameNorm"), " ")))
       .withColumn("nNameTok", size(col("tokens")))
       .withColumn("nameId", xxhash64(col("nameNorm")))

@@ -2,6 +2,8 @@ package graft.kb
 
 import graft.checkpoint.Materialize
 import graft.model.Dtype
+import graft.text.Normalize
+import graft.util.Udfs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -31,8 +33,8 @@ case class LodTable(className: String, headers: Seq[String],
  *  - classWeight = 1 - size/maxSize (KnowledgeBase.java:341-364);
  *  - per-property value-majority dtype inference and per-class dims.
  *
- * Output tables (see FIXTURES.md §2): kb_cells (long form, one row per
- * (classId, uri, propId, value)), kb_props, kb_classes. At cluster scale
+ * Output tables (see FIXTURES.md §2): cells (typed by [[values]] into the
+ * `kb_cells` stage), kb_props, kb_classes. At cluster scale
  * kb_cells is written partitioned by classId (Zipfian class sizes —
  * partition pruning + AQE skew handling).
  */
@@ -203,5 +205,23 @@ object KbIngest {
       .select("classId", "propId", "dtype").distinct()
 
     Ingested(cells, props, classes, propsByClass)
+  }
+
+  /** The `kb_cells` stage, surface forms expanded once (S5,
+    * DBpediaIndexer.java:67-70): each KB value with its operands
+    * ([[Udfs.operands]]) and `viaSf = false`, plus, per surface form whose
+    * normalised label equals a value's `valueNorm`, that value's row with
+    * the surface form as `value`, its own operands and `viaSf = true`.
+    * Identity resolution and triples drop the `viaSf` rows. */
+  def values(cells: DataFrame, surfaceForms: DataFrame): DataFrame = {
+    def typed(df: DataFrame, viaSf: Boolean): DataFrame =
+      df.select(col("*") +: Udfs.operands("value") :+ lit(viaSf).as("viaSf"): _*)
+    val own = typed(cells, viaSf = false)
+    val byLabel = surfaceForms.select(
+      Normalize.normaliseCol(col("label")).as("labelNorm"), col("surfaceForm"))
+    val alts = own.join(byLabel, col("valueNorm") === col("labelNorm"))
+      .select(cells.columns.toSeq.map(c =>
+        if (c == "value") col("surfaceForm").as(c) else col(c)): _*)
+    own.unionByName(typed(alts, viaSf = true))
   }
 }

@@ -42,9 +42,11 @@ object SpanCodec {
         col("span.media_ref").as("mediaRef"), col("span.offset").as("colIdx"))
   }
 
-  /** Data cells only (text + media rows; header docs excluded). */
+  /** Data cells only (text + media rows; header docs excluded), each with
+    * its text's operands, typed once here ([[graft.util.Udfs.operands]]). */
   def cells(docs: DataFrame): DataFrame =
     explodeSpans(docs).filter(!col("isHeader")).drop("isHeader")
+      .select(col("*") +: graft.util.Udfs.operands("text"): _*)
 
   /** Header cells: (tableName, colIdx, header). */
   def headers(docs: DataFrame): DataFrame =
@@ -66,17 +68,15 @@ object SpanCodec {
       .withColumn("isMedia", col("kind") === "media")
       .withColumn("isDate", col("text").rlike(datePat))
       .withColumn("isNum", !col("isDate") && col("text").rlike(numPat))
-      .withColumn("numVal", graft.util.SafeCast.toDouble(col("text")))
-      .withColumn("dateVal", graft.util.SafeCast.toDateSafe(col("text")))
     val agg = typed.groupBy(col("tableName"), col("colIdx")).agg(
       count(when(col("text").isNotNull, 1)).as("nText"),
       count(when(col("isMedia"), 1)).as("nMedia"),
       count(lit(1)).as("nAll"),
       count(when(col("isDate"), 1)).as("nDate"),
       count(when(col("isNum"), 1)).as("nNum"),
-      kurtosis(col("numVal")).as("kurtosis"),
-      min(when(col("isDate"), year(col("dateVal")))).as("minYear"),
-      max(when(col("isDate"), year(col("dateVal")))).as("maxYear"),
+      kurtosis(col("textNum")).as("kurtosis"),
+      min(when(col("isDate"), year(col("textDate")))).as("minYear"),
+      max(when(col("isDate"), year(col("textDate")))).as("maxYear"),
       (countDistinct(col("text")).cast(DoubleType) /
         greatest(count(col("text")), lit(1)).cast(DoubleType)).as("uniqueness"),
       (count(col("text")).cast(DoubleType) /

@@ -3,8 +3,7 @@ package graft.onetoone
 import graft.checkpoint.Materialize
 import graft.eval.Evaluator
 import graft.model.{Dtype, SpanCodec}
-import graft.pipeline.Schema
-import graft.text.{Normalize, Similarity}
+import graft.text.Similarity
 import graft.util.Udfs
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -55,53 +54,44 @@ object SFMatchers {
    * only same-type pairs count, ValueTypeComparatorWB2KB.java:75-92);
    * string mode compares everything with Levenshtein over surface-form
    * alternatives of either side (ValueStringComparatorWB2KB.java:57-98).
-   * Both modes expand the KB values with `surfaceForms` and orient the
-   * seeds WB2KB.
+   * Both modes compare with every row of `kbValues` ([[graft.kb.KbIngest.values]]),
+   * surface forms included, and orient the seeds WB2KB.
    */
-  def valueSeeds(instanceCorrs: DataFrame, cells: DataFrame, kbCells: DataFrame,
-                 webCols: DataFrame, surfaceForms: DataFrame,
-                 typed: Boolean = true): DataFrame = {
+  def valueSeeds(instanceCorrs: DataFrame, cells: DataFrame, kbValues: DataFrame,
+                 webCols: DataFrame, typed: Boolean = true): DataFrame = {
     val corrs = instanceCorrs.select("tableName", "rowNum", "uri", "classId")
     val webVals = cells.filter(col("kind") === "text" && col("text").isNotNull)
-      .select("tableName", "rowNum", "colIdx", "text")
+      .select("tableName", "rowNum", "colIdx", "textNorm", "textNum", "textDate")
     val colMeta = webCols
       .withColumn("yearRange", SpanCodec.yearRange)
       .select("tableName", "colIdx", "dtype", "yearRange")
-    // surface-form alternatives of the KB value (string comparisons take
-    // the max over them, both matcher variants)
-    val kbVals = Schema.expandWithSurfaceForms(kbCells
-      .select(col("uri"), col("propId"), col("value").as("kbValue"),
-        col("dtype").as("kbDtype")), surfaceForms)
+    val kbVals = kbValues.select(col("uri"), col("propId"), col("dtype").as("kbDtype"),
+      col("valueNorm"), col("valueNum"), col("valueDate"))
     val joined = corrs
       .join(webVals, Seq("tableName", "rowNum"))
       .join(colMeta, Seq("tableName", "colIdx"))
       .join(kbVals, Seq("uri"))
 
-    // operands projected once per row (Udfs.withTypedOperands)
     val typeMismatch = col("dtype") =!= col("kbDtype")
-    val (strA, strB) = (col("textNorm"), col("kbValueNorm"))
-    val (operands, sim) =
+    val (strA, strB) = (col("textNorm"), col("valueNorm"))
+    val sim =
       if (typed) {
         val floor = (c: org.apache.spark.sql.Column) =>
           when(c >= 0.2, c).otherwise(0.0) // comparator threshold 0.2
-        (Udfs.withTypedOperands(joined, col("dtype"), typeMismatch, "text", "kbValue"),
-          when(typeMismatch, lit(null).cast("double"))
-            .when(col("dtype") === Dtype.Numeric,
-              floor(coalesce(Similarity.deviationSimCol(col("textNum"),
-                col("kbValueNum")), lit(0.0))))
-            .when(col("dtype") === Dtype.Date,
-              floor(coalesce(Similarity.weightedDateSimCol(col("textDate"),
-                col("kbValueDate"), col("yearRange")), lit(0.0))))
-            .otherwise(coalesce(Udfs.gsj02(strA, strB), lit(0.0))))
-      } else
-        (joined.withColumn("textNorm", Normalize.normaliseCol(col("text")))
-          .withColumn("kbValueNorm", Normalize.normaliseCol(col("kbValue"))),
-          coalesce(Similarity.levenshteinSimCol(strA, strB), lit(0.0)))
+        when(typeMismatch, lit(null).cast("double"))
+          .when(col("dtype") === Dtype.Numeric,
+            floor(coalesce(Similarity.deviationSimCol(col("textNum"),
+              col("valueNum")), lit(0.0))))
+          .when(col("dtype") === Dtype.Date,
+            floor(coalesce(Similarity.weightedDateSimCol(col("textDate"),
+              col("valueDate"), col("yearRange")), lit(0.0))))
+          .otherwise(coalesce(Udfs.gsj02(strA, strB), lit(0.0)))
+      } else coalesce(Similarity.levenshteinSimCol(strA, strB), lit(0.0))
 
     // max over a KB cell's (multi-)values + surface forms, then mean over
     // the pair's instance corrs; type-mismatched pairs (null sim) are
     // excluded from numerator and count
-    val perCorr = operands.withColumn("rawSim", sim)
+    val perCorr = joined.withColumn("rawSim", sim)
       .groupBy(col("tableName"), col("classId"), col("rowNum"),
         col("colIdx"), col("propId"))
       .agg(max(col("rawSim")).as("sim"))

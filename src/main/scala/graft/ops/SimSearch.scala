@@ -125,7 +125,9 @@ object SimSearch {
     * vectors re-attach to the distinct survivors for the exact re-rank
     * (guide §8: decide with small rows, move payloads once; the previous
     * shape shuffled qv/cv through the bucket join AND ran distinct over
-    * the vector payload columns). */
+    * the vector payload columns). An exact duplicate row counts once;
+    * an id carried by two different vectors yields one row per (id,
+    * vector), and a query id's top `k` span all its vectors. */
   def lshTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
               vecCol: String, k: Int, tables: Int = 8, nBits: Int = 12,
               dim: Int = 64, bucketCap: Int = 100000): DataFrame = {
@@ -334,7 +336,9 @@ object SimSearch {
   }
 
   /** Embedding-cosine near-duplicate pairs (id1 < id2, cosine >= threshold)
-    * via the same LSH bucketing — the embedding leg of Dedup. */
+    * via the same LSH bucketing — the embedding leg of Dedup. As in
+    * [[lshTopK]], an id carried by two different vectors yields one row
+    * per (id, vector). */
   def cosineNearDupPairs(vectors: DataFrame, idCol: String, vecCol: String,
                          threshold: Double, tables: Int = 8, nBits: Int = 12,
                          dim: Int = 64, bucketCap: Int = 100000): DataFrame = {

@@ -1,6 +1,5 @@
 package graft.pipeline
 
-import graft.text.Normalize
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -57,7 +56,7 @@ object Candidates {
     cells.join(keyCols, Seq("tableName", "colIdx"))
       .filter(col("kind") === "text")
       .select(xxhash64(col("tableName")).as("tableId"), col("rowNum"),
-        Normalize.normaliseCol(col("text")).as("keyNorm"))
+        col("textNorm").as("keyNorm"))
       .filter(col("keyNorm").isNotNull)
       .withColumn("keyTokens", array_distinct(split(col("keyNorm"), " ")))
       .withColumn("nKeyTok", size(col("keyTokens")))

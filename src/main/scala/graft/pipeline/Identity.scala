@@ -47,7 +47,7 @@ object Identity {
   private val ValueThreshold = 0.4   // IdentityResolution.java:77-96
 
   def resolve(candidates: DataFrame, schemaCorrs: DataFrame, keyCols: DataFrame,
-              cells: DataFrame, kbCells: DataFrame, webCols: DataFrame): DataFrame = {
+              cells: DataFrame, kbValues: DataFrame, webCols: DataFrame): DataFrame = {
     // keyCols/colMeta are O(#tables) dims — no forced broadcast (AQE picks).
     val corrs = schemaCorrs
       .join(keyCols.withColumn("isKey", lit(true)),
@@ -62,15 +62,16 @@ object Identity {
         col("dtype"), col("yearRange"))
     val webVals = cells.filter(col("kind") === "text")
       .select(xxhash64(col("tableName")).as("tableId"), col("rowNum"),
-        col("colIdx"), col("text"))
-    val kbVals = kbCells.select(xxhash64(col("uri")).as("uriId"),
-      col("propId"), col("value").as("kbValue"))
+        col("colIdx"), col("text"), col("textNorm"), col("textNum"), col("textDate"))
+    // the KB's own values: surface forms are not compared here
+    val kbVals = kbValues.filter(!col("viaSf"))
+      .select(xxhash64(col("uri")).as("uriId"), col("propId"), col("value"),
+        col("valueNorm"), col("valueNum"), col("valueDate"))
 
-    // typed operands projected once per row (Udfs.withTypedOperands);
     // null = non-comparable (reference compare() == -1, skipped entirely)
-    val nonComparable = col("text").isNull || col("kbValue").isNull
-    val (aNum, bNum) = (col("textNum"), col("kbValueNum"))
-    val (aDate, bDate) = (col("textDate"), col("kbValueDate"))
+    val nonComparable = col("text").isNull || col("value").isNull
+    val (aNum, bNum) = (col("textNum"), col("valueNum"))
+    val (aDate, bDate) = (col("textDate"), col("valueDate"))
     val nullD = lit(null).cast("double")
     val typedSim =
       when(nonComparable, nullD)
@@ -81,7 +82,7 @@ object Identity {
           when(aDate.isNotNull && bDate.isNotNull,
             Similarity.weightedDateSimCol(aDate, bDate, col("yearRange")))
             .otherwise(nullD))
-        .otherwise(Udfs.gsjFast(col("textNorm"), col("kbValueNorm")))
+        .otherwise(Udfs.gsjFast(col("textNorm"), col("valueNorm")))
 
     val perCorr = candidates
       .select(xxhash64(col("tableName")).as("tableId"), col("rowNum"),
@@ -91,8 +92,6 @@ object Identity {
       .join(webVals, Seq("tableId", "rowNum", "colIdx"), "left")
       .join(kbVals, Seq("uriId", "propId"), "left")
       .join(colMeta, Seq("tableId", "colIdx"), "left")
-      .transform(Udfs.withTypedOperands(_, col("dtype"), nonComparable,
-        "text", "kbValue"))
       .withColumn("rawSim", typedSim)
       // Multi-valued KB cells: best value counts (max ignores nulls; sim0
       // stays null only when NO comparable value exists for the pair).

@@ -60,35 +60,20 @@ object Schema {
   }
 
   /** Typed value similarity dispatch (R4-R6 semantics) over the operands
-    * of [[Udfs.withTypedOperands]]: string -> GSJ
+    * of the web cell and the KB value ([[Udfs.operands]]): string -> GSJ
     * with the reference's 0.5 jaccard floor (DuplicateBasedSchemaMatching
     * .java:81 wires GeneralisedStringJaccard(Levenshtein, 0.5, 0.5), which
     * zeroes scores below 0.5 BEFORE the 0.4 vote threshold), numeric ->
     * deviation sim, date -> weighted date sim (1,3,5) — the non-string
     * comparators have no inner floor. */
   private def valueSim(dtypeCol: String): org.apache.spark.sql.Column = {
-    val strSim = Udfs.gsjFast(col("textNorm"), col("kbValueNorm"))
-    val numSim = Similarity.deviationSimCol(col("textNum"), col("kbValueNum"))
-    val dateSim = Similarity.weightedDateSimCol(col("textDate"), col("kbValueDate"),
+    val strSim = Udfs.gsjFast(col("textNorm"), col("valueNorm"))
+    val numSim = Similarity.deviationSimCol(col("textNum"), col("valueNum"))
+    val dateSim = Similarity.weightedDateSimCol(col("textDate"), col("valueDate"),
       col("yearRange"))
     when(col(dtypeCol) === Dtype.Numeric, coalesce(numSim, lit(0.0)))
       .when(col(dtypeCol) === Dtype.Date, coalesce(dateSim, lit(0.0)))
       .otherwise(coalesce(strSim, lit(0.0)))
-  }
-
-  /** R5 surface-form expansion: string KB values additionally compare
-    * against their surface forms; the later max-per-pair keeps the best
-    * (MatchableTableRowComparatorBasedOnSurfaceForms.java:34-127). Each
-    * alternative row keeps every other column of `kbVals`, in its order,
-    * with the surface form in place of `kbValue`. */
-  def expandWithSurfaceForms(kbVals: DataFrame, surfaceForms: DataFrame): DataFrame = {
-    val alts = kbVals.join(
-        surfaceForms.select(Normalize.normaliseCol(col("label")).as("labelNorm"),
-          col("surfaceForm")),
-        Normalize.normaliseCol(col("kbValue")) === col("labelNorm"))
-      .select(kbVals.columns.toSeq.map(c =>
-        if (c == "kbValue") col("surfaceForm").as("kbValue") else col(c)): _*)
-    kbVals.unionByName(alts)
   }
 
   /**
@@ -97,11 +82,14 @@ object Schema {
    * (duplicate × blocked pair) with value sim >= `VoteThreshold` votes
    * sim × dupScore; score = sum(votes)/count(votes), kept above
    * `resultThreshold`. rdfs:label is never a vote target
-   * (SchemaVotingRule.java:71-92).
+   * (SchemaVotingRule.java:71-92). `kbValues` ([[KbIngest.values]]) holds
+   * each KB value's surface forms as extra rows: string KB values are
+   * also compared with their surface forms, and the max per pair keeps
+   * the best (R5, MatchableTableRowComparatorBasedOnSurfaceForms
+   * .java:34-127).
    */
-  def duplicateBased(candidates: DataFrame, cells: DataFrame, kbCells: DataFrame,
-                     pairs: DataFrame, resultThreshold: Double,
-                     surfaceForms: DataFrame): DataFrame = {
+  def duplicateBased(candidates: DataFrame, cells: DataFrame, kbValues: DataFrame,
+                     pairs: DataFrame, resultThreshold: Double): DataFrame = {
     // The top-DupK window keeps its STRING tie-break (score desc, uri asc
     // — reference ordering); the ids enter only after it, so the heavy
     // joins and both vote aggregations below run on 8-byte tableId/uriId
@@ -116,11 +104,9 @@ object Schema {
         xxhash64(col("uri")).as("uriId"), col("score").as("dupScore"))
     val webVals = cells.filter(col("kind") === "text")
       .select(xxhash64(col("tableName")).as("tableId"), col("rowNum"),
-        col("colIdx"), col("text"))
-    val kbVals = expandWithSurfaceForms(
-      kbCells.select(col("uri"), col("propId"), col("value").as("kbValue")),
-      surfaceForms)
-      .withColumn("uriId", xxhash64(col("uri"))).drop("uri")
+        col("colIdx"), col("textNorm"), col("textNum"), col("textDate"))
+    val kbVals = kbValues.select(xxhash64(col("uri")).as("uriId"), col("propId"),
+      col("valueNorm"), col("valueNum"), col("valueDate"))
     // pairs is O(#tables × cols × props) — never force a broadcast of it;
     // AQE broadcasts when it measures small.
     val pairsEnc = pairs.filter(col("propId") =!= KbIngest.RdfsLabelPropId)
@@ -129,7 +115,6 @@ object Schema {
       .join(webVals, Seq("tableId", "rowNum"))
       .join(pairsEnc, Seq("tableId", "colIdx"))
       .join(kbVals, Seq("uriId", "propId"))
-      .transform(Udfs.withTypedOperands(_, col("dtype"), lit(false), "text", "kbValue"))
       .withColumn("sim", valueSim("dtype"))
     // Multi-valued KB cells: one vote per (duplicate, column pair) = max sim.
     val votes = joined
@@ -153,7 +138,8 @@ object Schema {
       .select("tableName", "colIdx", "propId", "score")
   }
 
-  /** R7/R10: label-based matching over headers of blocked pairs. */
+  /** R7/R10: label-based matching over headers of blocked pairs. Headers
+    * are normalised here: they are column metadata, not cell values. */
   def labelBased(pairs: DataFrame, webCols: DataFrame, kbProps: DataFrame): DataFrame = {
     pairs.join(webCols.select("tableName", "colIdx", "header"), Seq("tableName", "colIdx"))
       .join(broadcast(kbProps.select(col("propId"), col("header").as("propHeader"))), "propId")

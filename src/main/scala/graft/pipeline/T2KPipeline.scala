@@ -58,23 +58,23 @@ object T2KPipeline {
           .orderBy(col("score").desc, col(tieCol).asc)))
       .filter(col("rk") === 1).drop("rk")
 
-  /** The index stages (S5): `kb_cells` -> `candidate_tokens` ->
+  /** The index stages (S5): `kb_cells` ([[KbIngest.values]]: the KB's
+    * values and their surface forms, typed once) -> `candidate_tokens` ->
     * `candidate_variants`, returned in that order. A durable checkpoint
     * dir built by `T2KMain --build-index` (the reference's offline
     * DBpediaIndexer.main, DBpediaIndexer.java:133-159) is resumed by a
     * later [[run]] against the same dir instead of rebuilt. */
   def index(kb: KbIngest.Ingested, surfaceForms: DataFrame,
             ckpt: Checkpointer): (DataFrame, DataFrame, DataFrame) = {
-    // kb.cells feeds ~8 downstream joins: checkpoint once so each reuse
+    // kb_cells feeds ~8 downstream joins: checkpoint once so each reuse
     // references the materialised table, not the full ingest lineage.
-    val kbCells = ckpt("kb_cells", kb.cells)
-    val tokens = ckpt("candidate_tokens",
-      CandidateIndex.build(kbCells, surfaceForms))
+    val kbValues = ckpt("kb_cells", KbIngest.values(kb.cells, surfaceForms))
+    val tokens = ckpt("candidate_tokens", CandidateIndex.build(kbValues))
     // deletion-variant expansion: a pure function of the index — built and
     // checkpointed ONCE here; rebuilding it inside each generate() call was
     // the refinement stage's dominant cost (270 s on the T2D run)
     val variants = ckpt("candidate_variants", Candidates.variantIndex(tokens))
-    (kbCells, tokens, variants)
+    (kbValues, tokens, variants)
   }
 
   /** Every frame [[Materialize]] persists during the run (its
@@ -90,7 +90,7 @@ object T2KPipeline {
     val webCols = ckpt("web_cols", SpanCodec.columns(docs)) // small dim: one row/column
     val keyCols = Keys.detect(webCols)
     val keyCorrs = Keys.keyCorrs(keyCols)
-    val (kbCells, tokens, variants) = index(kb, surfaceForms, ckpt)
+    val (kbValues, tokens, variants) = index(kb, surfaceForms, ckpt)
     // from the header block (NOT from cell values): valueless properties
     // still exist for label matching and class refinement
     val kbPropsByClass = ckpt("kb_props_by_class", kb.propsByClass)
@@ -127,8 +127,8 @@ object T2KPipeline {
 
     // --- first duplicate-based schema matching + class refinement -------
     val pairs0 = Schema.blockPairs(webCols, classes0, kbPropsByClass)
-    val dup0 = ckpt("schema_dup_seed", Schema.duplicateBased(refined, cells, kbCells,
-      pairs0, DupResultThreshold, surfaceForms))
+    val dup0 = ckpt("schema_dup_seed", Schema.duplicateBased(refined, cells, kbValues,
+      pairs0, DupResultThreshold))
     val schemaSeed = dup0.unionByName(keyCorrs.join(
       dup0.select("tableName", "colIdx"), Seq("tableName", "colIdx"), "left_anti"))
     val classesRefined = Classes.refine(schemaSeed, propClasses, classes0)
@@ -165,13 +165,13 @@ object T2KPipeline {
     val nIter = math.max(cfg.numIterations, 1)
     for (it <- 0 until nIter) {
       val label = Schema.labelBased(pairs, webCols, kb.props)
-      val dup = Schema.duplicateBased(instanceCands, cells, kbCells, pairs,
-        DupLoopThreshold, surfaceForms)
+      val dup = Schema.duplicateBased(instanceCands, cells, kbValues, pairs,
+        DupLoopThreshold)
       val combined = Schema.combine(dup, label, keyCorrs)
       schemaCorrs = if (it == 0) combined else Schema.update(schemaCorrs, combined)
       schemaCorrs = ckpt(s"schema_corrs_it$it", schemaCorrs)
       val resolved = spread(Identity.resolve(
-        instanceCands, schemaCorrs, keyCols, cells, kbCells, webCols))
+        instanceCands, schemaCorrs, keyCols, cells, kbValues, webCols))
       instanceCands =
         if (it == nIter - 1 && !ckpt.durable) resolved
         else ckpt(s"instance_cands_it$it", resolved)
@@ -205,7 +205,7 @@ object T2KPipeline {
     // single consumer (the caller's write/collect) -> barrier elided for
     // non-durable checkpointers; ParquetCheckpointer users still get a
     // durable stage via ckpt
-    val triplesDf = Triples.generate(instF, schemaF, cells, kbCells,
+    val triplesDf = Triples.generate(instF, schemaF, cells, kbValues,
       kb.props, webCols)
     val triples = if (ckpt.durable) ckpt("triples", triplesDf) else triplesDf
 

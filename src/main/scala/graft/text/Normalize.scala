@@ -22,9 +22,9 @@ import java.util.regex.Pattern
  * its own result several times, read several times by a similarity
  * expression, compiled into generated methods far above HotSpot's
  * 8,000-byte JIT limit (`DontCompileHugeMethods`) — those ran in the
- * bytecode interpreter on every row. A kernel call is one small node;
- * callers that read an operand more than once still project it once
- * (see [[graft.util.Udfs.withTypedOperands]]).
+ * bytecode interpreter on every row. A kernel call is one small node,
+ * run once per value where it enters ([[graft.util.Udfs.operands]]);
+ * [[normalise]] is idempotent, so a normalised operand is only split.
  */
 object Normalize {
   private val HtmlEscapes = Seq("&nbsp;" -> " ", "&nbsp" -> " ", "&amp;" -> " ",
@@ -44,10 +44,11 @@ object Normalize {
   }
 
   /** Pure-Scala tokenise: normalise then split on whitespace. */
-  def tokenise(raw: String): Array[String] = {
-    val n = normalise(raw)
-    if (n == null) Array.empty else n.split(" ").filter(_.nonEmpty)
-  }
+  def tokenise(raw: String): Array[String] = tokens(normalise(raw))
+
+  /** The tokens of an already-normalised string (null: none). */
+  def tokens(norm: String): Array[String] =
+    if (norm == null) Array.empty else norm.split(" ").filter(_.nonEmpty)
 
   import org.apache.spark.sql.Column
   import org.apache.spark.sql.functions.udf

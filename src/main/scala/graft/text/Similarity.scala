@@ -77,9 +77,14 @@ object Similarity {
    */
   def generalisedStringJaccard(a: String, b: String,
                                innerThreshold: Double = 0.5,
-                               jaccardThreshold: Double = 0.5): Double = {
-    val ta = Normalize.tokenise(a)
-    val tb = Normalize.tokenise(b)
+                               jaccardThreshold: Double = 0.5): Double =
+    gsjTokens(Normalize.tokenise(a), Normalize.tokenise(b),
+      innerThreshold, jaccardThreshold)
+
+  /** The GSJ kernel over token arrays: [[generalisedStringJaccard]] and
+    * the `Udfs.gsj` UDFs (which only split normalised operands) share it. */
+  def gsjTokens(ta: Array[String], tb: Array[String],
+                innerThreshold: Double, jaccardThreshold: Double): Double = {
     if (ta.isEmpty || tb.isEmpty) return 0.0
     val pairs = for {
       i <- ta.indices; j <- tb.indices

@@ -4,13 +4,15 @@ import graft.{Sessions, SparkEntry}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 import java.nio.file.{Files, Paths}
+import scala.collection.mutable
 
 /**
  * Developer tools over SparkEntry.queries, behind one main:
  *
  *   runMain graft.tools.Tools plan <tag> <suffix> [query ...]
  *     writes `.explain("formatted")` of each query to
- *     plans/<tag>/<query>_<suffix>.txt (plan evidence for a change);
+ *     plans/<tag>/<query>_<suffix>.txt (plan evidence for a change), with
+ *     session ids renumbered ([[renumbered]]);
  *   runMain graft.tools.Tools time [reps] [query ...]
  *     times each query `reps` times (default 3) with graft.Bench's action
  *     (queryExecution.toRdd.count(): every output column of every row),
@@ -58,11 +60,22 @@ object Tools {
     val outDir = Paths.get("plans", tag)
     Files.createDirectories(outDir)
     names.foreach { name =>
-      val formatted = SparkEntry.queries(name)(spark, sfDir)
-        .queryExecution.explainString(FormattedMode)
+      val formatted = renumbered(SparkEntry.queries(name)(spark, sfDir)
+        .queryExecution.explainString(FormattedMode))
       Files.writeString(outDir.resolve(s"${name}_$suffix.txt"), formatted)
       println(s"wrote plans/$tag/${name}_$suffix.txt (${formatted.length} chars)")
     }
+  }
+
+  /** Session counters — expression ids (`#123`), `plan_id`s, RDD ids and
+    * lambda variable names — renumbered per kind by first appearance: two
+    * dumps of one plan give identical text. */
+  def renumbered(plan: String): String = {
+    val ids = mutable.Map.empty[String, mutable.Map[String, Int]]
+    """(#|plan_id=|RDD\[|lambda x_)(\d+)""".r.replaceAllIn(plan, m => {
+      val seen = ids.getOrElseUpdate(m.group(1), mutable.Map.empty)
+      m.group(1) + seen.getOrElseUpdate(m.group(2), seen.size)
+    })
   }
 
   private def time(spark: SparkSession, sfDir: String, reps: Int,

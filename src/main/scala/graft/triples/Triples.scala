@@ -26,24 +26,25 @@ import org.apache.spark.sql.functions._
 object Triples {
 
   def generate(instanceTop1: DataFrame, schemaCorrs: DataFrame,
-               cells: DataFrame, kbCells: DataFrame, kbProps: DataFrame,
+               cells: DataFrame, kbValues: DataFrame, kbProps: DataFrame,
                webCols: DataFrame): DataFrame = {
     val webVals = cells.filter(col("kind") === "text" && col("text").isNotNull)
-      .select("tableName", "rowNum", "colIdx", "text")
+      .select("tableName", "rowNum", "colIdx", "text", "textNorm", "textNum", "textDate")
     val colTypes = webCols
       .withColumn("yearRange", SpanCodec.yearRange)
       .select("tableName", "colIdx", "dtype", "yearRange")
-    val kbVals = kbCells.select(col("uri"), col("propId"), col("value").as("kbValue"))
+    // the KB's own values: a surface form is not a known fact
+    val kbVals = kbValues.filter(!col("viaSf")).select(col("uri"), col("propId"),
+      col("value").as("kbValue"), col("valueNorm"), col("valueNum"), col("valueDate"))
 
-    // typed operands projected once per row (Udfs.withTypedOperands)
     val noKbValue = col("kbValue").isNull
-    val strSim = Udfs.gsjFast(col("textNorm"), col("kbValueNorm"))
-    val numSim = Similarity.percentageSimCol(col("textNum"), col("kbValueNum"), 0.05)
+    val strSim = Udfs.gsjFast(col("textNorm"), col("valueNorm"))
+    val numSim = Similarity.percentageSimCol(col("textNum"), col("valueNum"), 0.05)
     // Dates: WeightedDateSimilarity(1,3,5) thresholded at 0.9
     // (T2KMatch.java:676-677) — near-miss dates (same year/month, different
     // day) still count as LCWA-correct, exact equality does not.
     // The floor reads the sim twice: it is bound once as column `wds`.
-    val wds = Similarity.weightedDateSimCol(col("textDate"), col("kbValueDate"),
+    val wds = Similarity.weightedDateSimCol(col("textDate"), col("valueDate"),
       col("yearRange"))
     val dateSim = when(col("wds") >= 0.9, col("wds")).otherwise(0.0)
     val lcwaSim =
@@ -70,7 +71,6 @@ object Triples {
       .join(webVals, Seq("tableName", "rowNum", "colIdx"))
       .join(colTypes, Seq("tableName", "colIdx"), "left") // O(#tables) dim: AQE decides
       .join(kbVals, Seq("uri", "propId"), "left")
-      .transform(Udfs.withTypedOperands(_, col("dtype"), noKbValue, "text", "kbValue"))
       .withColumn("wds", wds)
       .withColumn("lcwaSim", lcwaSim)
     // Closest KB value decides LCWA correctness (multi-valued cells).

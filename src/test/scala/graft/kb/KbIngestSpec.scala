@@ -3,6 +3,9 @@ package graft.kb
 import graft.SparkSpec
 import graft.fixtures.MicroCorpus
 import graft.model.Dtype
+import graft.text.Normalize
+import graft.util.Udfs
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 class KbIngestSpec extends SparkSpec {
@@ -89,5 +92,62 @@ class KbIngestSpec extends SparkSpec {
     val vals = kb2.cells.filter(col("propId") =!= KbIngest.RdfsLabelPropId)
       .select("value").collect().map(_.getString(0)).toSet
     assert(vals === Set("a", "b"))
+  }
+
+  private def sorted(df: DataFrame, cols: Seq[String]): Seq[String] =
+    df.select(cols.map(col): _*).collect().map(_.toSeq.mkString("|")).toSeq.sorted
+
+  test("values: the KB's own rows are kb.cells row for row, plus their operands") {
+    val values = KbIngest.values(kb.cells, MicroCorpus.surfaceFormsDf(spark))
+    assert(values.columns.toSeq === kb.cells.columns.toSeq ++
+      Seq("valueNorm", "valueNum", "valueDate", "viaSf"))
+    val own = values.filter(!col("viaSf"))
+    assert(sorted(own, kb.cells.columns) === sorted(kb.cells, kb.cells.columns))
+    val typed = kb.cells.select(col("*") +: Udfs.operands("value"): _*)
+    assert(sorted(own, typed.columns) === sorted(typed, typed.columns))
+    own.select("value", "valueNorm").collect().foreach { r =>
+      assert(r.getString(1) === Normalize.normalise(r.getString(0)))
+    }
+    val mannheim = own.filter(col("uri") === "http://dbpedia.org/resource/University_Of_Mannheim" &&
+      col("propId") =!= KbIngest.RdfsLabelPropId).select("valueNum", "valueDate").head()
+    assert(mannheim === Row(1989.0, java.sql.Date.valueOf("1989-01-01")))
+  }
+
+  test("values: one row per matching surface form, with the surface form's operands") {
+    val sf = MicroCorpus.surfaceFormsDf(spark)
+    val values = KbIngest.values(kb.cells, sf)
+    val alts = values.filter(col("viaSf"))
+    // expected: every (kb cell, surface form) whose normalised label equals
+    // the cell's normalised value, the surface form in place of the value
+    val expected = for {
+      r <- kb.cells.collect().toSeq
+      (label, form) <- MicroCorpus.surfaceForms
+      if Normalize.normalise(r.getAs[String]("value")) == Normalize.normalise(label)
+    } yield Seq(r.getAs[String]("uri"), r.getAs[Int]("propId"), form,
+      Normalize.normalise(form)).mkString("|")
+    assert(expected.size === MicroCorpus.surfaceForms.size) // each form matches once
+    assert(sorted(alts, Seq("uri", "propId", "value", "valueNorm")) === expected.sorted)
+    // the rest of each row is its value's row; operands are the form's own
+    val typed = kb.cells.join(sf, Normalize.normaliseCol(col("value")) ===
+        Normalize.normaliseCol(col("label")))
+      .withColumn("value", col("surfaceForm")).drop("label", "surfaceForm")
+      .select(col("*") +: Udfs.operands("value"): _*)
+    assert(sorted(alts, typed.columns) === sorted(typed, typed.columns))
+    // a value that matches no label adds no row
+    assert(alts.filter(col("uri") === "http://dbpedia.org/resource/Day_After").isEmpty)
+  }
+
+  test("values: null and empty labels never join") {
+    import spark.implicits._
+    // KB values and labels that all normalise to null
+    val cells = Seq((0, "c", "http://x/a", 0, "(null)", Dtype.String),
+        (0, "c", "http://x/b", 1, "---", Dtype.String))
+      .toDF("classId", "className", "uri", "propId", "value", "dtype")
+    val sf = Seq[(String, String)]((null, "x"), ("", "y"), ("NULL", "z"),
+        ("   ", "w"), ("(null)", "v"), ("---", "u"))
+      .toDF("label", "surfaceForm")
+    val values = KbIngest.values(cells, sf)
+    assert(values.filter(col("viaSf")).isEmpty)
+    assert(values.count() === 2)
   }
 }

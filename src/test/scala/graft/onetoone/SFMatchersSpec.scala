@@ -60,8 +60,8 @@ class SFMatchersSpec extends SparkSpec {
     val corrs = MicroCorpus.gsInstance.filter(_._1 == "webtable1.csv")
       .map { case (t, r, u) => (t, r, u, kb1Class) }
       .toDF("tableName", "rowNum", "uri", "classId")
-    val seeds = SFMatchers.valueSeeds(corrs, cells, kb.cells, webCols,
-      MicroCorpus.surfaceFormsDf(spark), typed = true)
+    val seeds = SFMatchers.valueSeeds(corrs, cells,
+      KbIngest.values(kb.cells, MicroCorpus.surfaceFormsDf(spark)), webCols, typed = true)
     val out = SimilarityFlooding.run(seeds)
     val authorProp = kb.props
       .filter($"propUri" === "http://dbpedia.org/ontology/PopulatedPlace/author")
@@ -81,8 +81,8 @@ class SFMatchersSpec extends SparkSpec {
     val corrs = MicroCorpus.gsInstance.filter(_._1 == "webtable1.csv")
       .map { case (t, r, u) => (t, r, u, kb1Class) }
       .toDF("tableName", "rowNum", "uri", "classId")
-    val seeds = SFMatchers.valueSeeds(corrs, cells, kb.cells, webCols,
-      MicroCorpus.surfaceFormsDf(spark), typed = false)
+    val seeds = SFMatchers.valueSeeds(corrs, cells,
+      KbIngest.values(kb.cells, MicroCorpus.surfaceFormsDf(spark)), webCols, typed = false)
     // string mode has no type gate: every (text col × prop) pair seeded
     assert(seeds.count() > 0)
     assert(seeds.select("groupKey").distinct().count() === 1)
@@ -104,7 +104,8 @@ class SFMatchersSpec extends SparkSpec {
     val sf = MicroCorpus.surfaceFormsDf(spark)
     def nameLabelScore(surfaceForms: org.apache.spark.sql.DataFrame,
                        typed: Boolean): Option[Double] =
-      SFMatchers.valueSeeds(corrs, cells, kb.cells, webCols, surfaceForms, typed)
+      SFMatchers.valueSeeds(corrs, cells, KbIngest.values(kb.cells, surfaceForms),
+        webCols, typed)
         .filter($"left" === 0 && $"right" === KbIngest.RdfsLabelPropId)
         .select("score").as[Double].collect().headOption
     val modes = Seq(true, false)

@@ -327,6 +327,23 @@ class OpsSpec extends SparkSpec {
       expected)
   }
 
+  test("LSH ops: an id carried by two different vectors yields one row per (id, vector)") {
+    val rnd = new scala.util.Random(13)
+    val v = Array.fill(64)(rnd.nextFloat() * 2 - 1)
+    def near() = v.map(x => x + (rnd.nextFloat() - 0.5f) * 0.002f)
+    val far = (3 until 40).map(i => (i.toLong, Array.fill(64)(rnd.nextFloat() * 2 - 1)))
+    // id 1 carries two different vectors, both near id 2's
+    val vecs = (Seq((1L, near()), (1L, near()), (2L, near())) ++ far)
+      .toDF("vec_id", "embedding")
+    val pairs = SimSearch.cosineNearDupPairs(vecs, "vec_id", "embedding", 0.99)
+      .filter($"id1" === 1L && $"id2" === 2L).select("cosine").as[Double].collect()
+    assert(pairs.length === 2 && pairs.distinct.length === 2, pairs.mkString(","))
+    val ann = SimSearch.lshTopK(vecs.filter($"vec_id" === 2L), vecs,
+        "vec_id", "embedding", 3)
+      .filter($"cid" === 1L).select("cosine").as[Double].collect()
+    assert(ann.length === 2 && ann.distinct.length === 2, ann.mkString(","))
+  }
+
   test("minhash signature kernel is bit-identical to the expression tree") {
     // the one-pass UDF kernel replaced the CodegenFallback HOF tree for
     // DRAM reasons; the LSH oracle (q_minhash_lsh) recomputes signatures

@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.SparkSpec
+import graft.util.Udfs
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
@@ -28,6 +29,7 @@ class CandidatesSpec extends SparkSpec {
     .select(lit("t").as("tableName"), col("rowNum"), lit(0).as("colIdx"),
       lit("text").as("kind"), col("text"),
       lit(null).cast("string").as("mediaRef"))
+    .select(col("*") +: Udfs.operands("text"): _*)
 
   /** index rows from (uri, classId, name) triples — one token row per
     * (uri, name, token), exactly like CandidateIndex.build output. */

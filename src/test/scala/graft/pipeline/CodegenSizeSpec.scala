@@ -31,28 +31,32 @@ class CodegenSizeSpec extends SparkSpec {
     val webCols = SpanCodec.columns(docs)
     val keyCols = Keys.detect(webCols)
     val pairs = Schema.blockPairs(webCols, result.classCorrs, kb.propsByClass)
+    val kbValues = KbIngest.values(kb.cells, sf)
     val (_, tokens, variants) = T2KPipeline.index(kb, sf, LocalCheckpointer)
     val selection = Candidates.generate(cells, keyCols, tokens, 50, 0.2)
     Map(
-      "CandidateIndex.build" -> CandidateIndex.build(kb.cells, sf),
+      "KbIngest.values" -> kbValues,
+      "CandidateIndex.build" -> CandidateIndex.build(kbValues),
       "Candidates.keyTokens" -> Candidates.keyTokens(cells, keyCols),
       "Candidates.generate" -> selection,
       "Classes.decide" -> Classes.decide(selection, kb.classes),
       "Candidates.refineFromSelection" -> Candidates.refineFromSelection(
         selection, result.classCorrs, cells, keyCols, tokens, variants, 100, 0.7),
       "Schema.duplicateBased" -> Schema.duplicateBased(result.instanceCorrs,
-        cells, kb.cells, pairs, 0.02, sf),
+        cells, kbValues, pairs, 0.02),
+      "Schema.labelBased" -> Schema.labelBased(pairs, webCols, kb.props),
       "Identity.resolve" -> Identity.resolve(result.instanceCorrs,
-        result.schemaCorrs, keyCols, cells, kb.cells, webCols),
+        result.schemaCorrs, keyCols, cells, kbValues, webCols),
       "Triples.generate" -> Triples.generate(result.instanceCorrs,
-        result.schemaCorrs, cells, kb.cells, kb.props, webCols),
+        result.schemaCorrs, cells, kbValues, kb.props, webCols),
       "SFMatchers.valueSeeds" -> SFMatchers.valueSeeds(result.instanceCorrs,
-        cells, kb.cells, webCols, sf, typed = true))
+        cells, kbValues, webCols, typed = true))
   }
 
-  for (name <- Seq("CandidateIndex.build", "Candidates.keyTokens",
-      "Candidates.generate", "Classes.decide", "Candidates.refineFromSelection",
-      "Schema.duplicateBased", "Identity.resolve", "Triples.generate",
+  for (name <- Seq("KbIngest.values", "CandidateIndex.build",
+      "Candidates.keyTokens", "Candidates.generate", "Classes.decide",
+      "Candidates.refineFromSelection", "Schema.duplicateBased",
+      "Schema.labelBased", "Identity.resolve", "Triples.generate",
       "SFMatchers.valueSeeds"))
     test(s"$name: every generated method stays under the JIT limit") {
       val df = stages(name)

@@ -6,6 +6,7 @@ import graft.eval.Evaluator
 import graft.fixtures.MicroCorpus
 import graft.kb.{CandidateIndex, KbIngest}
 import graft.model.{Doc, Span, SpanCodec}
+import graft.util.Udfs
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -44,7 +45,7 @@ class PipelineSpec extends SparkSpec {
   test("candidate generation resolves surface forms and redirects") {
     val cells = SpanCodec.cells(docs)
     val keyCols = Keys.detect(SpanCodec.columns(docs))
-    val index = CandidateIndex.build(kb.cells, sf)
+    val index = CandidateIndex.build(KbIngest.values(kb.cells, sf))
     val cands = Candidates.generate(cells, keyCols, index, 50, 0.2)
     val best = cands.withColumn("rk", row_number().over(
         org.apache.spark.sql.expressions.Window
@@ -61,8 +62,9 @@ class PipelineSpec extends SparkSpec {
   test("fuzzy lookup (edit distance 1) links a typo'd key cell") {
     val cells = Seq(("webtableX.csv", 0, 0, "text", "uni mannheem", null: String))
       .toDF("tableName", "rowNum", "colIdx", "kind", "text", "mediaRef")
+      .select(col("*") +: Udfs.operands("text"): _*)
     val keyCols = Seq(("webtableX.csv", 0)).toDF("tableName", "colIdx")
-    val index = CandidateIndex.build(kb.cells, sf)
+    val index = CandidateIndex.build(KbIngest.values(kb.cells, sf))
     // exact-token selection (th 0.7) loses the typo'd key...
     val exact = Candidates.generate(cells, keyCols, index, 50, 0.7)
     assert(exact.count() === 0)

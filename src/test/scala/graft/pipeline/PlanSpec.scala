@@ -42,7 +42,8 @@ class PlanSpec extends SparkSpec {
     val kb = KbIngest.fromLodTables(spark, MicroCorpus.lodTables, MicroCorpus.classHierarchy)
     val cells = SpanCodec.cells(docs)
     val keyCols = Keys.detect(SpanCodec.columns(docs))
-    val index = CandidateIndex.build(kb.cells, MicroCorpus.surfaceFormsDf(spark))
+    val index = CandidateIndex.build(
+      KbIngest.values(kb.cells, MicroCorpus.surfaceFormsDf(spark)))
     import spark.implicits._
     val classes = Seq(("webtable1.csv", 0), ("webtable2.csv", 1))
       .toDF("tableName", "classId")
@@ -59,7 +60,8 @@ class PlanSpec extends SparkSpec {
     val kb = KbIngest.fromLodTables(spark, MicroCorpus.lodTables, MicroCorpus.classHierarchy)
     val cells = SpanCodec.cells(docs)
     val keyCols = Keys.detect(SpanCodec.columns(docs))
-    val index = CandidateIndex.build(kb.cells, MicroCorpus.surfaceFormsDf(spark))
+    val index = CandidateIndex.build(
+      KbIngest.values(kb.cells, MicroCorpus.surfaceFormsDf(spark)))
     val cands = Candidates.generate(cells, keyCols, index, 50, 0.2)
     val plan = executedPlan(cands)
     // the HOT candidate aggregations (per-name/per-uri — the only ones

@@ -48,7 +48,8 @@ class StreamsSpec extends SparkSpec {
     implicit val sc = spark.sqlContext
     val kb = KbIngest.fromLodTables(spark, MicroCorpus.lodTables,
       MicroCorpus.classHierarchy)
-    val index = CandidateIndex.build(kb.cells, MicroCorpus.surfaceFormsDf(spark))
+    val index = CandidateIndex.build(
+      KbIngest.values(kb.cells, MicroCorpus.surfaceFormsDf(spark)))
       .persist()
     val batchDocs = MicroCorpus.docs(spark)
     val keyCols = Keys.detect(graft.model.SpanCodec.columns(batchDocs))

@@ -7,15 +7,7 @@ import graft.SparkSpec
   * agree row for row on hostile web-cell text. */
 class NormalizeSpec extends SparkSpec {
   import spark.implicits._
-
-  private val hostile: Seq[String] = Seq(
-    null, "", "NULL", "null", " Null ", "   ", "\t\n", "a\tb\nc\r\nd",
-    "Hello,&nbsp;World!", "a&nbspb", "&nbsp;", "&amp;&quot;x&apos;&#39;",
-    "Paris (France)", "a (b (c) d) e", "open (bracket", "close) bracket",
-    "()", "(null)", "Z\u00fcrich", "\u0130stanbul", "\u0130", "\u212A",
-    "\u212Aelvin 300\u212A", "\u00c0\u00c9\u00ce\u00d5\u00dc \u00df", "\u03a3\u039f\u03a3",
-    "0123456789", "007", "3.14", "1,234,567", "2012-07-16", "\u65e5\u672c\u8a9e",
-    "emoji \ud83d\ude00 ok", "MiXeD-CaSe_with_underscores")
+  import NormalizeSpec.hostile
 
   test("kernel column, reference chain and pure normalise agree row for row") {
     val df = hostile.zipWithIndex.map { case (s, i) => (i, s) }.toDF("i", "s")
@@ -34,4 +26,16 @@ class NormalizeSpec extends SparkSpec {
     assert(Normalize.tokenise("null").isEmpty)
     assert(Normalize.tokenise(null).isEmpty)
   }
+}
+
+object NormalizeSpec {
+  /** Hostile web-cell text: nulls, blanks, escapes, brackets, non-ASCII. */
+  val hostile: Seq[String] = Seq(
+    null, "", "NULL", "null", " Null ", "   ", "\t\n", "a\tb\nc\r\nd",
+    "Hello,&nbsp;World!", "a&nbspb", "&nbsp;", "&amp;&quot;x&apos;&#39;",
+    "Paris (France)", "a (b (c) d) e", "open (bracket", "close) bracket",
+    "()", "(null)", "Z\u00fcrich", "\u0130stanbul", "\u0130", "\u212A",
+    "\u212Aelvin 300\u212A", "\u00c0\u00c9\u00ce\u00d5\u00dc \u00df", "\u03a3\u039f\u03a3",
+    "0123456789", "007", "3.14", "1,234,567", "2012-07-16", "\u65e5\u672c\u8a9e",
+    "emoji \ud83d\ude00 ok", "MiXeD-CaSe_with_underscores")
 }

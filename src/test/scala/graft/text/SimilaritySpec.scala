@@ -1,8 +1,9 @@
 package graft.text
 
-import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSpec
+import graft.util.Udfs
 
-class SimilaritySpec extends AnyFunSuite {
+class SimilaritySpec extends SparkSpec {
   // seeded generator: property-style checks without extra test deps
   private def randomStrings(n: Int): Seq[String] = {
     val rnd = new scala.util.Random(42)
@@ -45,6 +46,23 @@ class SimilaritySpec extends AnyFunSuite {
     // soft match: one-edit tokens count ("mannhein" ~ "mannheim")
     val s = Similarity.generalisedStringJaccard("uni mannhein", "uni mannheim")
     assert(s > 0.9 && s < 1.0)
+  }
+
+  test("GSJ UDFs over normalised operands equal GSJ over the raw strings") {
+    import spark.implicits._
+    val hostile = NormalizeSpec.hostile.zipWithIndex
+    val pairs = for ((a, i) <- hostile; (b, j) <- hostile) yield (i, j, a, b)
+    val (na, nb) = (Normalize.normaliseCol($"a"), Normalize.normaliseCol($"b"))
+    val got = pairs.toDF("i", "j", "a", "b")
+      .select($"i", $"j", Udfs.gsj(na, nb), Udfs.gsj02(na, nb), Udfs.gsjFast(na, nb))
+      .collect().map(r => (r.getInt(0), r.getInt(1)) ->
+        (r.getDouble(2), r.getDouble(3), r.getDouble(4))).toMap
+    assert(got.size === pairs.size)
+    pairs.foreach { case (i, j, a, b) =>
+      val gsj = Similarity.generalisedStringJaccard(a, b, 0.5, 0.5)
+      val gsj02 = Similarity.generalisedStringJaccard(a, b, 0.2, 0.2)
+      assert(got((i, j)) === ((gsj, gsj02, gsj)), s"pair ($i, $j)")
+    }
   }
 
   test("numeric sims") {
