@@ -6,6 +6,7 @@ import graft.kb.{KbIngest, Loaders}
 import graft.onetoone.{SFMatchers, SimilarityFlooding}
 import graft.pipeline.{T2KConfig, T2KPipeline}
 import graft.triples.GraphSink
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /**
@@ -29,11 +30,16 @@ import org.apache.spark.sql.functions._
 object T2KMain {
 
   def main(args: Array[String]): Unit = {
+    val spark = Sessions(sys.env.getOrElse("SPARK_MASTER", "local[32]"),
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    try run(spark, args) finally spark.stop()
+  }
+
+  /** The whole CLI on a caller's session, which it leaves running. */
+  def run(spark: SparkSession, args: Array[String]): Unit = {
     val opts = args.sliding(2, 2).collect {
       case Array(k, v) if k.startsWith("--") => k.drop(2) -> v
     }.toMap
-    val spark = Sessions(sys.env.getOrElse("SPARK_MASTER", "local[32]"),
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
 
     val hierarchy = opts.get("ontology")
       .map(Loaders.loadClassHierarchy(spark, _)).getOrElse(Nil)
@@ -54,7 +60,6 @@ object T2KMain {
     if (opts.contains("build-index")) {
       T2KPipeline.index(kb, sf, new ParquetCheckpointer(spark, opts("build-index")))
       println(s"built candidate index in ${opts("build-index")}")
-      spark.stop()
       return
     }
 
@@ -75,7 +80,12 @@ object T2KMain {
     result.schemaCorrs.join(kb.props.select("propId", "propUri"), "propId")
       .write.mode("overwrite").parquet(s"$out/schema_correspondences")
     result.classCorrs.write.mode("overwrite").parquet(s"$out/class_decision")
+    // the triples are built once, by this write; the CSV and the LCWA
+    // summary below read the written table back, without its partition
+    // columns
     GraphSink.write(result.triples, s"$out/triples")
+    val triples = spark.read.parquet(s"$out/triples")
+      .select(result.triples.columns.map(col): _*)
 
     // Reference-format CSV artifacts (what a reference user diffs:
     // CSVCorrespondenceFormatter outputs + class_decision + triples,
@@ -91,10 +101,10 @@ object T2KMain {
         col("propUri").as("id2"), col("score")), s"$out/csv/schema_correspondences")
     csv(result.classCorrs.select(col("tableName"), col("className"), col("score")),
       s"$out/csv/class_decision")
-    csv(result.triples, s"$out/csv/extracted_triples")
+    csv(triples, s"$out/csv/extracted_triples")
     csv(Diagnostics.candidateStats(result.instanceCorrs), s"$out/csv/candidate_statistics")
     // LCWA summary (reference prints existing/correct%/new counts)
-    val lcwa = graft.triples.Triples.lcwaStats(result.triples).collect()
+    val lcwa = graft.triples.Triples.lcwaStats(triples).collect()
       .map(r => (r.getBoolean(0), r.getBoolean(1)) -> r.getLong(2)).toMap
     val existing = lcwa.collect { case ((false, _), n) => n }.sum
     val correct = lcwa.getOrElse((false, true), 0L)
@@ -384,6 +394,5 @@ object T2KMain {
     }
 
     println(s"wrote correspondences + triples to $out")
-    spark.stop()
   }
 }

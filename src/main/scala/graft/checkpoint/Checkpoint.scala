@@ -16,18 +16,14 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
  * per stage) records stage name, row count, partition count, per-partition
  * row counts and wall time — the "per-partition lineage + metrics" the
  * north rule asks for.
+ *
+ * A checkpointer only decides how a stage is stored, never which frames
+ * are stages: the pipeline names the same stages whichever checkpointer
+ * it is given, as the reference's caches store what the matcher computes
+ * without changing it.
  */
 trait Checkpointer {
   def apply(name: String, df: => DataFrame): DataFrame
-  /** True when stages persist across runs (resume contract). Pipelines may
-    * skip barriers for single-consumer stages when the checkpointer is
-    * NOT durable: a truncation barrier on a stage with exactly one
-    * consumer buys no plan-size or recompute reduction — it only costs a
-    * full extra materialisation round (measured on the micro corpus:
-    * ~1-2 s per barrier, pure AQE/scheduling overhead). Durable
-    * checkpointers keep every stage so the on-disk manifest and resume
-    * behavior are unchanged. */
-  def durable: Boolean = false
 }
 
 /** The one compute-once barrier: materialise `df` once and return a
@@ -100,7 +96,6 @@ object LocalCheckpointer extends Checkpointer {
 }
 
 class ParquetCheckpointer(spark: SparkSession, dir: String) extends Checkpointer {
-  override def durable: Boolean = true
   Files.createDirectories(Paths.get(dir))
   private val manifestPath = Paths.get(dir, "manifest.jsonl")
 

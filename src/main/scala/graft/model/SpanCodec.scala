@@ -1,6 +1,6 @@
 package graft.model
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -61,13 +61,17 @@ object SpanCodec {
   /** Per-column type inference + stats, one distributed aggregation.
     * Majority vote over non-null text cells: date if >50% match ISO date,
     * else numeric if >50% parse as number, else string. Media columns get
-    * dtype 'media'. Uniqueness feeds key detection (SURVEY.md §2.10). */
+    * dtype 'media'. Uniqueness feeds key detection (SURVEY.md §2.10).
+    * `yearRange` is the column's year span, 1.0 for a column without
+    * dates: the date comparator's range
+    * (MatchableTableRowDateComparator.java:68-71). */
   def columns(docs: DataFrame): DataFrame = {
     val c = cells(docs)
     val typed = c.filter(col("kind") =!= "header")
       .withColumn("isMedia", col("kind") === "media")
       .withColumn("isDate", col("text").rlike(datePat))
       .withColumn("isNum", !col("isDate") && col("text").rlike(numPat))
+    val dateYear = when(col("isDate"), year(col("textDate")))
     val agg = typed.groupBy(col("tableName"), col("colIdx")).agg(
       count(when(col("text").isNotNull, 1)).as("nText"),
       count(when(col("isMedia"), 1)).as("nMedia"),
@@ -75,8 +79,8 @@ object SpanCodec {
       count(when(col("isDate"), 1)).as("nDate"),
       count(when(col("isNum"), 1)).as("nNum"),
       kurtosis(col("textNum")).as("kurtosis"),
-      min(when(col("isDate"), year(col("textDate")))).as("minYear"),
-      max(when(col("isDate"), year(col("textDate")))).as("maxYear"),
+      coalesce((max(dateYear) - min(dateYear)).cast(DoubleType), lit(1.0))
+        .as("yearRange"),
       (countDistinct(col("text")).cast(DoubleType) /
         greatest(count(col("text")), lit(1)).cast(DoubleType)).as("uniqueness"),
       (count(col("text")).cast(DoubleType) /
@@ -92,14 +96,9 @@ object SpanCodec {
         .otherwise(lit(Dtype.String)))
     withType.join(headers(docs), Seq("tableName", "colIdx"), "left")
       .select(col("tableName"), col("colIdx"), col("header"), col("dtype"),
-        col("kurtosis"), col("minYear"), col("maxYear"), col("uniqueness"),
+        col("kurtosis"), col("yearRange"), col("uniqueness"),
         col("coverage"), col("avgLen"), col("digitFrac"))
   }
-
-  /** Year span of a [[columns]] row, 1.0 for a column without dates: the
-    * date comparator's range (MatchableTableRowDateComparator.java:68-71). */
-  val yearRange: Column =
-    coalesce((col("maxYear") - col("minYear")).cast("double"), lit(1.0))
 
   /** Re-encode cells back into the docs shape (for round-trip testing and
     * checkpoint materialisation). Spans sorted by original offset. */

@@ -2,7 +2,7 @@ package graft.onetoone
 
 import graft.checkpoint.Materialize
 import graft.eval.Evaluator
-import graft.model.{Dtype, SpanCodec}
+import graft.model.Dtype
 import graft.text.Similarity
 import graft.util.Udfs
 import org.apache.spark.sql.DataFrame
@@ -62,9 +62,7 @@ object SFMatchers {
     val corrs = instanceCorrs.select("tableName", "rowNum", "uri", "classId")
     val webVals = cells.filter(col("kind") === "text" && col("text").isNotNull)
       .select("tableName", "rowNum", "colIdx", "textNorm", "textNum", "textDate")
-    val colMeta = webCols
-      .withColumn("yearRange", SpanCodec.yearRange)
-      .select("tableName", "colIdx", "dtype", "yearRange")
+    val colMeta = webCols.select("tableName", "colIdx", "dtype", "yearRange")
     val kbVals = kbValues.select(col("uri"), col("propId"), col("dtype").as("kbDtype"),
       col("valueNorm"), col("valueNum"), col("valueDate"))
     val joined = corrs

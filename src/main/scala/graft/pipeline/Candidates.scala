@@ -284,7 +284,8 @@ object Candidates {
    * Candidate selection (reference lookup 1: top-50, th 0.2, edit
    * distance 0 — CandidateSelection.java:52-56):
    * (tableName, rowNum, uri, classId, score) with score = max over entity
-   * names of tokenJaccard(keyValue, name); top `numCandidates` per row with
+   * names of the token Jaccard of the key value and the name (WebJaccard,
+   * WebJaccardStringSimilarity.java:44-54); top `numCandidates` per row with
    * score >= simThreshold. With `rankByIdf` the top-N cut orders by the
    * IDF-weighted retrieval score (rare shared tokens beat stop-ish ones —
    * Lucene TF-IDF parity, SURVEY §2.2 B2) while the threshold keeps R1's

@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.kb.KbIngest
-import graft.model.{Dtype, SpanCodec}
+import graft.model.Dtype
 import graft.text.Similarity
 import graft.util.Udfs
 import org.apache.spark.sql.DataFrame
@@ -56,9 +56,7 @@ object Identity {
       .withColumn("w", when(col("isKey"), lit(KeyWeight)).otherwise(col("score")))
       .select(xxhash64(col("tableName")).as("tableId"), col("colIdx"),
         col("propId"), col("w"), col("isKey"))
-    val colMeta = webCols
-      .withColumn("yearRange", SpanCodec.yearRange)
-      .select(xxhash64(col("tableName")).as("tableId"), col("colIdx"),
+    val colMeta = webCols.select(xxhash64(col("tableName")).as("tableId"), col("colIdx"),
         col("dtype"), col("yearRange"))
     val webVals = cells.filter(col("kind") === "text")
       .select(xxhash64(col("tableName")).as("tableId"), col("rowNum"),

@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.kb.KbIngest
-import graft.model.{Dtype, SpanCodec}
+import graft.model.Dtype
 import graft.text.{Normalize, Similarity}
 import graft.util.Udfs
 import org.apache.spark.sql.DataFrame
@@ -54,7 +54,6 @@ object Schema {
       .filter(col("dtype") === col("kbDtype"))
       .filter(col("dtype") =!= Dtype.Numeric ||
         (col("kurtosis").isNotNull && col("kurtosis") >= KurtosisMin))
-      .withColumn("yearRange", SpanCodec.yearRange)
       .select("tableName", "colIdx", "propId", "classId", "dtype", "yearRange")
       .distinct()
   }

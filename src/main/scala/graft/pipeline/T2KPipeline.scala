@@ -13,7 +13,11 @@ import org.apache.spark.sql.functions._
  * /root/reference .../t2k/match/T2KMatch.java:250-684; lifecycle documented
  * in SURVEY.md §3.1). Every stage is a lazily-planned DataFrame transform;
  * every barrier between stages is a named stage of the run's
- * [[Checkpointer]] (resumable, with lineage, when it is durable).
+ * [[Checkpointer]]. The pipeline alone places the barriers: a frame is a
+ * stage when more than one consumer reads it, plus the three index stages
+ * of [[T2KPipeline.index]]; the last iteration's instance candidates and
+ * the triples have one consumer each and are never stages. Every
+ * checkpointer therefore sees the same stage names in the same order.
  *
  * Each reference threshold (SURVEY.md §7.4) is a constant stated once,
  * with its citation: in the stage object that applies it (e.g.
@@ -60,7 +64,7 @@ object T2KPipeline {
 
   /** The index stages (S5): `kb_cells` ([[KbIngest.values]]: the KB's
     * values and their surface forms, typed once) -> `candidate_tokens` ->
-    * `candidate_variants`, returned in that order. A durable checkpoint
+    * `candidate_variants`, returned in that order. A Parquet checkpoint
     * dir built by `T2KMain --build-index` (the reference's offline
     * DBpediaIndexer.main, DBpediaIndexer.java:133-159) is resumed by a
     * later [[run]] against the same dir instead of rebuilt. */
@@ -155,13 +159,11 @@ object T2KPipeline {
       Schema.blockPairs(webCols, classes, kbPropsByClass))
     var schemaCorrs: DataFrame = null
     var instanceCands: DataFrame = candidates
-    // Barrier elision for SINGLE-CONSUMER stages (non-durable
-    // checkpointers only): the final iteration's instance_cands feeds
-    // exactly one consumer (the 1:1 top-1 window), so a truncation
-    // barrier there buys nothing — its subtree is already bounded by the
-    // schema_corrs/candidates_filtered barriers — and costs one full AQE
-    // materialisation round. Durable (Parquet) runs keep every stage:
-    // resume layout and manifest are unchanged.
+    // The final iteration's instance_cands feeds exactly one consumer (the
+    // 1:1 top-1 window), so it is not a stage: a barrier there buys no
+    // plan-size or recompute reduction — its subtree is already bounded by
+    // the schema_corrs/candidates_filtered stages — and costs one full AQE
+    // materialisation round (~1-2 s per barrier on the micro corpus).
     val nIter = math.max(cfg.numIterations, 1)
     for (it <- 0 until nIter) {
       val label = Schema.labelBased(pairs, webCols, kb.props)
@@ -173,8 +175,7 @@ object T2KPipeline {
       val resolved = spread(Identity.resolve(
         instanceCands, schemaCorrs, keyCols, cells, kbValues, webCols))
       instanceCands =
-        if (it == nIter - 1 && !ckpt.durable) resolved
-        else ckpt(s"instance_cands_it$it", resolved)
+        if (it == nIter - 1) resolved else ckpt(s"instance_cands_it$it", resolved)
     }
 
     // --- 1:1 top-1 (T2KMatch.java:411-413) ------------------------------
@@ -202,12 +203,9 @@ object T2KPipeline {
       .join(broadcast(kb.classes.select("classId", "className")), "classId")
       .select(col("tableName"), col("classId"), col("className"),
         col("classScore").as("score"))
-    // single consumer (the caller's write/collect) -> barrier elided for
-    // non-durable checkpointers; ParquetCheckpointer users still get a
-    // durable stage via ckpt
-    val triplesDf = Triples.generate(instF, schemaF, cells, kbValues,
+    // single consumer (the caller's write or collect): not a stage
+    val triples = Triples.generate(instF, schemaF, cells, kbValues,
       kb.props, webCols)
-    val triples = if (ckpt.durable) ckpt("triples", triplesDf) else triplesDf
 
     T2KResult(instF, schemaF, classCorrs, triples, schemaCorrs)(scope)
   }

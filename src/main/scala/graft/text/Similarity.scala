@@ -6,19 +6,18 @@ import org.apache.spark.sql.functions._
 /**
  * Similarity measures with the configurations the reference uses
  * (catalogued in SURVEY.md §2.3; reference sites under /root/reference:
- * t2k/similarity/WebJaccardStringSimilarity.java:44-54 (token Jaccard over
- * normalised strings), t2k/match/comparators/SchemaLabelComparator.java:32-40
+ * t2k/match/comparators/SchemaLabelComparator.java:32-40
  * (GeneralisedStringJaccard(Levenshtein, 0.5, 0.5)),
  * t2k/match/comparators/MatchableTableRowDateComparator.java:50-82
  * (WeightedDateSimilarity(1,3,5) with year distance normalised by column
  * year range), T2KMatch.java:676 (PercentageSimilarity(0.05))).
  *
- * Golden values (reference WebJaccardStringSimilarityTest.java:14-21):
- *   sim("republic", "republic party") == 0.5; equal -> 1.0; disjoint -> 0.0.
- *
- * Each measure exists as a pure-Scala function (used inside mapGroups
- * kernels and tests) and, where hot, as a Catalyst Column expression so the
- * distributed path stays inside whole-stage codegen.
+ * Each measure has the one form production runs: the GSJ kernel is
+ * pure Scala (the `Udfs.gsj` UDFs call it), the numeric and date measures
+ * are Catalyst Column expressions, so the distributed path stays inside
+ * whole-stage codegen. Token Jaccard ("WebJaccard",
+ * WebJaccardStringSimilarity.java:44-54) is the score of
+ * `Candidates.generate`, computed inside its token join.
  */
 object Similarity {
 
@@ -58,16 +57,6 @@ object Similarity {
     when(m === 0, 1.0).otherwise(lit(1.0) - org.apache.spark.sql.functions.levenshtein(a, b).cast("double") / m)
   }
 
-  // ---- Token Jaccard over normalised strings ("WebJaccard") --------------
-  def tokenJaccard(a: String, b: String): Double = {
-    val ta = Normalize.tokenise(a).toSet
-    val tb = Normalize.tokenise(b).toSet
-    if (ta.isEmpty && tb.isEmpty) return 0.0
-    val inter = ta.intersect(tb).size.toDouble
-    val union = ta.union(tb).size.toDouble
-    if (union == 0) 0.0 else inter / union
-  }
-
   // ---- Generalised string Jaccard (soft token match via Levenshtein) -----
   /**
    * Jaccard where tokens count as matched if their Levenshtein similarity
@@ -103,15 +92,7 @@ object Similarity {
   }
 
   // ---- Numeric similarities ---------------------------------------------
-  /** Ratio/deviation similarity for numeric values (WInte.r DeviationSimilarity shape). */
-  def deviationSim(a: Double, b: Double): Double = {
-    if (a == b) return 1.0
-    if (a == 0.0 || b == 0.0) return 0.0
-    if (a > 0 != b > 0) return 0.0
-    val (lo, hi) = (math.min(math.abs(a), math.abs(b)), math.max(math.abs(a), math.abs(b)))
-    lo / hi
-  }
-
+  /** Ratio/deviation similarity (WInte.r DeviationSimilarity shape). */
   def deviationSimCol(a: Column, b: Column): Column = {
     val absA = abs(a); val absB = abs(b)
     when(a === b, 1.0)
@@ -121,13 +102,6 @@ object Similarity {
   }
 
   /** PercentageSimilarity(th): 1 - relDev if relDev < th else 0. */
-  def percentageSim(a: Double, b: Double, threshold: Double = 0.05): Double = {
-    val m = math.max(math.abs(a), math.abs(b))
-    if (m == 0) return if (a == b) 1.0 else 0.0
-    val rel = math.abs(a - b) / m
-    if (rel < threshold) 1.0 - rel else 0.0
-  }
-
   def percentageSimCol(a: Column, b: Column, threshold: Double = 0.05): Column = {
     val m = greatest(abs(a), abs(b))
     val rel = abs(a - b) / m
@@ -139,20 +113,9 @@ object Similarity {
   /**
    * Weighted average of per-component normalised distances; the year
    * distance is normalised by the web column's (max-min) year range
-   * (reference MatchableTableRowDateComparator.java:68-71).
+   * (reference MatchableTableRowDateComparator.java:68-71), floored at 1.
+   * Over date/timestamp columns and the column's `yearRange` column.
    */
-  def weightedDateSim(y1: Int, m1: Int, d1: Int, y2: Int, m2: Int, d2: Int,
-                      yearRange: Double,
-                      wDay: Double = 1.0, wMonth: Double = 3.0, wYear: Double = 5.0): Double = {
-    val yr = math.max(yearRange, 1.0)
-    val dy = math.min(math.abs(y1 - y2) / yr, 1.0)
-    val dm = math.min(math.abs(m1 - m2) / 12.0, 1.0)
-    val dd = math.min(math.abs(d1 - d2) / 31.0, 1.0)
-    val dist = (wDay * dd + wMonth * dm + wYear * dy) / (wDay + wMonth + wYear)
-    1.0 - dist
-  }
-
-  /** Column form over date/timestamp columns + per-column yearRange column. */
   def weightedDateSimCol(a: Column, b: Column, yearRange: Column,
                          wDay: Double = 1.0, wMonth: Double = 3.0, wYear: Double = 5.0): Column = {
     val yr = greatest(yearRange, lit(1.0))

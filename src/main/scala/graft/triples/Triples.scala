@@ -1,7 +1,7 @@
 package graft.triples
 
 import graft.kb.KbIngest
-import graft.model.{Dtype, SpanCodec}
+import graft.model.Dtype
 import graft.text.Similarity
 import graft.util.Udfs
 import org.apache.spark.sql.DataFrame
@@ -30,9 +30,7 @@ object Triples {
                webCols: DataFrame): DataFrame = {
     val webVals = cells.filter(col("kind") === "text" && col("text").isNotNull)
       .select("tableName", "rowNum", "colIdx", "text", "textNorm", "textNum", "textDate")
-    val colTypes = webCols
-      .withColumn("yearRange", SpanCodec.yearRange)
-      .select("tableName", "colIdx", "dtype", "yearRange")
+    val colTypes = webCols.select("tableName", "colIdx", "dtype", "yearRange")
     // the KB's own values: a surface form is not a known fact
     val kbVals = kbValues.filter(!col("viaSf")).select(col("uri"), col("propId"),
       col("value").as("kbValue"), col("valueNorm"), col("valueNum"), col("valueDate"))

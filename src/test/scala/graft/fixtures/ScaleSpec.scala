@@ -1,7 +1,7 @@
 package graft.fixtures
 
 import graft.SparkSpec
-import graft.checkpoint.ParquetCheckpointer
+import graft.checkpoint.{ParquetCheckpointer, RecordingCheckpointer}
 import graft.eval.Evaluator
 import graft.kb.KbIngest
 import graft.pipeline.T2KPipeline
@@ -82,9 +82,16 @@ class ScaleSpec extends SparkSpec {
     val t1 = r1.triples.collect().map(_.toString).sorted
     // manifest carries per-partition lineage
     val manifest = Files.readString(Paths.get(dir, "manifest.jsonl"))
-    assert(manifest.contains("\"stage\":\"triples\"") &&
-      manifest.contains("perPartitionRows"))
-    // the dims are durable stages too, so the resume below reuses them
+    assert(manifest.contains("perPartitionRows"))
+    // the checkpointer does not choose the stages: the manifest lists,
+    // in order, the stages a LocalCheckpointer run materialises
+    val recording = new RecordingCheckpointer
+    T2KPipeline.run(docs, kb2, sf2, ScaleGen.hierarchy(small).toMap,
+      ckpt = recording).release()
+    val manifestStages = "\"stage\":\"([^\"]+)\"".r
+      .findAllMatchIn(manifest).map(_.group(1)).toSeq
+    assert(manifestStages === recording.stages)
+    // the dims are stages too, so the resume below reuses them
     Seq("web_cols", "kb_props_by_class", "classes_decided", "schema_dup_seed",
       "classes_best", "classes_with_ancestors", "schema_pairs",
       "instance_top1", "schema_top1").foreach { s =>

@@ -29,6 +29,12 @@ class SpanCodecSpec extends SparkSpec {
     assert(cols(("webtable2.csv", 0)) === "numeric") // id
     assert(cols(("webtable2.csv", 1)) === "string")  // university
     assert(cols(("webtable2.csv", 2)) === "date")    // yearfounded
+    // the date comparator's year range: max - min year, 1.0 without dates
+    val yearRange = SpanCodec.columns(MicroCorpus.docs(spark))
+      .select("tableName", "colIdx", "yearRange").collect()
+      .map(r => (r.getString(0), r.getInt(1)) -> r.getDouble(2)).toMap
+    assert(yearRange(("webtable1.csv", 3)) === 44.0) // 1945 .. 1989
+    assert(yearRange(("webtable1.csv", 0)) === 1.0)
   }
 
   test("round-trip preserves span-sequence equality (kind, text, media_ref, order)") {

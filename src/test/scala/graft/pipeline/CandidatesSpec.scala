@@ -55,6 +55,18 @@ class CandidatesSpec extends SparkSpec {
     assert(math.abs(out("u900") - 1.0 / 3.0) < 1e-12)
   }
 
+  test("WebJaccard goldens on the selection score") {
+    // reference WebJaccardStringSimilarityTest.java:14-21: "republic" vs
+    // "republic party" = 0.5, equal strings = 1.0, no shared token = no
+    // candidate at all (the token join finds none)
+    val index = indexOf(("u1", 0, "republic party"), ("u2", 0, "republic"))
+    val out = Candidates.generate(cellsOf(0 -> "republic", 1 -> "monarchy"),
+      keyCols, index, numCandidates = 10, simThreshold = 0.0)
+      .select($"rowNum", $"uri", $"score").as[(Int, String, Double)].collect()
+    assert(out.map(r => (r._1, r._2) -> r._3).toMap ===
+      Map((0, "u1") -> 0.5, (0, "u2") -> 1.0))
+  }
+
   /** Selection at `simThreshold`, then refinement at the same threshold
     * against the class dim `classes` (tableName, classId) — the
     * pipeline's two lookups on one fixture. */

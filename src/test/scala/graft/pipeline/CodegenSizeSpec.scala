@@ -34,7 +34,11 @@ class CodegenSizeSpec extends SparkSpec {
     val kbValues = KbIngest.values(kb.cells, sf)
     val (_, tokens, variants) = T2KPipeline.index(kb, sf, LocalCheckpointer)
     val selection = Candidates.generate(cells, keyCols, tokens, 50, 0.2)
+    val dup = Schema.duplicateBased(result.instanceCorrs, cells, kbValues, pairs, 0.02)
+    val label = Schema.labelBased(pairs, webCols, kb.props)
     Map(
+      "SpanCodec.columns" -> webCols,
+      "Schema.blockPairs" -> pairs,
       "KbIngest.values" -> kbValues,
       "CandidateIndex.build" -> CandidateIndex.build(kbValues),
       "Candidates.keyTokens" -> Candidates.keyTokens(cells, keyCols),
@@ -42,9 +46,12 @@ class CodegenSizeSpec extends SparkSpec {
       "Classes.decide" -> Classes.decide(selection, kb.classes),
       "Candidates.refineFromSelection" -> Candidates.refineFromSelection(
         selection, result.classCorrs, cells, keyCols, tokens, variants, 100, 0.7),
-      "Schema.duplicateBased" -> Schema.duplicateBased(result.instanceCorrs,
-        cells, kbValues, pairs, 0.02),
-      "Schema.labelBased" -> Schema.labelBased(pairs, webCols, kb.props),
+      "Classes.refine" -> Classes.refine(result.schemaCorrs,
+        kb.propsByClass.select("classId", "propId").distinct(),
+        result.classCorrs.withColumnRenamed("score", "classScore")),
+      "Schema.duplicateBased" -> dup,
+      "Schema.labelBased" -> label,
+      "Schema.combine" -> Schema.combine(dup, label, Keys.keyCorrs(keyCols)),
       "Identity.resolve" -> Identity.resolve(result.instanceCorrs,
         result.schemaCorrs, keyCols, cells, kbValues, webCols),
       "Triples.generate" -> Triples.generate(result.instanceCorrs,
@@ -53,10 +60,11 @@ class CodegenSizeSpec extends SparkSpec {
         cells, kbValues, webCols, typed = true))
   }
 
-  for (name <- Seq("KbIngest.values", "CandidateIndex.build",
-      "Candidates.keyTokens", "Candidates.generate", "Classes.decide",
-      "Candidates.refineFromSelection", "Schema.duplicateBased",
-      "Schema.labelBased", "Identity.resolve", "Triples.generate",
+  for (name <- Seq("SpanCodec.columns", "KbIngest.values",
+      "CandidateIndex.build", "Candidates.keyTokens", "Candidates.generate",
+      "Classes.decide", "Candidates.refineFromSelection", "Schema.blockPairs",
+      "Classes.refine", "Schema.duplicateBased", "Schema.labelBased",
+      "Schema.combine", "Identity.resolve", "Triples.generate",
       "SFMatchers.valueSeeds"))
     test(s"$name: every generated method stays under the JIT limit") {
       val df = stages(name)

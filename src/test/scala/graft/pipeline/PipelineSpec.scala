@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.SparkSpec
-import graft.checkpoint.{Checkpointer, LocalCheckpointer}
+import graft.checkpoint.RecordingCheckpointer
 import graft.eval.Evaluator
 import graft.fixtures.MicroCorpus
 import graft.kb.{CandidateIndex, KbIngest}
@@ -24,15 +24,9 @@ class PipelineSpec extends SparkSpec {
   /** Runs the pipeline on `in` through a checkpointer that records every
     * stage name, in order. */
   private def recordedRun(in: DataFrame, cfg: T2KConfig): (Seq[String], T2KResult) = {
-    val stages = collection.mutable.ArrayBuffer.empty[String]
-    val recording = new Checkpointer {
-      def apply(name: String, df: => DataFrame): DataFrame = {
-        stages += name
-        LocalCheckpointer(name, df)
-      }
-    }
+    val recording = new RecordingCheckpointer
     val r = T2KPipeline.run(in, kb, sf, hierarchy, cfg, recording)
-    (stages.toSeq, r)
+    (recording.stages.toSeq, r)
   }
 
   test("key detection finds reference key columns (Col0 / Col1)") {
@@ -98,7 +92,8 @@ class PipelineSpec extends SparkSpec {
   test("every pipeline barrier is a named checkpoint stage, in run order") {
     val (stages, r) = recordedRun(docs, T2KConfig())
     r.release()
-    // not durable: the final instance_cands and triples barriers are elided
+    // single-consumer frames (the final instance_cands, the triples) are
+    // not stages
     assert(stages === Seq("cells", "web_cols", "kb_cells",
       "candidate_tokens", "candidate_variants", "kb_props_by_class",
       "candidates_selected", "classes_decided", "candidates_refined",
@@ -109,7 +104,7 @@ class PipelineSpec extends SparkSpec {
 
   test("numIterations = 2 runs the schema/identity loop twice") {
     val (stages, r) = recordedRun(docs, T2KConfig(numIterations = 2))
-    // only the last iteration's instance_cands barrier is elided
+    // the last iteration's instance_cands is not a stage
     assert(stages.filter(_.matches("(schema_corrs|instance_cands)_it\\d+")) ===
       Seq("schema_corrs_it0", "instance_cands_it0", "schema_corrs_it1"))
     Seq(r.instanceCorrs, r.schemaCorrs, r.classCorrs, r.triples)

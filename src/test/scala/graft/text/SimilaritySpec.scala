@@ -2,6 +2,8 @@ package graft.text
 
 import graft.SparkSpec
 import graft.util.Udfs
+import org.apache.spark.sql.Column
+import java.sql.Date
 
 class SimilaritySpec extends SparkSpec {
   // seeded generator: property-style checks without extra test deps
@@ -13,11 +15,17 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
-  // Goldens from reference WebJaccardStringSimilarityTest.java:14-21
-  test("token jaccard goldens") {
-    assert(Similarity.tokenJaccard("republic", "republic party") === 0.5)
-    assert(Similarity.tokenJaccard("republic", "republic") === 1.0)
-    assert(Similarity.tokenJaccard("monarchy", "republic") === 0.0)
+  /** `sim` over the columns `a`, `b` of a one-row frame holding `a`, `b`. */
+  private def numSim(sim: (Column, Column) => Column)(a: Double, b: Double): Double = {
+    import spark.implicits._
+    Seq((a, b)).toDF("a", "b").select(sim($"a", $"b")).head.getDouble(0)
+  }
+
+  /** [[Similarity.weightedDateSimCol]] on a one-row frame. */
+  private def dateSim(a: String, b: String, yearRange: Double): Double = {
+    import spark.implicits._
+    Seq((Date.valueOf(a), Date.valueOf(b), yearRange)).toDF("a", "b", "yr")
+      .select(Similarity.weightedDateSimCol($"a", $"b", $"yr")).head.getDouble(0)
   }
 
   test("normalise semantics") {
@@ -66,32 +74,32 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("numeric sims") {
-    assert(Similarity.deviationSim(100, 100) === 1.0)
-    assert(Similarity.deviationSim(50, 100) === 0.5)
-    assert(Similarity.deviationSim(-1, 1) === 0.0)
-    assert(Similarity.percentageSim(100, 100) === 1.0)
+    val deviation = numSim(Similarity.deviationSimCol) _
+    assert(deviation(100, 100) === 1.0)
+    assert(deviation(50, 100) === 0.5)
+    assert(deviation(-1, 1) === 0.0)
+    assert(deviation(0, 5) === 0.0)
+    assert(numSim(Similarity.percentageSimCol(_, _))(100, 100) === 1.0)
   }
 
   test("percentage sim within threshold") {
-    val s = Similarity.percentageSim(100, 102)
-    assert(math.abs(s - (1.0 - 2.0 / 102)) < 1e-9)
-    assert(Similarity.percentageSim(100, 110) === 0.0)
+    val percentage = numSim(Similarity.percentageSimCol(_, _)) _
+    assert(math.abs(percentage(100, 102) - (1.0 - 2.0 / 102)) < 1e-12)
+    assert(percentage(100, 110) === 0.0)
+    assert(percentage(0, 0) === 1.0)
   }
 
   test("weighted date sim") {
-    assert(Similarity.weightedDateSim(1989, 1, 1, 1989, 1, 1, 44) === 1.0)
-    val s = Similarity.weightedDateSim(1989, 1, 1, 1968, 1, 1, 44)
-    assert(s < 1.0 && s > 0.0)
-  }
-
-  test("property: jaccard symmetric and bounded") {
-    val ss = randomStrings(200)
-    for (a <- ss.take(40); b <- ss.slice(40, 80)) {
-      val s1 = Similarity.tokenJaccard(a, b)
-      val s2 = Similarity.tokenJaccard(b, a)
-      assert(s1 === s2)
-      assert(s1 >= 0.0 && s1 <= 1.0)
-    }
+    assert(dateSim("1989-01-01", "1989-01-01", 44) === 1.0)
+    // weights day 1, month 3, year 5; the year distance is normalised by
+    // the column's year range
+    assert(math.abs(dateSim("1989-01-01", "1968-01-01", 44) -
+      (1.0 - 5.0 * 21 / 44 / 9)) < 1e-12)
+    assert(math.abs(dateSim("1989-03-15", "1989-01-01", 44) -
+      (1.0 - (14.0 / 31 + 3.0 * 2 / 12) / 9)) < 1e-12)
+    // a range under one year counts as one: any year apart is distance 1
+    assert(math.abs(dateSim("1989-01-01", "1968-01-01", 0.5) -
+      (1.0 - 5.0 / 9)) < 1e-12)
   }
 
   test("property: normalise idempotent") {
