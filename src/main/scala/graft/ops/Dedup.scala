@@ -261,23 +261,11 @@ object Dedup {
     out
   }
 
-  /** The signature column for a non-empty `hs` array (shared by
-    * [[minhashSignatures]] and [[bandedRows]]). */
+  /** The signature column for a non-empty `hs` array (read by
+    * [[bandedRows]]). */
   private[ops] def sigCol(hsCol: Column, numHashes: Int): Column = {
     val f = udf((hs: Seq[Long]) => sigKernel(hs, numHashes))
     f(hsCol)
-  }
-
-  /** MinHash signature. Each token is string-hashed ONCE (xxhash64); the
-    * `numHashes` permutations derive from that 8-byte value
-    * (xxhash64(tokenHash, i)) — ~10× kernel reduction vs re-hashing the
-    * token string per permutation. Returns (docId, array<long>). */
-  def minhashSignatures(docs: DataFrame, idCol: String, textCol: String,
-                        numHashes: Int = 64, gramSize: Int = 0): DataFrame = {
-    val sets = if (gramSize > 0) shingleSets(docs, idCol, textCol, gramSize)
-      else tokenSets(docs, idCol, textCol)
-    val hashed = sets.withColumn("hs", transform(col("toks"), t => xxhash64(t)))
-    hashed.select(col("docId"), sigCol(col("hs"), numHashes).as("signature"))
   }
 
   /** Drop LSH buckets holding more than `cap` members before a bucket

@@ -36,7 +36,9 @@ class CodegenSizeSpec extends SparkSpec {
     val selection = Candidates.generate(cells, keyCols, tokens, 50, 0.2)
     val dup = Schema.duplicateBased(result.instanceCorrs, cells, kbValues, pairs, 0.02)
     val label = Schema.labelBased(pairs, webCols, kb.props)
+    val classes = result.classCorrs.select("tableName", "classId")
     Map(
+      "KbIngest.fromLongForm" -> kb.cells,
       "SpanCodec.columns" -> webCols,
       "Schema.blockPairs" -> pairs,
       "KbIngest.values" -> kbValues,
@@ -57,15 +59,20 @@ class CodegenSizeSpec extends SparkSpec {
       "Triples.generate" -> Triples.generate(result.instanceCorrs,
         result.schemaCorrs, cells, kbValues, kb.props, webCols),
       "SFMatchers.valueSeeds" -> SFMatchers.valueSeeds(result.instanceCorrs,
-        cells, kbValues, webCols, typed = true))
+        cells, kbValues, webCols, typed = true),
+      "SFMatchers.labelSeeds" -> SFMatchers.labelSeeds(webCols, kb.props,
+        kb.propsByClass, classes),
+      "SFMatchers.pipelineMatrixSeeds" -> SFMatchers.pipelineMatrixSeeds(
+        result.schemaCorrs, webCols, kb.propsByClass, classes))
   }
 
-  for (name <- Seq("SpanCodec.columns", "KbIngest.values",
+  for (name <- Seq("KbIngest.fromLongForm", "SpanCodec.columns", "KbIngest.values",
       "CandidateIndex.build", "Candidates.keyTokens", "Candidates.generate",
       "Classes.decide", "Candidates.refineFromSelection", "Schema.blockPairs",
       "Classes.refine", "Schema.duplicateBased", "Schema.labelBased",
       "Schema.combine", "Identity.resolve", "Triples.generate",
-      "SFMatchers.valueSeeds"))
+      "SFMatchers.valueSeeds", "SFMatchers.labelSeeds",
+      "SFMatchers.pipelineMatrixSeeds"))
     test(s"$name: every generated method stays under the JIT limit") {
       val df = stages(name)
       assert(df.collect().nonEmpty, s"$name produced no rows") // final AQE plan
